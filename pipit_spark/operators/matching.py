@@ -24,6 +24,18 @@ is processed independently (Arrow-batched), so the pass parallelizes over
 locations exactly like the reference's multiprocessing pool but across
 executors.
 
+Input contract (both kernels, :func:`_sorted_locations`): the kernels read
+``repartition(n, process[, thread]).sortWithinPartitions(process[,
+thread], timestamp_ns, seq)`` — every location is one contiguous,
+time-ordered run of one partition. The sort runs in the JVM (codegen,
+spillable); the location kernel checks the layout in O(n) and raises on a
+split or backwards location rather than re-sorting in pandas. Because the
+local sort sits above the hash exchange, Catalyst's ``EliminateSorts``
+removes any global ``orderBy`` below it from the matched plan: the binary
+readers' ``order="trace"`` parity sort (its range exchange, its sampling
+job and the second full parse that job costs) never executes on the way
+into matching, while ``trace.events`` itself keeps its global order.
+
 Two kernels share those semantics bit-for-bit:
 
 * ``kernel="location"`` (default) — the whole shuffle partition (several
@@ -245,11 +257,55 @@ def _match_loops(
             has_node[i] = has_node[ep]
 
 
+def _sorted_locations(
+    df: DataFrame, group_cols: list[str], num_partitions: int | None
+) -> DataFrame:
+    """The kernels' input contract (module docstring), built JVM-side:
+    hash-partition by location (skipped when ``num_partitions`` is
+    None — the input is already partitioned by location) and sort each
+    partition by (location, timestamp, seq), so every location is one
+    contiguous, time-ordered run."""
+    if num_partitions is not None:
+        df = df.repartition(num_partitions, *group_cols)
+    return df.sortWithinPartitions(*group_cols, S.TIMESTAMP, S.SEQ)
+
+
+def _location_starts(pdf: pd.DataFrame, group_cols: list[str]) -> np.ndarray:
+    """Row mask of location starts in a frame laid out per
+    :func:`_sorted_locations`, verified in O(n): raises ``ValueError``
+    if a location is split into non-contiguous runs or steps backwards
+    in (timestamp, seq). Null keys compare equal (factorized to one
+    sentinel), so a nullable thread column still groups its null rows."""
+    starts = _group_codes(pdf, group_cols)
+    starts[:1] = True
+    if np.count_nonzero(starts) != len(pdf[group_cols].drop_duplicates()):
+        raise ValueError(
+            "matching kernel input splits a location into non-contiguous "
+            f"runs over {group_cols}; the kernel consumes partitions "
+            "sorted by (location, timestamp, seq)"
+        )
+    ts = pdf[S.TIMESTAMP].to_numpy()
+    seq = pdf[S.SEQ].to_numpy()
+    back = ~starts[1:] & (
+        (ts[1:] < ts[:-1]) | ((ts[1:] == ts[:-1]) & (seq[1:] < seq[:-1]))
+    )
+    if back.any():
+        i = int(np.flatnonzero(back)[0]) + 1
+        raise ValueError(
+            "matching kernel input goes backwards in (timestamp, seq) "
+            f"within a location at row {i}: ({ts[i - 1]}, {seq[i - 1]}) "
+            f"then ({ts[i]}, {seq[i]}); the kernel consumes partitions "
+            "sorted by (location, timestamp, seq)"
+        )
+    return starts
+
+
 def _stack_match_multi(
     pdf: pd.DataFrame, group_cols: list[str], metric_cols: list[str]
 ) -> pd.DataFrame:
     """Fused matching pass over a partition holding MANY complete
-    locations: one sort, then a VECTORIZED bracket-matching pass over
+    locations, laid out by :func:`_sorted_locations` (the layout is
+    checked, not re-sorted): a VECTORIZED bracket-matching pass over
     the whole frame (r13, guide §4.2 "do the heavy lifting in native
     code"), with the reference's Python stack loops
     (:func:`_match_loops`) as the per-segment fallback for locations
@@ -284,23 +340,12 @@ def _stack_match_multi(
     per-event cost is a handful of numpy passes instead of two Python
     interpreter loops — the loops only touch malformed segments.
     """
-    pdf = pdf.sort_values(
-        [*group_cols, S.TIMESTAMP, S.SEQ], kind="mergesort"
-    ).reset_index(drop=True)
     n = len(pdf)
     evt = pdf[S.EVENT_TYPE].to_numpy()
     names = pdf[S.NAME].to_numpy()
     ts = pdf[S.TIMESTAMP].to_numpy()
     event_ids = pdf[S.EVENT_ID].to_numpy()
-
-    # group-boundary mask; factorize maps nulls to one sentinel code so a
-    # nullable thread column still groups its null rows together
-    new_group = np.zeros(n, dtype=bool)
-    if n:
-        new_group[0] = True
-        for c in group_cols:
-            codes, _ = pd.factorize(pdf[c], use_na_sentinel=True)
-            new_group[1:] |= codes[1:] != codes[:-1]
+    new_group = _location_starts(pdf, group_cols)
 
     is_enter = np.isin(evt, S.ENTER_TYPES)
     is_leave = np.isin(evt, S.LEAVE_TYPES)
@@ -585,10 +630,9 @@ def _audit_unmatched_enters(
     docstring). ``audit="sql"`` (the default) computes the identical
     set JVM-side; this kernel remains as the independent second
     implementation the tests pin it against."""
-    narrow = _narrow_enter_leave(events, group_cols)
-    if num_partitions is not None:
-        narrow = narrow.repartition(num_partitions, *group_cols)
-    srt = narrow.sortWithinPartitions(*group_cols, S.TIMESTAMP, S.SEQ)
+    srt = _sorted_locations(
+        _narrow_enter_leave(events, group_cols), group_cols, num_partitions
+    )
 
     def audit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cur_key: tuple | None = None
@@ -789,10 +833,7 @@ def _chunked_emit_plan(
     7 parent_node, 8 known_matched, 9 event_id, 10 enter_ts]`` living on
     both replay stacks; only KNOWN-MATCHED open Enters ever buffer their
     full row, so resident state is ∝ stack depth (module docstring)."""
-    srt = enc if num_partitions is None else enc.repartition(
-        num_partitions, *group_cols
-    )
-    srt = srt.sortWithinPartitions(*group_cols, S.TIMESTAMP, S.SEQ)
+    srt = _sorted_locations(enc, group_cols, num_partitions)
     in_cols = list(enc.columns)
     out_cols = [f.name for f in out_schema.fields]
     derived_cols = (
@@ -1057,6 +1098,36 @@ def _dedup_matched_schema(
     return T.StructType(fields)
 
 
+def _location_match(
+    enc: DataFrame,
+    map_cols: dict,
+    out_schema: T.StructType,
+    group_cols: list[str],
+    metric_cols: list[str],
+    num_partitions: int | None,
+) -> DataFrame:
+    """Location-kernel plan shared by :func:`match_events` /
+    :func:`match_events_iter`: :func:`_sorted_locations`, then ONE
+    ``mapInPandas`` running :func:`_stack_match_multi` over each whole
+    partition."""
+    emit_step = int(get_option("matching.max_records_per_batch"))
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        parts = list(batches)
+        if not parts:
+            return
+        pdf = pd.concat(parts, ignore_index=True)
+        if not pdf.empty:
+            yield from _emit_slices(
+                _stack_match_multi(pdf, group_cols, metric_cols), emit_step
+            )
+
+    out = _sorted_locations(enc, group_cols, num_partitions).mapInPandas(
+        gen, schema=out_schema
+    )
+    return _decode_map_cols(out, map_cols)
+
+
 def match_events(
     events: DataFrame,
     metric_cols: list[str] | None = None,
@@ -1078,10 +1149,14 @@ def match_events(
     location kernel; the chunked kernel SELF-SIZES to
     ``~_CHUNKED_ROWS_PER_TASK`` rows per task via one cheap count —
     the round-11 heap-floor rule — except under ``assume_wellformed``,
-    which stays fully lazy and keeps the bare default), then a single
-    ``mapInPandas`` pass per partition running the multi-location kernel —
-    every location is complete within its partition, and the per-location
-    pandas fixed costs are amortized across the whole partition. This
+    which stays fully lazy and keeps the bare default), a JVM
+    ``sortWithinPartitions(process[, thread], timestamp_ns, seq)``
+    (the kernels' input contract; it also lets Catalyst eliminate an
+    upstream global sort such as the readers' ``order="trace"``, see
+    the module docstring), then a single ``mapInPandas`` pass per
+    partition running the multi-location kernel — every location is
+    one contiguous run of its partition, and the per-location pandas
+    fixed costs are amortized across the whole partition. This
     replaces the earlier ``groupBy().applyInPandas`` plan, which paid one
     Arrow round-trip + pandas sort/copy per location (2.5× slower with
     1,500 locations at sf0.1; the gap widens with location count, which is
@@ -1195,22 +1270,9 @@ def match_events(
             n_part, assume_wellformed, audit, cache=cache,
         )
 
-    emit_step = int(get_option("matching.max_records_per_batch"))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        parts = list(batches)
-        if not parts:
-            return
-        pdf = pd.concat(parts, ignore_index=True)
-        if not pdf.empty:
-            yield from _emit_slices(
-                _stack_match_multi(pdf, group_cols, metric_cols), emit_step
-            )
-
-    out = enc.repartition(n_part, *group_cols).mapInPandas(
-        gen, schema=out_schema
+    return _location_match(
+        enc, map_cols, out_schema, group_cols, metric_cols, n_part
     )
-    return _decode_map_cols(out, map_cols)
 
 
 def match_events_iter(
@@ -1224,7 +1286,9 @@ def match_events_iter(
     """Variant for traces already partitioned by location on disk —
     avoids the shuffle entirely (zero-exchange plan when the parquet
     layout matches). Same kernels and ``audit`` modes as
-    :func:`match_events`, minus the repartition. NOTE: like there, the
+    :func:`match_events`, minus the repartition: each input partition
+    must hold COMPLETE locations (any row order — the in-partition
+    sort of the input contract still runs). NOTE: like there, the
     chunked kernel's audit runs EAGERLY at call time (a bounded-collect
     Spark job); the ``audit="kernel"`` variant reuses the existing
     partitioning, ``audit="sql"`` shuffles its narrow projection by
@@ -1250,19 +1314,9 @@ def match_events_iter(
             None, assume_wellformed, audit, cache=cache,
         )
 
-    emit_step = int(get_option("matching.max_records_per_batch"))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        parts = list(batches)
-        if not parts:
-            return
-        pdf = pd.concat(parts, ignore_index=True)
-        if not pdf.empty:
-            yield from _emit_slices(
-                _stack_match_multi(pdf, group_cols, metric_cols), emit_step
-            )
-
-    return _decode_map_cols(enc.mapInPandas(gen, schema=out_schema), map_cols)
+    return _location_match(
+        enc, map_cols, out_schema, group_cols, metric_cols, None
+    )
 
 
 def well_nested_matching_sql(events_rel: str = "events") -> str:

@@ -180,10 +180,12 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # NTZ cast / date literal / epoch extraction in the gates assumes a
     # UTC session. Our get_spark() sets this, but the driver may hand
     # us its own session on a machine with any default TZ — pin it here
-    # (runtime conf, same pattern as the nanosAsLong toggle). Pinned on
-    # EVERY call — including memo hits — because the pin governs later
-    # query execution, not the memoized plan.
+    # (runtime conf, same pattern as the nanosAsLong toggle). Both are
+    # pinned on EVERY call — including memo hits — because the pins
+    # govern later query execution, not the memoized plan.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    if name == "events":
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     key = (spark.sparkContext.applicationId, sf_dir, name)
     cached = _load_memo.get(key)
     if cached is not None:

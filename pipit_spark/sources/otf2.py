@@ -10,41 +10,55 @@ normalization (subtract ``global_offset``, scale by ``timer_resolution``,
 otf2_reader.py:459-471) is plain column arithmetic.
 
 The ``otf2`` package is an optional dependency (not bundled here); when
-missing, a clear ImportError explains the offline-convert path
-(run this module as a script where otf2 IS installed, write canonical
-Parquet, then ``Trace.from_parquet``).
+it is missing and the native parser fails, the native error propagates
+with a note on the offline-convert path (run this module as a script
+where otf2 IS installed, write canonical Parquet, then
+``Trace.from_parquet``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .. import schema as S  # noqa: F401
+from .. import schema as S
 
 
 def read_otf2(
-    spark: SparkSession, dirname: str, num_partitions: int | None = None
+    spark: SparkSession,
+    dirname: str,
+    order: str = "trace",
+    num_partitions: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Primary path: the self-contained native binary parser
     (otf2_native.py, golden-tested against the reference's ping-pong
-    trace). The ``otf2``-library path remains as a fallback for archive
-    features the native grammar doesn't cover yet (e.g. substream
-    mapping tables, metric records)."""
+    trace); ``order`` is its frame order ("trace" or "process", see
+    :func:`read_otf2_native`). The ``otf2``-library path remains as a
+    fallback for archive features the native grammar doesn't cover yet
+    (e.g. substream mapping tables), sized by ``num_partitions``. When
+    the ``otf2`` package is not importable, the native reader's own
+    error (a missing archive's ``FileNotFoundError``, a bad ``order``'s
+    ``ValueError``) propagates unchanged."""
     from .otf2_native import read_otf2_native
 
+    if order not in ("trace", "process"):
+        raise ValueError(f"order must be 'trace' or 'process', got {order!r}")
     try:
-        return read_otf2_native(spark, dirname)
-    except Exception:
+        return read_otf2_native(spark, dirname, order=order)
+    except Exception as native_error:
         try:
             import otf2  # noqa: F401
-        except ImportError as e:
-            raise ImportError(
-                "native OTF2 parse failed and the 'otf2' python package "
-                "fallback is unavailable (the reference hard-requires it, "
-                "pipit/readers/otf2_reader.py:6). Alternative: convert "
-                "offline to canonical Parquet and use Trace.from_parquet()."
-            ) from e
-        return _read_with_otf2(spark, dirname, num_partitions)
+        except ImportError:
+            native_error.add_note(
+                "the 'otf2' python package fallback is unavailable (the "
+                "reference hard-requires it, pipit/readers/otf2_reader.py:6); "
+                "alternatively convert offline to canonical Parquet and "
+                "use Trace.from_parquet()"
+            )
+            raise native_error from None
+        events, definitions = _read_with_otf2(spark, dirname, num_partitions)
+        if order == "trace":
+            events = events.orderBy(S.TIMESTAMP, S.SEQ)
+        return events, definitions
 
 
 def _read_with_otf2(spark, dirname, num_partitions):  # pragma: no cover

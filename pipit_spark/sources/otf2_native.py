@@ -20,13 +20,15 @@ Binary grammar (empirically verified on Score-P 7.1 output):
 
 Spark shape mirrors the reference's multiprocessing fan-out
 (otf2_reader.py:436-452): the tiny definitions parse on the driver and
-broadcast; each location's ``.evt`` file is one executor task (the
-archive must be on shared storage, same requirement as the reference).
+broadcast; whole location ``.evt`` files, packed by bytes into
+core-sized groups, are the executor tasks (the archive must be on
+shared storage, same requirement as the reference).
 """
 
 from __future__ import annotations
 
 import glob
+import heapq
 import os
 
 import pandas as pd
@@ -391,6 +393,29 @@ def _location_map(defs: dict, dirname: str | None = None) -> list:
     return out
 
 
+def _parse_task_count(spark: SparkSession, total_bytes: int) -> int:
+    """Parse tasks for a batch read: enough to fill the cluster, more
+    only when the archive outgrows ``spark.sql.files.maxPartitionBytes``
+    per task (the file scans' own split rule)."""
+    max_bytes = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    return max(spark.sparkContext.defaultParallelism, -(-total_bytes // max_bytes))
+
+
+def _pack_locations(locs: list, sizes: list[int], n_groups: int) -> list[list]:
+    """Greedy byte balance of whole location files into at most
+    ``n_groups`` non-empty groups: largest file first, each into the
+    currently lightest group; a group keeps its members in ``locs``
+    order. A location is never split, so every parse task emits
+    complete locations (``match_events_iter``'s input contract)."""
+    heap = [(0, g) for g in range(min(n_groups, len(locs)))]
+    members: list[list[int]] = [[] for _ in heap]
+    for i in sorted(range(len(locs)), key=lambda i: -sizes[i]):
+        load, g = heapq.heappop(heap)
+        members[g].append(i)
+        heapq.heappush(heap, (load + sizes[i], g))
+    return [[locs[i] for i in sorted(m)] for m in members]
+
+
 def _event_schema_with_metrics(metric_names: list):
     from pyspark.sql import types as T
 
@@ -405,15 +430,22 @@ def read_otf2_native(
 ) -> tuple[DataFrame, DataFrame]:
     """Distributed OTF2 archive read → (events DF, definitions DF).
 
+    Each parse task reads whole locations, packed by bytes: the
+    ``.evt`` files are balanced into at most ``max(defaultParallelism,
+    ceil(archive bytes / spark.sql.files.maxPartitionBytes))`` groups
+    (:func:`_pack_locations`), so a location is never split across
+    partitions and small archives do not pay one Python task per file.
+
     order="trace" (default) reproduces the reference's global
-    (timestamp, seq) frame order — one range shuffle. order="process"
-    skips it: each output partition is one location's events in
-    timestamp order (the parse emits them that way), which is the
-    only ordering the engine's own operators consume (matching /
-    metrics sort inside their own (process, thread) windows). At
-    cluster scale "process" removes the single shuffle on the ingest
-    path; choose it whenever downstream is this engine rather than a
-    frame-order-sensitive external consumer.
+    (timestamp, seq) frame order — one range shuffle. The matching
+    pass does not pay it: its local sort above its own hash exchange
+    lets Catalyst's ``EliminateSorts`` drop this global sort from the
+    matched plan (operators/matching.py). order="process" skips the
+    sort everywhere: each output partition holds whole locations, each
+    in timestamp order (the parse emits them that way), which is the
+    only ordering the engine's own operators consume. Choose it
+    whenever downstream is this engine rather than a frame-order-
+    sensitive external consumer.
     """
     # validate BEFORE any file I/O (parse_global_defs reads the
     # archive eagerly on the driver) — a typo'd order value should
@@ -447,11 +479,18 @@ def read_otf2_native(
         T.StructField("process", T.IntegerType(), False),
         T.StructField("thread", T.IntegerType(), False),
     ])
-    # one input partition per location file: the fan-out axis is the
-    # archive's own (reference otf2_reader.py:436-452 fans an mp.Pool
-    # over the same files), spread across executors
+    # one input partition per GROUP of whole location files: the
+    # fan-out axis is the archive's own (reference otf2_reader.py:
+    # 436-452 fans an mp.Pool over the same files), packed into
+    # core-sized tasks because each Python parse task pays a fixed
+    # start-up cost that dwarfs a small .evt file's parse
+    sizes = [os.path.getsize(path) for path, _p, _t in loc_map]
+    groups = _pack_locations(
+        loc_map, sizes, _parse_task_count(spark, sum(sizes))
+    )
     loc_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(loc_map, max(1, len(loc_map))),
+        spark.sparkContext.parallelize(groups, max(1, len(groups)))
+        .flatMap(lambda g: g),
         loc_schema,
     )
 

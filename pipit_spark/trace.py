@@ -150,8 +150,9 @@ class Trace:
 
     @classmethod
     def from_otf2(cls, spark: SparkSession, dirname: str, **kw) -> "Trace":
-        """Reference: pipit/readers/otf2_reader.py. Requires the ``otf2``
-        package on executors; see sources/otf2.py."""
+        """Reference: pipit/readers/otf2_reader.py, via the native
+        parser (sources/otf2.py). ``**kw`` reaches :func:`read_otf2` —
+        ``order="process"`` skips the parity sort."""
         from .sources.otf2 import read_otf2
 
         events, definitions = read_otf2(spark, dirname, **kw)

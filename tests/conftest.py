@@ -83,3 +83,23 @@ def ping_pong_trace(spark):
     from pipit_spark.schema import EVENT_SCHEMA
 
     return Trace(spark.createDataFrame(pdf, schema=EVENT_SCHEMA))
+
+
+@pytest.fixture(scope="session")
+def write_otf2_archive(tmp_path_factory):
+    """Factory: ``write(frames_per_loc) -> dirname`` synthesizes an OTF2
+    archive (tools/synth_otf2.py grammar) with one location per entry;
+    each frame is a send then an Enter/Leave pair, so 0 frames writes a
+    location with no events and unequal entries make unequal files."""
+    from tools.synth_otf2 import write_defs, write_loc_evt
+
+    def write(frames_per_loc: list[int]) -> str:
+        out = str(tmp_path_factory.mktemp("otf2"))
+        os.makedirs(os.path.join(out, "traces"))
+        n = len(frames_per_loc)
+        write_defs(out, n)
+        for loc, frames in enumerate(frames_per_loc):
+            write_loc_evt((out, loc, frames, n))
+        return out
+
+    return write

@@ -13,6 +13,7 @@ that example-based tests might miss.
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from pipit_spark import schema as S
@@ -96,6 +97,54 @@ def test_kernel_matches_reference_semantics(pdf):
                     ):
                         depth += 1
                 assert g[S.DEPTH].iloc[i] == depth, (p, i)
+
+
+def _two_locations(threads=(0, 0)):
+    """Process 0 then process 1, one Enter/Leave pair each, laid out
+    as the kernel's input contract requires."""
+    return pd.DataFrame({
+        S.EVENT_ID: [1, 2, 3, 4],
+        S.TIMESTAMP: [10, 20, 10, 20],
+        S.SEQ: [0, 1, 0, 1],
+        S.EVENT_TYPE: ["Enter", "Leave", "Enter", "Leave"],
+        S.NAME: ["a", "a", "b", "b"],
+        S.PROCESS: [0, 0, 1, 1],
+        S.THREAD: pd.array(list(threads) * 2, dtype="Int32"),
+    })
+
+
+def test_kernel_rejects_split_location():
+    """A location in two non-contiguous runs of one partition is a
+    broken input contract: the kernel raises instead of matching each
+    run as if it were a whole location."""
+    pdf = _two_locations().iloc[[0, 2, 1, 3]]  # 0, 1, 0, 1
+    with pytest.raises(ValueError, match="non-contiguous"):
+        _stack_match_multi(pdf, [S.PROCESS], [])
+
+
+@pytest.mark.parametrize(
+    "ts, seq", [([20, 10], [0, 1]), ([10, 10], [1, 0])],
+    ids=["timestamp", "seq-tiebreak"],
+)
+def test_kernel_rejects_backwards_location(ts, seq):
+    """A descending (timestamp_ns, seq) pair inside one location raises
+    (the kernel no longer re-sorts its input)."""
+    pdf = _two_locations()
+    pdf.loc[:1, S.TIMESTAMP] = ts
+    pdf.loc[:1, S.SEQ] = seq
+    with pytest.raises(ValueError, match="backwards"):
+        _stack_match_multi(pdf, [S.PROCESS], [])
+
+
+def test_kernel_groups_null_threads():
+    """Null threads factorize to one key: a (process, null) location is
+    one contiguous run, distinct from the next process's null thread,
+    and each matches within itself."""
+    out = _stack_match_multi(
+        _two_locations(threads=(None, None)), [S.PROCESS, S.THREAD], []
+    )
+    assert out[S.MATCHING_EVENT].tolist() == [2, 1, 4, 3]
+    assert out[S.DEPTH].tolist() == [0, 0, 0, 0]
 
 
 def test_pack_assignments_invariants(spark):

@@ -52,6 +52,37 @@ def test_match_events_iter_zero_shuffle(foo_bar_trace, spark, tmp_path):
     pd.testing.assert_frame_equal(a, b)
 
 
+def test_match_events_iter_shuffled_files(spark, tmp_path, write_otf2_archive):
+    """match_events_iter on a process-partitioned parquet whose rows are
+    shuffled within each file equals match_events: the location kernel
+    gets its (location, timestamp, seq) order from the JVM sort, not
+    from the file layout."""
+    from pyspark.sql import functions as F
+
+    from pipit_spark import schema as S
+    from pipit_spark.operators.matching import match_events, match_events_iter
+    from pipit_spark.sources.otf2_native import read_otf2_native
+
+    events = read_otf2_native(
+        spark, write_otf2_archive([40, 0, 25, 60]), order="process"
+    )[0]
+    path = str(tmp_path / "shuffled_pq")
+    events.repartition(2, S.PROCESS).sortWithinPartitions(
+        F.rand(3)
+    ).write.partitionBy(S.PROCESS).parquet(path)
+    ev = spark.read.parquet(path)
+
+    def matched(df):
+        return (
+            df.drop(S.ATTRIBUTES).toPandas()
+            .sort_values(S.EVENT_ID).reset_index(drop=True)
+        )
+
+    a, b = matched(match_events(ev)), matched(match_events_iter(ev))
+    assert a[S.MATCHING_EVENT].notna().any()
+    pd.testing.assert_frame_equal(a, b[a.columns])
+
+
 def test_asof_join_matches_pandas(spark):
     """asof_join (union+window form) agrees with pandas merge_asof on a
     small case with ties and missing matches."""

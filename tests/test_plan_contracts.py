@@ -64,6 +64,35 @@ def test_matching_pass_single_shuffle(spark):
     assert d_ex == 1, m_tree
 
 
+def test_matching_drops_reader_parity_sort(spark, tmp_path, write_otf2_archive):
+    """The matched plan over a binary reader's order="trace" frame keeps
+    no trace of the reader's global sort: the matching pass's local sort
+    above its hash exchange lets Catalyst eliminate it, so the plan has
+    no range exchange (whose sampling job would parse the archive a
+    second time), exactly one hash exchange and exactly one parse."""
+    from pipit_spark.operators.matching import match_events
+    from pipit_spark.sources.hpctoolkit import read_hpctoolkit
+    from pipit_spark.sources.otf2_native import read_otf2_native
+    from tools.synth_hpctoolkit import synthesize
+
+    db = str(tmp_path / "db")
+    synthesize(db, 4, 200)
+    readers = {
+        "otf2": read_otf2_native(
+            spark, write_otf2_archive([30, 10, 0, 20]), order="trace"
+        )[0],
+        "hpctoolkit": read_hpctoolkit(spark, db, order="trace"),
+    }
+    for src, events in readers.items():
+        plan = plan_of(match_events(events))
+        tree = plan.split("\n\n")[0]
+        assert "rangepartitioning" not in plan.lower(), (src, plan)
+        assert tree.count("Exchange") == 1, (src, plan)
+        assert "hashpartitioning" in plan, (src, plan)
+        assert tree.count("MapInPandas") == 2, (src, plan)  # parse + kernel
+        assert plan.count("Arguments: parse(") == 1, (src, plan)
+
+
 def test_comm_matrix_no_join(trace):
     """comm_matrix is pure partial+final hash aggregation."""
     tree = tree_of(trace.comm_matrix())

@@ -166,3 +166,16 @@ def test_gates_survive_non_utc_session(spark):
     )
     Q.clear_state(spark)
     assert got == want and q3 == q3_want
+
+
+def test_load_repins_nanos_conf_on_memo_hit(spark):
+    """load("events") pins the nanosAsLong conf beside the session time
+    zone on every call: a memo hit after the conf was flipped re-pins
+    it, because the pin governs later query execution."""
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    Q.clear_state(spark)
+    a = Q.load(spark, SF, "events")
+    spark.conf.set(key, "false")
+    b = Q.load(spark, SF, "events")
+    assert b is a
+    assert spark.conf.get(key) == "true"

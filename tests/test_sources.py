@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import os
 
+import pandas as pd
 import pytest
 
 REF_DATA = "/root/reference/pipit/tests/data"
@@ -428,3 +429,89 @@ def test_otf2_packed_id_overflow_guard(tmp_path):
         read_location_events(str(evt), 0, 256, **common)
     # in-range empty location parses to no rows
     assert read_location_events(str(evt), (1 << 23) - 1, 255, **common) == []
+
+
+# ---------------------------------------------- OTF2 parse-task packing
+def _packed_read(spark, archive):
+    """(rows, partition of each location, partition count, rule bound)
+    of a read_otf2_native(order="process") frame."""
+    from pyspark.sql import functions as F
+
+    from pipit_spark.sources.otf2_native import read_otf2_native
+
+    events = read_otf2_native(spark, archive, order="process")[0]
+    pdf = (
+        events.withColumn("attributes", F.to_json("attributes"))
+        .withColumn("pid", F.spark_partition_id())
+        .toPandas()
+    )
+    parts = pdf.groupby(["process", "thread"]).pid.nunique()
+    total = sum(
+        os.path.getsize(os.path.join(archive, "traces", f))
+        for f in os.listdir(os.path.join(archive, "traces"))
+    )
+    max_bytes = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    bound = max(spark.sparkContext.defaultParallelism, -(-total // max_bytes))
+    rows = pdf.drop(columns="pid").sort_values("event_id")
+    return rows.reset_index(drop=True), parts, events.rdd.getNumPartitions(), bound
+
+
+@pytest.mark.parametrize(
+    "frames",
+    [[0, 50, 400, 5, 1000, 20, 0, 120], [300]],
+    ids=["uneven-with-empty-location", "single-location"],
+)
+def test_otf2_parse_packs_whole_locations(spark, write_otf2_archive, frames):
+    """Location files pack into byte-balanced parse tasks: the rows equal
+    a one-task-per-file read as a multiset, every (process, thread) lands
+    in exactly one partition, and the task count keeps the rule
+    max(defaultParallelism, ceil(bytes / maxPartitionBytes)), capped at
+    the file count."""
+    archive = write_otf2_archive(frames)
+    rows, parts, n_parts, bound = _packed_read(spark, archive)
+    assert (parts == 1).all()
+    assert n_parts == min(len(frames), bound)
+    assert len(rows) == 3 * sum(frames)
+
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1")  # one task per file
+    try:
+        per_file, _parts, n_files, _ = _packed_read(spark, archive)
+    finally:
+        spark.conf.set(key, old)
+    assert n_files == len(frames)
+    pd.testing.assert_frame_equal(rows, per_file)
+
+
+def test_pack_locations_balances_bytes():
+    """Largest file first into the lightest group: one 4x file and
+    fifteen unit files split into four groups whose loads differ by at
+    most one unit file, each location in exactly one group."""
+    from pipit_spark.sources.otf2_native import _pack_locations
+
+    locs = [(f"{i}.evt", i, 0) for i in range(16)]
+    sizes = [100] * 15 + [400]
+    groups = _pack_locations(locs, sizes, 4)
+    assert sorted(loc for g in groups for loc in g) == sorted(locs)
+    loads = [sum(sizes[p] for _path, p, _t in g) for g in groups]
+    assert max(loads) - min(loads) <= 100, loads
+    assert all(g == sorted(g, key=locs.index) for g in groups)
+    assert _pack_locations(locs[:2], sizes[:2], 4) == [[locs[0]], [locs[1]]]
+    assert _pack_locations([], [], 4) == []
+
+
+def test_from_otf2_surfaces_native_errors(spark, write_otf2_archive):
+    """Trace.from_otf2 reaches the native reader's own errors and its
+    order option: a missing archive is a FileNotFoundError (not an
+    ImportError about the optional otf2 package), a bad order value a
+    ValueError, and order="process" drops the parity sort."""
+    from pipit_spark import Trace
+
+    archive = write_otf2_archive([5, 5])
+    with pytest.raises(FileNotFoundError):
+        Trace.from_otf2(spark, archive + "-missing")
+    with pytest.raises(ValueError, match="order"):
+        Trace.from_otf2(spark, archive, order="frame")
+    plan = Trace.from_otf2(spark, archive, order="process").events
+    assert "Sort" not in plan._jdf.queryExecution().executedPlan().toString()
