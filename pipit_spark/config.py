@@ -2,8 +2,9 @@
 config.py semantics: validated get/set/reset of named options).
 
 Spark-relevant options are added alongside the reference's UI-oriented
-ones — matching-pass batch sizing, default shuffle parallelism hints —
-so deployments tune the engine the same way users tune the reference.
+ones — matching-pass batch sizing and kernel choice, dedup bloom
+sizing — so deployments tune the engine the same way users tune the
+reference.
 """
 
 from __future__ import annotations
@@ -66,12 +67,9 @@ _REGISTRY: dict[str, tuple[Any, Callable[[str, Any], None]]] = {
     # env SPARK_GRAFT_ARROW_BATCH overrides). Emit-lane per-task heap
     # scales with it (SCALING.md round-11 stock-heap probe).
     "matching.max_records_per_batch": (65536, _pos_int),
-    # default matching kernel/audit when neither the call site nor the
-    # SPARK_GRAFT_MATCH_KERNEL env var picks one (operators/matching.py
-    # resolution order: explicit arg > env var > these)
+    # default matching kernel when the call site does not pick one
+    # (operators/matching.py resolution order: explicit arg > this)
     "matching.kernel": ("location", _choice("location", "chunked")),
-    "matching.audit": ("sql", _choice("sql", "kernel", "opportunistic")),
-    "shuffle.partitions_hint": (32, _pos_int),
     # default for Trace(cache=None): persist the matched frame
     "cache.matched_frame": (True, _bool),
     # incremental-ingestion bloom pre-filter sizing (fp ≈ (1-e^-kn/m)^k);

@@ -604,7 +604,8 @@ def minhash_lsh_pairs(
     first puts every copy of a dominant template in the SAME bucket of
     every band — B identical docs emit B²/2 join rows per band, the
     quadratic blow-up AQE's skew splitting can only re-balance, not
-    shrink (measured: tools/skew_rung.py, SCALING.md). With it set,
+    shrink (measured: SCALING.md, "Round-7 rung: adversarial skew in
+    the MinHash-LSH band join"). With it set,
     bucket sizes are counted FIRST (hash aggregate, map-side combine)
     and oversized buckets dropped before the self-join; recall loss
     touches only groups exact dedup should have collapsed anyway.

@@ -2558,8 +2558,7 @@ def _annmeta(spark, table: str) -> dict:
     SINGLE-WRITER-PER-SESSION contract: the cache is invalidated by
     THIS process's builders/appenders only. If another process rebuilds
     the same table on a shared warehouse, call :func:`refresh_annmeta`
-    (or the fingerprint check in :func:`rrf_ann_indexed` will surface
-    the drift as an error rather than silent wrong matches)."""
+    before searching."""
     key = (spark.sparkContext.applicationId, table)
     if key not in _ANNMETA_CACHE:
         _ANNMETA_CACHE[key] = (
@@ -2581,9 +2580,9 @@ def refresh_annmeta(spark, table: str) -> dict:
 def _write_annmeta(spark, table: str, fields: dict) -> None:
     """Persist the index build parameters + corpus fingerprint as the
     one-row ``{table}__annmeta`` companion table. ``n_vecs``/``max_cid``
-    fingerprint the corpus so multi-index consumers (rrf_ann_indexed)
-    can refuse drifted index pairs instead of silently dropping
-    candidates; ``vec_col`` makes appends self-describing."""
+    fingerprint the indexed corpus, so a reader can tell whether two
+    indexes cover the same vectors; ``vec_col`` makes appends
+    self-describing."""
     def _sql_type(k: str, v) -> str:
         # type follows the VALUE, not the field name: a new caller
         # adding a large int field (or renaming n_vecs) must not
@@ -2849,8 +2848,8 @@ def append_ivf_topk_index(emb: DataFrame, table: str) -> None:
 
 def _refresh_fingerprint(spark, table: str, meta: dict, vec_table: str):
     """After an append, rewrite ``__annmeta`` with the grown corpus
-    fingerprint so rrf_ann_indexed's drift check tracks reality (and
-    so another session reading the meta row sees the new count)."""
+    fingerprint, so another session reading the meta row sees the
+    new count."""
     stats = spark.table(vec_table).agg(
         F.count(F.lit(1)).alias("n"), F.max("cid").alias("m")
     ).first()
@@ -2913,349 +2912,6 @@ def ivf_topk_portable_indexed(
         pairs, corp.select("cid", "cq", "na2"), qbase, k,
         qrows=qrows if len(qrows) <= 10_000 else None,
     )
-
-
-def _rrf_fused_tail(
-    cand: DataFrame, k: int, k0: int, scale: int
-) -> DataFrame:
-    """Shared rank-and-fuse tail of the fused-plan searchers
-    (:func:`rrf_ann_indexed`, :func:`rrf_fuse_portable_inline`):
-    per-(tier, query) rank window over the scored candidates, integer
-    RRF contributions, per-query fusion aggregate + final window.
-
-    ONE repartition by ``qid`` up front: HashPartitioning(qid) is a
-    subset of every downstream clustering key — the (tier, qid) rank
-    window, the (qid, cid) fusion aggregate, the (qid) final window —
-    so Spark's EnsureRequirements accepts the single exchange for all
-    three operators (three exchanges otherwise: measured plan diff,
-    r12). Scale shape unchanged: the tail is candidate-set-sized
-    (bounded query batch × bucket slivers), and per-qid partitioning
-    splits at least as fine as the final per-query window demands.
-
-    Expects ``cand`` with columns (tier, qid, cid, __dot, na2)."""
-    from pyspark.sql import Window
-
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    cand = (
-        cand.repartition("qid")
-        .withColumn(
-            "__num",
-            dec(F.col("__dot")) * dec(F.col("__dot"))
-            * F.lit(10**6).cast("decimal(38,0)"),
-        )
-        .withColumn("__na2", dec(F.col("na2")))
-        .withColumn(
-            "__key",
-            F.when(
-                F.col("__dot") >= 0, F.expr("__num div __na2")
-            ).otherwise(-F.expr("__num div __na2")),
-        )
-    )
-    wt = Window.partitionBy("tier", "qid").orderBy(
-        F.col("__key").desc(), F.col("cid").asc()
-    )
-    ranked = (
-        cand.withColumn("rank", F.row_number().over(wt))
-        .filter(F.col("rank") <= k)
-        .select("qid", "cid", F.col("rank").cast("long").alias("rank"))
-    )
-    contrib = ranked.withColumn(
-        "__c", F.expr(f"{int(scale)} div ({int(k0)} + rank)")
-    )
-    fused = contrib.groupBy(
-        F.col("qid").alias("query_id"), F.col("cid").alias("item_id")
-    ).agg(
-        F.sum("__c").alias("rrf_score"),
-        F.count(F.lit(1)).cast("int").alias("n_lists"),
-        F.min("rank").cast("int").alias("best_rank"),
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("rrf_score").desc(), F.col("item_id").asc()
-    )
-    return (
-        fused.withColumn("rank", F.row_number().over(wq).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "rank", "item_id", "rrf_score",
-            "n_lists", "best_rank",
-        )
-    )
-
-
-def rrf_fuse_portable_inline(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    num_tables: int = 4,
-    num_planes: int = 4,
-    quant: int = 1000,
-    nlist: int = 8,
-    nprobe: int = 3,
-    k0: int = 60,
-    scale: int = 10**9,
-    vec_col: str = "embedding",
-    dim: int | None = None,
-) -> DataFrame:
-    """The fused single-plan form of ``rrf_fuse([lsh_topk_portable(...),
-    ivf_topk_portable(...)])`` — bit-identical results (same surrogate
-    keys, same tie-breaks, same integer RRF arithmetic; pytest-pinned),
-    built the way :func:`rrf_ann_indexed` fuses the PERSISTED indexes,
-    but inline over a corpus frame:
-
-    * ONE corpus pass computes quantized vectors, LSH signatures, IVF
-      cell, and |c|² together (one Arrow matmul for the plane dots, the
-      narrow JVM cell assignment, one dot kernel for na2) where the
-      two-tier composition ran two independent corpus pipelines — the
-      r12 plan diff is 38 Exchange / 40 ArrowEvalPython nodes down to
-      the indexed searcher's shape;
-    * the bounded query batch is signed + probed in ONE subtree and
-      collected ONCE (the two-tier composition collects it once per
-      tier inside ``_rank_portable_candidates``);
-    * both tiers' candidates feed a SINGLE shared scoring pass (one
-      per-pair exact-int dot kernel) and the shared
-      :func:`_rrf_fused_tail`.
-
-    Above 10k queries it falls back to the two-searcher composition
-    (same results, corpus-side work unchanged — the collect-and-
-    broadcast query side is the production retrieval shape for bounded
-    batches only)."""
-    spark = emb.sparkSession
-    # route on a CHEAP bounded count of the raw queries frame (r13,
-    # ADVICE: the old shape built and collected the full query-side
-    # signature+probe subtree and then threw it away on the >10k
-    # fallback; a limited count reads no vector columns and stops at
-    # 10,001 rows)
-    n_q = queries.limit(10_001).count()
-    if n_q > 10_000:
-        return rrf_fuse(
-            [
-                lsh_topk_portable(
-                    emb, queries, k=k, num_tables=num_tables,
-                    num_planes=num_planes, quant=quant, vec_col=vec_col,
-                    dim=dim,
-                ),
-                ivf_topk_portable(
-                    emb, queries, k=k, nlist=nlist, nprobe=nprobe,
-                    quant=quant, vec_col=vec_col, dim=dim,
-                ),
-            ],
-            k0=k0, k=k, scale=scale,
-        )
-    if not n_q:
-        return spark.createDataFrame(
-            [],
-            "query_id long, rank int, item_id long, rrf_score long, "
-            "n_lists int, best_rank int",
-        )
-    if dim is None:
-        dim = len(emb.select(vec_col).first()[0])
-    cents = _portable_centroids(nlist, dim, quant)
-    na2s = [sum(c * c for c in cj) for cj in cents]
-
-    qrows = _ivf_probe_frame(
-        _lsh_sig_frame(
-            queries, "qid", "qq", num_tables, num_planes, quant,
-            vec_col, dim,
-        ),
-        cents,
-        na2s,
-        nprobe,
-    ).select("qid", "qq", "sigs", "cells").collect()
-
-    # one corpus frame: (cid, cq, sigs, cell, na2) — signatures via the
-    # shared _lsh_sig_frame, cell via the same narrow JVM assignment as
-    # _ivf_portable_corpus, na2 once (the composition computed it twice)
-    corp = _lsh_sig_frame(
-        emb, "cid", "cq", num_tables, num_planes, quant, vec_col, dim
-    )
-    if nlist > 64:
-        corp = corp.withColumn(
-            "cell", _ivf_assign_kernel(cents, na2s)(F.col("cq"))
-        )
-    else:
-        corp = (
-            _ivf_cell_keys(corp, "cq", cents, na2s)
-            .withColumn("__best", F.array_max(F.col("__keys")))
-            .withColumn("cell", -F.col("__best.nj"))
-            .drop("__best", "__keys")
-        )
-    corp = corp.withColumn(
-        "na2", _pair_dot_int_udf(F.col("cq"), F.col("cq"))
-    )
-    # consumed by both candidate joins AND the scoring join — persist
-    # so the corpus pass runs once (released by release_portable_caches)
-    corp = _persist_tracked(corp)
-
-    qe = spark.createDataFrame(
-        [
-            (t * (1 << num_planes) + int(sig), r.qid)
-            for r in qrows
-            for t, sig in enumerate(r.sigs)
-        ],
-        "bsig long, qid long",
-    )
-    qprobe = spark.createDataFrame(
-        [(r.qid, int(c)) for r in qrows for c in r.cells],
-        "qid long, cell int",
-    )
-    qry = spark.createDataFrame(
-        [(r.qid, list(r.qq)) for r in qrows], "qid long, qq array<long>"
-    )
-    ce = corp.select(
-        "cid", F.posexplode("sigs").alias("t", "sig")
-    ).select(
-        "cid",
-        (F.col("t") * (1 << num_planes) + F.col("sig")).alias("bsig"),
-    )
-    p_lsh = (
-        F.broadcast(qe)
-        .join(ce, "bsig")
-        .filter(F.col("qid") != F.col("cid"))
-        .select(F.lit("lsh").alias("tier"), "qid", "cid")
-        .distinct()
-    )
-    p_ivf = (
-        corp.select("cid", "cell")
-        .join(F.broadcast(qprobe), "cell")
-        .filter(F.col("qid") != F.col("cid"))
-        .select(F.lit("ivf").alias("tier"), "qid", "cid")
-    )
-    cand = (
-        p_lsh.unionByName(p_ivf)
-        .join(corp.select("cid", "cq", "na2"), "cid")
-        .join(F.broadcast(qry), "qid")
-        .withColumn("__dot", _pair_dot_int_udf(F.col("qq"), F.col("cq")))
-    )
-    return _rrf_fused_tail(cand, k, k0, scale)
-
-
-def rrf_ann_indexed(
-    spark,
-    lsh_table: str,
-    ivf_table: str,
-    queries: DataFrame,
-    k: int = 5,
-    nprobe: int = 3,
-    k0: int = 60,
-    scale: int = 10**9,
-    vec_col: str | None = None,
-) -> DataFrame:
-    """Reciprocal-rank fusion over BOTH persisted portable indexes in
-    ONE fused plan — the per-batch search shape a deployed hybrid
-    retrieval stack runs: the two tiers' candidate generation (LSH
-    band join + IVF cell join) feeds a SINGLE shared scoring pass
-    (one vectors read, one exact-int dot kernel, one window) instead
-    of two independent search pipelines unioned at the end.
-    Bit-identical to ``rrf_fuse([lsh_topk_portable_indexed(...),
-    ivf_topk_portable_indexed(...)])`` — same surrogate keys, same
-    tie-breaks, same integer RRF arithmetic — so it shares the same
-    composed DuckDB oracle.
-
-    Query side: one pass computes quantized vectors, LSH signatures,
-    and IVF probe cells together, collected once (bounded batch — the
-    production retrieval shape; above 10k queries it falls back to
-    the two-searcher composition)."""
-    from pyspark.sql import Window
-
-    lm = _annmeta(spark, lsh_table)
-    im = _annmeta(spark, ivf_table)
-    if lm["quant"] != im["quant"] or lm["dim"] != im["dim"]:
-        raise ValueError(
-            "rrf_ann_indexed: the LSH and IVF indexes were built with "
-            f"different quant/dim ({lm['quant']}/{lm['dim']} vs "
-            f"{im['quant']}/{im['dim']}) — their scores would not be "
-            "comparable"
-        )
-    # corpus-drift guard: the fused plan scores BOTH tiers' candidates
-    # against {lsh_table}_vecs, so the two indexes must cover the SAME
-    # corpus — e.g. an append run against only one of them would
-    # otherwise silently drop the other tier's new candidates and
-    # break the documented bit-identity with the two-searcher
-    # composition. Indexes written before fingerprints existed skip
-    # the check (refresh by rebuilding or appending once).
-    lfp = (lm.get("n_vecs"), lm.get("max_cid"))
-    ifp = (im.get("n_vecs"), im.get("max_cid"))
-    if None not in lfp and None not in ifp and lfp != ifp:
-        raise ValueError(
-            "rrf_ann_indexed: corpus fingerprints differ — LSH index "
-            f"has (n_vecs, max_cid)={lfp} but IVF index has {ifp}. "
-            "Append the missing batch to the lagging index (append_"
-            "lsh_topk_index / append_ivf_topk_index) before fusing."
-        )
-    vec_col = vec_col or lm.get("vec_col") or "embedding"
-    num_planes = lm["num_planes"]
-    # cheap bounded count routes the >10k fallback BEFORE the query-side
-    # signature+probe subtree is built (r13, ADVICE — see
-    # rrf_fuse_portable_inline)
-    n_q = queries.limit(10_001).count()
-    if n_q > 10_000:
-        return rrf_fuse(
-            [
-                lsh_topk_portable_indexed(
-                    spark, lsh_table, queries, k=k, vec_col=vec_col
-                ),
-                ivf_topk_portable_indexed(
-                    spark, ivf_table, queries, k=k, nprobe=nprobe,
-                    vec_col=vec_col,
-                ),
-            ],
-            k0=k0, k=k, scale=scale,
-        )
-    if not n_q:
-        return spark.createDataFrame(
-            [],
-            "query_id long, rank int, item_id long, rrf_score long, "
-            "n_lists int, best_rank int",
-        )
-    cents = _portable_centroids(im["nlist"], im["dim"], im["quant"])
-    na2s = [sum(c * c for c in cj) for cj in cents]
-    qrows = _ivf_probe_frame(
-        _lsh_sig_frame(
-            queries, "qid", "qq", lm["num_tables"], num_planes,
-            lm["quant"], vec_col, lm["dim"],
-        ),
-        cents,
-        na2s,
-        nprobe,
-    ).select("qid", "qq", "sigs", "cells").collect()
-    qe = spark.createDataFrame(
-        [
-            (t * (1 << num_planes) + int(sig), r.qid)
-            for r in qrows
-            for t, sig in enumerate(r.sigs)
-        ],
-        "bsig long, qid long",
-    )
-    qprobe = spark.createDataFrame(
-        [(r.qid, int(c)) for r in qrows for c in r.cells],
-        "qid long, cell int",
-    )
-    qry = spark.createDataFrame(
-        [(r.qid, list(r.qq)) for r in qrows], "qid long, qq array<long>"
-    )
-    p_lsh = (
-        F.broadcast(qe)
-        .join(spark.table(f"{lsh_table}_bands"), "bsig")
-        .filter(F.col("qid") != F.col("cid"))
-        .select(F.lit("lsh").alias("tier"), "qid", "cid")
-        .distinct()
-    )
-    p_ivf = (
-        spark.table(f"{ivf_table}_cells")
-        .select("cid", "cell")
-        .join(F.broadcast(qprobe), "cell")
-        .filter(F.col("qid") != F.col("cid"))
-        .select(F.lit("ivf").alias("tier"), "qid", "cid")
-    )
-    # one shared scoring pass: vectors read once (the two indexes carry
-    # the same quantization, so either vecs copy serves both tiers)
-    cand = (
-        p_lsh.unionByName(p_ivf)
-        .join(spark.table(f"{lsh_table}_vecs"), "cid")
-        .join(F.broadcast(qry), "qid")
-        .withColumn("__dot", _pair_dot_int_udf(F.col("qq"), F.col("cq")))
-    )
-    return _rrf_fused_tail(cand, k, k0, scale)
 
 
 def cell_balance(

@@ -54,17 +54,12 @@ Two kernels share those semantics bit-for-bit:
   anti-causal (pipit/trace.py:215-219 walks MATCHED rows only, so an
   Enter's depth depends on whether its open ancestors EVER close —
   undecidable in one forward pass); the chunked kernel therefore runs a
-  narrow AUDIT pass first — by default a pure window-function plan
-  (``audit="sql"``: per-(location, name) clamped-counter dynamics,
-  zero Python), with a Python carried-stack replay (``"kernel"``) kept
-  as the cross-validating second implementation — emitting the
-  normally-empty unmatched-Enter set, after which the emit pass is
-  fully causal and exact on any trace, balanced or not.
-  ``audit="opportunistic"`` skips the audit, materializes the
-  assume-wellformed emit, and pays ONE audited retry iff the loud
-  open-Enter error fires; ``assume_wellformed=True`` skips the audit
-  unconditionally and raises loudly if a location ends with an open
-  Enter.
+  narrow AUDIT pass first — a pure window-function plan
+  (per-(location, name) clamped-counter dynamics, zero Python) —
+  emitting the normally-empty unmatched-Enter set, after which the
+  emit pass is fully causal and exact on any trace, balanced or not.
+  ``assume_wellformed=True`` skips the audit and raises loudly if a
+  location ends with an open Enter.
 
 A pure-SQL window-function fast path for well-nested traces is provided in
 :func:`well_nested_matching_sql` (used by tests and the DuckDB oracle).
@@ -73,7 +68,6 @@ A pure-SQL window-function fast path for well-nested traces is provided in
 from __future__ import annotations
 
 import hashlib
-import os
 from collections.abc import Iterator
 
 import numpy as np
@@ -578,9 +572,9 @@ def _audit_unmatched_enters_sql(
     level c is popped iff the counter ever drops below c afterwards,
     so it is UNMATCHED iff min(c over strictly-later rows) ≥ c (empty
     suffix ⇒ unmatched). One hash shuffle by (location, name), two
-    in-partition sorts (asc + desc), all codegen/spillable — the
-    Python-kernel audit replays the same dynamics row-at-a-time and is
-    kept as ``audit="kernel"`` for cross-validation.
+    in-partition sorts (asc + desc), all codegen/spillable. The tests
+    pin this set against a row-at-a-time Python replay of the stack
+    matching.
 
     ``num_partitions`` pre-shards the narrow frame by the window keys —
     the window execs reuse the hash partitioning (no extra exchange) —
@@ -590,8 +584,7 @@ def _audit_unmatched_enters_sql(
     erasing the JVM audit's 2.1× win over the Python replay (SCALING.md
     round-10 billion rung). Callers pass ~8× task parallelism so both
     sorts stay in memory; parallelism is still bounded below by the
-    distinct (location, name) key count — window semantics, both
-    audits share it."""
+    distinct (location, name) key count (window semantics)."""
     narrow = _narrow_enter_leave(events, group_cols)
     keys = [*group_cols, S.NAME]
     if num_partitions is not None:
@@ -617,93 +610,18 @@ def _audit_unmatched_enters_sql(
     ).select(S.EVENT_ID)
 
 
-def _audit_unmatched_enters(
-    events: DataFrame, group_cols: list[str], num_partitions: int | None
-) -> DataFrame:
-    """Chunked-kernel audit, Python-kernel form: replay the
-    nearest-same-name stack matching (pipit/trace.py:154-186) over the
-    narrow projection and return the lazy frame of event_ids of Enter
-    rows that never close. Carried state is a stack of (name, event_id)
-    per open call — ∝ stack depth — so this pass has no memory envelope
-    at any location length. The result is normally EMPTY; it is what
-    makes the emit pass's depth/parent decisions causal (see module
-    docstring). ``audit="sql"`` (the default) computes the identical
-    set JVM-side; this kernel remains as the independent second
-    implementation the tests pin it against."""
-    srt = _sorted_locations(
-        _narrow_enter_leave(events, group_cols), group_cols, num_partitions
-    )
-
-    def audit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cur_key: tuple | None = None
-        stack: list[tuple[str, int]] = []
-        out: list[int] = []
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            chg = _group_codes(pdf, group_cols)
-            if cur_key is not None and _row_group_key(pdf, 0, group_cols) != cur_key:
-                chg[0] = True
-            evt = pdf[S.EVENT_TYPE].to_numpy()
-            names = pdf[S.NAME].to_numpy()
-            ids = pdf[S.EVENT_ID].to_numpy()
-            is_enter = np.isin(evt, S.ENTER_TYPES)
-            for i in range(n):
-                if chg[i]:
-                    out.extend(eid for _, eid in stack)
-                    stack.clear()
-                if is_enter[i]:
-                    stack.append((names[i], int(ids[i])))
-                else:
-                    for k in range(len(stack) - 1, -1, -1):
-                        if stack[k][0] == names[i]:
-                            del stack[k]
-                            break
-            cur_key = _row_group_key(pdf, n - 1, group_cols)
-        out.extend(eid for _, eid in stack)
-        if out:
-            yield pd.DataFrame({"__unmatched_id": pd.array(out, dtype="int64")})
-
-    return srt.mapInPandas(
-        audit, schema=T.StructType([T.StructField("__unmatched_id", T.LongType())])
-    ).select(F.col("__unmatched_id").alias(S.EVENT_ID))
-
-
 def _resolve_unmatched(
     events: DataFrame,
     group_cols: list[str],
     num_partitions: int | None,
-    audit: str,
 ) -> frozenset[int]:
-    """Run the chosen audit EAGERLY (bounded collect — see
+    """Run the window-function audit EAGERLY (bounded collect — see
     :func:`_collect_bounded_ids`) and return the unmatched-Enter set."""
-    if audit == "kernel":
-        ids = _audit_unmatched_enters(events, group_cols, num_partitions)
-    elif audit in ("sql", "opportunistic"):
-        # 8× oversharding keeps both window sorts in memory (see the
-        # sql audit's docstring); narrow rows make extra shards cheap
-        base = (
-            num_partitions
-            or events.sparkSession.sparkContext.defaultParallelism
-        )
-        ids = _audit_unmatched_enters_sql(events, group_cols, 8 * base)
-    else:
-        raise ValueError(
-            f"audit must be 'sql', 'kernel' or 'opportunistic', got {audit!r}"
-        )
+    # 8× oversharding keeps both window sorts in memory (see the audit's
+    # docstring); narrow rows make extra shards cheap
+    base = num_partitions or events.sparkSession.sparkContext.defaultParallelism
+    ids = _audit_unmatched_enters_sql(events, group_cols, 8 * base)
     return _collect_bounded_ids(ids, S.EVENT_ID)
-
-
-#: substring of the loud emit-pass error that the opportunistic mode
-#: keys its one retry on. CONTRACT: this text is raised by
-#: ``flush_location`` inside ``_chunked_match_kernel`` — the two MUST
-#: stay in sync (a pytest pins the round-trip: test_round10.py's
-#: forced-fallback test exercises raise → catch → retry end-to-end).
-#: The catch site additionally requires the structural
-#: ``pyspark.errors.PythonException`` type, so an unrelated error that
-#: happens to contain this substring cannot trigger a silent retry.
-_WELLFORMED_ERR_MARK = "open Enter(s) assumed matched"
 
 
 def _chunked_match(
@@ -715,83 +633,26 @@ def _chunked_match(
     metric_cols: list[str],
     num_partitions: int | None,
     assume_wellformed: bool,
-    audit: str,
-    cache: bool = True,
 ) -> DataFrame:
     """Shared chunked-kernel driver for :func:`match_events` /
-    :func:`match_events_iter`: resolve the unmatched-Enter set per the
-    audit mode, broadcast it (NOT pickled into every task closure), and
-    build the emit plan.
-
-    ``audit="opportunistic"`` runs the emit pass assuming a well-formed
-    trace, materializes it, and on the loud open-Enter error falls back
-    to ONE audited retry — clean traces (the overwhelming case) skip
-    the audit scan entirely with no user flag, pathological ones pay
-    one aborted pass. This mode is necessarily EAGER. With ``cache=True``
-    (default) the returned frame is already persisted (``unpersist()``
-    it when done; ``Trace`` manages that via ``Trace.unpersist``).
-    ``cache=False`` honors a no-cache intent (``Trace(cache=False)``,
-    streaming single-consumer pipelines): nothing persists, and the
-    validation pass is pure throwaway — consumers re-execute the emit
-    plan, so prefer ``audit="sql"`` / ``assume_wellformed`` in that
-    regime (the mode's single-consumer loss is measured in SCALING.md).
+    :func:`match_events_iter`: resolve the unmatched-Enter set with the
+    audit (skipped under ``assume_wellformed``), broadcast it (NOT
+    pickled into every task closure), and build the emit plan.
 
     Broadcast lifecycle: the unmatched-set Broadcast (up to ~100 MB at
     the 2 M-id collect cap) is attached to the returned frame as
     ``_unmatched_bc`` so owners can ``destroy()`` it when the frame is
-    released (``Trace.unpersist`` does); the opportunistic retry
-    destroys the discarded first attempt's broadcast immediately."""
-    if audit not in ("sql", "kernel", "opportunistic"):
-        raise ValueError(
-            f"audit must be 'sql', 'kernel' or 'opportunistic', got {audit!r}"
-        )
-    sc = events.sparkSession.sparkContext
-
-    def build(unmatched: frozenset[int]) -> DataFrame:
-        bc = sc.broadcast(unmatched)
-        out = _chunked_emit_plan(
-            enc, out_schema, group_cols, metric_cols, bc, num_partitions,
-        )
-        out = _decode_map_cols(out, map_cols)
-        out._unmatched_bc = bc  # lifetime handle — destroy with the frame
-        return out
-
-    if assume_wellformed:
-        return build(frozenset())
-    was_opportunistic = audit == "opportunistic"
-    if was_opportunistic:
-        from pyspark.errors import PythonException
-
-        optimistic = build(frozenset())
-        if cache:
-            optimistic = optimistic.persist()
-        try:
-            optimistic.count()
-            return optimistic
-        except Exception as e:
-            # release what the aborted attempt pinned, whatever happens
-            # next (ADVICE r10: the frame must not re-raise past while
-            # still persisted, and the discarded broadcast must not pin
-            # executors for the session lifetime)
-            if cache:
-                optimistic.unpersist()
-            optimistic._unmatched_bc.destroy()
-            # retry gate: structural type first (the kernel's ValueError
-            # surfaces as pyspark.errors.PythonException through the
-            # Arrow worker), THEN the pinned marker text — see
-            # _WELLFORMED_ERR_MARK's contract comment. A non-Python
-            # failure (executor loss, OOM, analysis error) never retries.
-            if not isinstance(e, PythonException) or (
-                _WELLFORMED_ERR_MARK not in str(e)
-            ):
-                raise
-            audit = "sql"
-    out = build(_resolve_unmatched(events, group_cols, num_partitions, audit))
-    # the opportunistic contract is "returned frame arrives persisted"
-    # (that is what makes the mode's eager probe affordable) — keep the
-    # audited-retry branch on the same contract as the clean branch
-    if was_opportunistic and cache:
-        out = out.persist()
+    released (``Trace.unpersist`` does)."""
+    unmatched = (
+        frozenset() if assume_wellformed
+        else _resolve_unmatched(events, group_cols, num_partitions)
+    )
+    bc = events.sparkSession.sparkContext.broadcast(unmatched)
+    out = _chunked_emit_plan(
+        enc, out_schema, group_cols, metric_cols, bc, num_partitions,
+    )
+    out = _decode_map_cols(out, map_cols)
+    out._unmatched_bc = bc  # lifetime handle — destroy with the frame
     return out
 
 
@@ -1134,8 +995,6 @@ def match_events(
     num_partitions: int | None = None,
     kernel: str | None = None,
     assume_wellformed: bool = False,
-    audit: str | None = None,
-    cache: bool = True,
     row_count=None,
 ) -> DataFrame:
     """Run the fused matching pass over the whole trace.
@@ -1179,23 +1038,11 @@ def match_events(
     count job — ``Trace`` memoizes the count across its derived passes.
     ``kernel="chunked"`` deletes that envelope entirely (resident state
     ∝ stack depth — module docstring); it costs one extra NARROW audit
-    scan (Enter/Leave keys only, pruned at the source), which runs
-    EAGERLY at call time (a bounded-collect Spark job — the one
-    laziness exception in this module). ``audit`` picks how:
-
-    * ``"sql"`` (default) — pure window-function plan, zero Python
-      (:func:`_audit_unmatched_enters_sql`);
-    * ``"kernel"`` — the independent Python carried-stack replay, kept
-      for cross-validation;
-    * ``"opportunistic"`` — skip the audit, run the emit pass assuming
-      well-formedness, persist + materialize it, and fall back to ONE
-      audited retry on the loud open-Enter error. Clean traces (the
-      overwhelming case) never pay the audit scan; with ``cache=True``
-      the returned frame is already persisted (see
-      :func:`_chunked_match`). ``cache=False`` (the ``Trace(cache=
-      False)`` intent, plumbed through) keeps nothing persisted — the
-      opportunistic validation pass is then pure throwaway, so prefer
-      ``audit="sql"`` in that regime. ``cache`` only affects this mode.
+    scan (Enter/Leave keys only, pruned at the source), a pure
+    window-function plan with zero Python
+    (:func:`_audit_unmatched_enters_sql`) that runs EAGERLY at call
+    time (a bounded-collect Spark job — the one laziness exception in
+    this module).
 
     ``assume_wellformed=True`` skips the audit outright for traces
     known to close every Enter; a violating location then fails loudly
@@ -1203,20 +1050,13 @@ def match_events(
     events-per-location × concurrent tasks threatens executor memory
     (the round-8 1.2 B capstone's binding constraint).
 
-    ``kernel=None`` resolves SPARK_GRAFT_MATCH_KERNEL, then the
-    ``matching.kernel`` config option (default "location") — tooling
-    can switch kernels without plumbing the parameter through every
-    call site; ``audit=None`` resolves the ``matching.audit`` option
-    (default "sql").
+    ``kernel=None`` resolves the ``matching.kernel`` config option
+    (default "location") — tooling can switch kernels without plumbing
+    the parameter through every call site.
     """
     metric_cols = list(metric_cols or [])
     if kernel is None:
-        kernel = (
-            os.environ.get("SPARK_GRAFT_MATCH_KERNEL")
-            or get_option("matching.kernel")
-        )
-    if audit is None:
-        audit = get_option("matching.audit")
+        kernel = get_option("matching.kernel")
     if kernel not in ("location", "chunked"):
         raise ValueError(f"kernel must be 'location' or 'chunked', got {kernel!r}")
     enc, map_cols = _encode_map_cols(events)
@@ -1267,7 +1107,7 @@ def match_events(
             )
         return _chunked_match(
             events, enc, map_cols, out_schema, group_cols, metric_cols,
-            n_part, assume_wellformed, audit, cache=cache,
+            n_part, assume_wellformed,
         )
 
     return _location_match(
@@ -1280,28 +1120,20 @@ def match_events_iter(
     metric_cols: list[str] | None = None,
     kernel: str | None = None,
     assume_wellformed: bool = False,
-    audit: str | None = None,
-    cache: bool = True,
 ) -> DataFrame:
     """Variant for traces already partitioned by location on disk —
     avoids the shuffle entirely (zero-exchange plan when the parquet
-    layout matches). Same kernels and ``audit`` modes as
-    :func:`match_events`, minus the repartition: each input partition
-    must hold COMPLETE locations (any row order — the in-partition
-    sort of the input contract still runs). NOTE: like there, the
-    chunked kernel's audit runs EAGERLY at call time (a bounded-collect
-    Spark job); the ``audit="kernel"`` variant reuses the existing
-    partitioning, ``audit="sql"`` shuffles its narrow projection by
-    (location, name) for the window pass.
+    layout matches). Same kernels and audit as :func:`match_events`,
+    minus the repartition: each input partition must hold COMPLETE
+    locations (any row order — the in-partition sort of the input
+    contract still runs). NOTE: like there, the chunked kernel's audit
+    runs EAGERLY at call time (a bounded-collect Spark job) and
+    shuffles its narrow projection by (location, name) for the window
+    pass.
     """
     metric_cols = list(metric_cols or [])
     if kernel is None:
-        kernel = (
-            os.environ.get("SPARK_GRAFT_MATCH_KERNEL")
-            or get_option("matching.kernel")
-        )
-    if audit is None:
-        audit = get_option("matching.audit")
+        kernel = get_option("matching.kernel")
     if kernel not in ("location", "chunked"):
         raise ValueError(f"kernel must be 'location' or 'chunked', got {kernel!r}")
     enc, map_cols = _encode_map_cols(events)
@@ -1311,7 +1143,7 @@ def match_events_iter(
     if kernel == "chunked":
         return _chunked_match(
             events, enc, map_cols, out_schema, group_cols, metric_cols,
-            None, assume_wellformed, audit, cache=cache,
+            None, assume_wellformed,
         )
 
     return _location_match(

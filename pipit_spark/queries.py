@@ -170,7 +170,10 @@ def _canonicalize(df: DataFrame, table: str) -> DataFrame:
 # clear_state() alongside the trace memo, so each steady bench pass
 # re-lists every table once — same within-pass-sharing contract as the
 # matched-frame memo. Keyed by applicationId so a stopped session's
-# dead frames are never handed to a new session.
+# dead frames are never handed to a new session; a hit is reused only
+# when the frame belongs to the caller's own session, because
+# spark.newSession() shares the applicationId but not the session conf
+# or temp views the frame's plan resolves against.
 _load_memo: dict[tuple[str, str, str], DataFrame] = {}
 
 
@@ -188,7 +191,9 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     key = (spark.sparkContext.applicationId, sf_dir, name)
     cached = _load_memo.get(key)
-    if cached is not None:
+    if cached is not None and cached.sparkSession._jsparkSession.equals(
+        spark._jsparkSession
+    ):
         return cached
     if name == "events":
         df = load_events(spark, _t(sf_dir, name))
@@ -3314,9 +3319,8 @@ def q_emb_rrf_fusion(spark, sf_dir):
     # 5.4 s — 4/5 paired diffs favor the composition, and the fused
     # single plan additionally shows a large first-execution cost
     # (84 s vs 19 s warm run) plus run-to-run variance (7–63 s) that
-    # the composition does not. rrf_fuse_portable_inline stays in the
-    # library (bit-identical results, pytest-pinned) for deployments
-    # where one corpus pass beats two.
+    # the composition does not. The fused searcher was then deleted;
+    # PLANS.md records the decision.
     return V.rrf_fuse(
         [
             V.lsh_topk_portable(corpus, qs, k=5),
@@ -3371,14 +3375,12 @@ def q_emb_rrf_fusion_indexed(spark, sf_dir):
     qs = emb.filter(F.col("vec_id") % 25 == 0)
     # r13: REVERTED to the two-searcher composition by the same paired
     # A/B rule as emb_rrf_fusion (5 alternating reps after warmup,
-    # results verified equal): fused rrf_ann_indexed median 8.8 s /
+    # results verified equal): fused indexed searcher median 8.8 s /
     # min 8.0 s vs composition median 7.8 s / min 7.0 s, 4/5 paired
     # diffs favoring the composition — and in full-bench context the
     # fused single plan showed the same pathological first-execution /
     # variance cost as the inline fusion (27.4 s bench median vs ~8 s
-    # isolated). rrf_ann_indexed stays in the library (bit-identical,
-    # pytest-pinned) for deployments where its single-exchange tail
-    # wins.
+    # isolated).
     return V.rrf_fuse(
         [
             V.lsh_topk_portable_indexed(spark, f"{prefix}_lsh", qs, k=5),
@@ -4599,7 +4601,7 @@ _R09_WINDOW = [
 #     trace_session_stats (already in the r06 burn-down group) and
 #     trace_flat_profile (r08 row -> one extra mandatory slot).
 #   * operators/matching.py changes this round (the JVM
-#     window-function audit now default, audit="opportunistic",
+#     window-function audit now default, an audit-skipping mode,
 #     broadcast unmatched set, bounded audit collect — r09 verdict
 #     item 3 + all three ADVICE items) — restales its three gates:
 #     trace_match_inc, trace_cct, trace_caller_callee.
@@ -4634,7 +4636,7 @@ _R10_WINDOW = [
     # A. trace.py-backed — restaled by the public-API batch (2)
     "trace_flat_profile", "trace_session_stats",
     # B. operators/matching.py-backed — restaled by the SQL audit /
-    # opportunistic mode / broadcast+bounded-collect fixes (3)
+    # audit-skipping mode / broadcast+bounded-collect fixes (3)
     "trace_match_inc", "trace_cct", "trace_caller_callee",
     # C. r05-stale burn-down, the full remainder (26)
     "doc_bigram_lm", "doc_bigram_lm_merged", "doc_bm25",
@@ -4669,7 +4671,7 @@ _R10_WINDOW = [
 #     undercount; the exact attribution is the 26 gates whose query
 #     functions call into llm/dedup.py, group A below).
 #   * operators/matching.py changed this round (the r10 ADVICE batch:
-#     cache= plumbed through the opportunistic probe, aborted-probe
+#     cache= plumbed through the audit-skipping probe, aborted-probe
 #     persist+broadcast release on re-raise, structural
 #     PythonException retry gate, persisted audited-retry branch) —
 #     restales its three gates (group B).
@@ -4765,7 +4767,7 @@ def queries():
     r10: the window was `_R10_WINDOW` above — the 5
     mandatory restales (trace.py's two gates for the public-API
     batch; operators/matching.py's three for the SQL audit /
-    opportunistic mode / ADVICE fixes) plus the full 26-gate
+    audit-skipping mode / ADVICE fixes) plus the full 26-gate
     r05-stale burn-down and 19 of the 24 r06-stale gates. See the
     _R10_WINDOW comment for the slot accounting, the four deferred
     r06 TPC-H gates, and the doc_simhash_pairs re-audit rationale.

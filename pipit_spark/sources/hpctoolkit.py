@@ -38,6 +38,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from .otf2_native import _pack_locations, _parse_task_count
+
 from .. import schema as S
 
 
@@ -326,7 +328,7 @@ def read_hpctoolkit(
     order="trace" (default) reproduces the reference's global
     (timestamp, seq) frame order (hpctoolkit_reader.py:1353-1363) —
     one range shuffle. order="process" skips it: each output
-    partition is one trace line's events in timestamp order (the LCA
+    partition holds whole trace lines, each in timestamp order (the LCA
     reconstruction emits them that way), which is all the engine's
     own operators need — their windows partition by (process, thread)
     and sort internally. At cluster scale "process" removes the
@@ -346,22 +348,28 @@ def read_hpctoolkit(
         (meta["resolve"], meta["parent"], meta["name"], meta["is_loop"], profiles)
     )
 
-    # one task per trace line: each reads only its own byte range.
-    # Arrow-batched mapInPandas with bounded chunk flushes (same shape
-    # as sources/projections.py / otf2_native.py — never a whole
-    # line's row list in task memory, no per-row Pyrolite pickling)
+    # one parse task per GROUP of whole trace lines, packed by their
+    # byte ranges the way read_otf2_native packs location files: each
+    # Python task pays a fixed start-up cost that dwarfs a small line's
+    # parse. Each line reads only its own byte range. Arrow-batched
+    # mapInPandas with bounded chunk flushes (same shape as
+    # sources/projections.py / otf2_native.py — never a whole line's
+    # row list in task memory, no per-row Pyrolite pickling)
     hdr_schema = T.StructType([
         T.StructField("hdr_idx", T.LongType(), False),
         T.StructField("prof_index", T.LongType(), False),
         T.StructField("p_start", T.LongType(), False),
         T.StructField("p_end", T.LongType(), False),
     ])
+    lines = [(i, int(pi), int(s), int(e))
+             for i, (pi, s, e) in enumerate(headers)]
+    sizes = [e - s for _i, _pi, s, e in lines]
+    groups = _pack_locations(
+        lines, sizes, _parse_task_count(spark, sum(sizes))
+    )
     hdr_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [(i, int(pi), int(s), int(e))
-             for i, (pi, s, e) in enumerate(headers)],
-            max(1, len(headers)),
-        ),
+        spark.sparkContext.parallelize(groups, max(1, len(groups)))
+        .flatMap(lambda g: g),
         hdr_schema,
     )
 
@@ -423,7 +431,7 @@ def read_hpctoolkit(
     events = hdr_df.mapInPandas(parse, schema=_HPCT_SCHEMA)
     # reference sorts globally by (timestamp, emission index)
     # (hpctoolkit_reader.py:1353-1363); within-location order is what the
-    # matching pass consumes — order="process" returns the per-line
+    # matching pass consumes — order="process" returns the packed
     # partitions as parsed, order="trace" pays the parity range shuffle
     if order == "trace":
         events = events.orderBy(S.TIMESTAMP, S.SEQ)

@@ -74,7 +74,6 @@ class Trace:
         match_partitions: int | None = None,
         kernel: str | None = None,
         assume_wellformed: bool = False,
-        audit: str | None = None,
     ) -> None:
         missing = [c for c in self.REQUIRED_COLUMNS if c not in events.columns]
         if missing:
@@ -87,8 +86,8 @@ class Trace:
         self.events = events
         self.definitions = definitions
         # cache=None defers to the config registry ("cache.matched_frame",
-        # default True) — kernel/audit likewise resolve their registry
-        # defaults inside match_events, so set_option routes every Trace
+        # default True) — kernel likewise resolves its registry default
+        # inside match_events, so set_option routes every Trace
         self._cache = get_option("cache.matched_frame") if cache is None else cache
         # partition count for the fused matching pass (the scale
         # envelope: one partition — several complete ranks — must fit a
@@ -100,16 +99,14 @@ class Trace:
             env = os.environ.get("SPARK_GRAFT_MATCH_PARTITIONS")
             match_partitions = int(env) if env else None
         self._match_partitions = match_partitions
-        # matching-kernel choice, public since round 10 (previously only
-        # the SPARK_GRAFT_MATCH_KERNEL env var reached it from Trace
-        # level): kernel=None defers to the env var / "location";
-        # "chunked" streams with resident state ∝ stack depth — the
-        # scale path when events-per-location × concurrent tasks
-        # threatens executor memory. assume_wellformed / audit tune the
-        # chunked kernel's exactness audit (operators/matching.py).
+        # matching-kernel choice: kernel=None defers to the
+        # "matching.kernel" option ("location"); "chunked" streams with
+        # resident state ∝ stack depth — the scale path when
+        # events-per-location × concurrent tasks threatens executor
+        # memory. assume_wellformed skips the chunked kernel's
+        # exactness audit (operators/matching.py).
         self._kernel = kernel
         self._assume_wellformed = assume_wellformed
-        self._audit = audit
         self._matched: DataFrame | None = None
         self._cct: DataFrame | None = None
         # memoized events row count (a trace is immutable): feeds the
@@ -334,16 +331,8 @@ class Trace:
                 num_partitions=self._match_partitions,
                 kernel=self._kernel,
                 assume_wellformed=self._assume_wellformed,
-                audit=self._audit,
-                cache=self._cache,
                 row_count=self.num_events,
             )
-            # audit="opportunistic" + cache=True returns an already-
-            # persisted frame; a second persist() at the same level is a
-            # JVM no-op. With cache=False nothing persists anywhere —
-            # note that opportunistic's validation pass is then pure
-            # throwaway (consumers re-execute the emit plan); prefer
-            # audit="sql" or assume_wellformed for no-cache pipelines.
             if self._cache:
                 m = m.persist()
             self._matched = m
@@ -514,7 +503,6 @@ class Trace:
             match_partitions=self._match_partitions,
             kernel=self._kernel,
             assume_wellformed=self._assume_wellformed,
-            audit=self._audit,
         )
 
     # ------------------------------------------------------------------ #

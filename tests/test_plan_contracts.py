@@ -499,31 +499,6 @@ def test_indexed_ann_candidate_joins_broadcast_query_side(spark):
         assert "Exchange hashpartitioning" not in between, between
 
 
-def test_rrf_ann_indexed_single_vecs_scan(spark):
-    """The one-pass fused searcher reads ONE vectors table for both
-    tiers (same quantization) and fuses in-plan: exactly one _vecs
-    scan, both index tables present, no cartesian."""
-    from pipit_spark import queries as Q
-    from pyspark.sql import functions as F
-    from pipit_spark.llm import similarity as V
-
-    prefix = Q.ensure_portable_ann_indexes(spark, SF_DIR)
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    qs = emb.filter(F.col("vec_id") % 25 == 0)
-    df = V.rrf_ann_indexed(
-        spark, f"{prefix}_lsh", f"{prefix}_ivf", qs, k=5, nprobe=3
-    )
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    # count FileScan nodes (the bare name also appears in each scan's
-    # Location path, so match the catalog-qualified identifier)
-    assert plan.count(
-        f"spark_catalog.default.{prefix}_lsh_vecs["
-    ) == 1, plan
-    assert f"{prefix}_lsh_bands" in plan, plan
-    assert f"{prefix}_ivf_cells" in plan, plan
-    assert "CartesianProduct" not in plan, plan
-
-
 def test_profile_lineitem_expand_excludes_key_columns(spark):
     """The reformed gate (r08): the multi-distinct aggregation still
     uses one Expand pass, but the ~|table|-cardinality columns

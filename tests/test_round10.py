@@ -1,17 +1,14 @@
 """Round-10 additions.
 
-1. The JVM window-function audit (``audit="sql"``, now the chunked
-   kernel's default): pinned set-equal to the independent Python
-   carried-stack audit on randomized adversarial traces, and the
-   chunked kernel stays bit-equal to the location kernel through it.
-2. ``audit="opportunistic"`` (r09 verdict item 3): clean traces run
-   ZERO audit jobs; pathological traces fall back to exactly one
-   audited retry — both branches bit-equal to the location kernel.
-3. Bounded audit collect (r09 ADVICE item 3): the driver never holds
+1. The JVM window-function audit (the chunked kernel's only audit):
+   pinned set-equal to an independent Python replay of the stack
+   matching on randomized adversarial traces, and the chunked kernel
+   stays bit-equal to the location kernel through it.
+2. Bounded audit collect (r09 ADVICE item 3): the driver never holds
    more than the cap, and the loud error still fires.
-4. The unmatched set rides a broadcast, not task closures (r09 ADVICE
+3. The unmatched set rides a broadcast, not task closures (r09 ADVICE
    item 1).
-5. The Trace-level public API batch (r09 verdict item 1):
+4. The Trace-level public API batch (r09 verdict item 1):
    from_hpctoolkit(**kw), from_parquet(cache=/kernel=/...),
    Trace(kernel=) plumbing, and the HPCToolkit reader's context id
    renamed to ctx_id so it survives `matched` and derived checkpoints
@@ -55,33 +52,51 @@ def _random_trace(seed: int, n_locations: int = 40) -> pd.DataFrame:
     )
 
 
+def _replay_unmatched_enters(pdf: pd.DataFrame) -> set[int]:
+    """Reference oracle for the chunked kernel's audit: replay the
+    nearest-same-name stack matching (pipit/trace.py:154-186) row by
+    row over each (process, thread) location in (timestamp_ns, seq)
+    order, and return the event_ids of the Enter rows that never
+    close. Instants never take part in pass-1 matching."""
+    from pipit_spark import schema as S
+
+    el = pdf[pdf["event_type"].isin([*S.ENTER_TYPES, *S.LEAVE_TYPES])]
+    el = el.sort_values(["process", "thread", "timestamp_ns", "seq"])
+    unmatched: set[int] = set()
+    for _, loc in el.groupby(["process", "thread"], dropna=False):
+        stack: list[tuple[str, int]] = []
+        for et, name, eid in zip(loc["event_type"], loc["name"],
+                                 loc["event_id"]):
+            if et in S.ENTER_TYPES:
+                stack.append((name, int(eid)))
+                continue
+            for k in range(len(stack) - 1, -1, -1):
+                if stack[k][0] == name:
+                    del stack[k]
+                    break
+        unmatched.update(eid for _, eid in stack)
+    return unmatched
+
+
 def test_sql_audit_equals_kernel_audit(spark):
-    """The window-function audit and the Python carried-stack audit
-    return the SAME unmatched-Enter id set, on the handcrafted
-    adversarial trace and on randomized event soup (many seeds, one
-    frame per seed batch — per-(location, name) clamped-counter
-    dynamics vs the row-at-a-time replay)."""
+    """The window-function audit and the Python stack replay return
+    the SAME unmatched-Enter id set, on the handcrafted adversarial
+    trace and on randomized event soup (per-(location, name)
+    clamped-counter dynamics vs the row-at-a-time replay)."""
     import pipit_spark.operators.matching as M
 
     frames = [_adversarial_events()] + [_random_trace(s) for s in range(6)]
     for pdf in frames:
         df = spark.createDataFrame(pdf)
-        # num_partitions=4: the kernel audit repartitions by location
-        # itself (None means "input already location-partitioned" — the
-        # match_events_iter lane); the sql audit shuffles on its own
-        kernel_ids = set(
-            r["event_id"]
-            for r in M._audit_unmatched_enters(
-                df, ["process", "thread"], 4
-            ).collect()
-        )
+        replay_ids = _replay_unmatched_enters(pdf)
+        assert replay_ids  # every frame has truncated Enters to find
         sql_ids = set(
             r["event_id"]
             for r in M._audit_unmatched_enters_sql(
                 df, ["process", "thread"]
             ).collect()
         )
-        assert sql_ids == kernel_ids
+        assert sql_ids == replay_ids
 
 
 def test_chunked_sql_audit_bit_equality_random(tiny_batch_spark):  # noqa: F811
@@ -95,53 +110,8 @@ def test_chunked_sql_audit_bit_equality_random(tiny_batch_spark):  # noqa: F811
         a = _sorted(match_events(df, metric_cols=["metric1"],
                                  kernel="location").toPandas())
         b = _sorted(match_events(df, metric_cols=["metric1"],
-                                 kernel="chunked", audit="sql").toPandas())
+                                 kernel="chunked").toPandas())
         pd.testing.assert_frame_equal(a, b[a.columns])
-
-
-def test_opportunistic_clean_trace_runs_no_audit(tiny_batch_spark,  # noqa: F811
-                                                 monkeypatch):
-    """Clean trace: audit='opportunistic' must launch ZERO audit plans
-    (both audit implementations are boobytrapped) and still be
-    bit-equal to the location kernel. The returned frame arrives
-    persisted (that is what makes the retry affordable)."""
-    import pipit_spark.operators.matching as M
-
-    spark = tiny_batch_spark
-    pdf = _adversarial_events()
-    clean = pdf[~pdf["name"].isin(["truncated", "ghost", "orphan_a",
-                                   "inner", "in_trunc"])]
-    df = spark.createDataFrame(clean)
-    a = _sorted(M.match_events(df, metric_cols=["metric1"],
-                               kernel="location").toPandas())
-
-    def _boom(*_a, **_k):
-        raise AssertionError("audit ran on a clean opportunistic pass")
-
-    monkeypatch.setattr(M, "_audit_unmatched_enters", _boom)
-    monkeypatch.setattr(M, "_audit_unmatched_enters_sql", _boom)
-    out = M.match_events(df, metric_cols=["metric1"], kernel="chunked",
-                         audit="opportunistic")
-    assert out.storageLevel.useMemory or out.storageLevel.useDisk
-    b = _sorted(out.toPandas())
-    out.unpersist()
-    pd.testing.assert_frame_equal(a, b[a.columns])
-
-
-def test_opportunistic_fallback_on_truncated_trace(tiny_batch_spark):  # noqa: F811
-    """Pathological trace (never-closing Enters): the optimistic pass
-    fails loudly, the ONE audited retry produces the exact result."""
-    from pipit_spark.operators.matching import match_events
-
-    spark = tiny_batch_spark
-    df = spark.createDataFrame(_adversarial_events())
-    a = _sorted(match_events(df, metric_cols=["metric1"],
-                             kernel="location").toPandas())
-    out = match_events(df, metric_cols=["metric1"], kernel="chunked",
-                       audit="opportunistic")
-    b = _sorted(out.toPandas())
-    out.unpersist()
-    pd.testing.assert_frame_equal(a, b[a.columns])
 
 
 def test_audit_collect_is_bounded(spark, monkeypatch):
@@ -157,17 +127,8 @@ def test_audit_collect_is_bounded(spark, monkeypatch):
                  "process", "thread", "metric1"],
     ))
     monkeypatch.setattr(M, "_AUDIT_CAP", 3)
-    for audit in ("sql", "kernel"):
-        with pytest.raises(ValueError, match="pathologically truncated"):
-            M._resolve_unmatched(df, ["process", "thread"], None, audit)
-
-
-def test_audit_mode_validated(spark):
-    from pipit_spark.operators.matching import match_events
-
-    df = spark.createDataFrame(_random_trace(0))
-    with pytest.raises(ValueError, match="audit must be"):
-        match_events(df, kernel="chunked", audit="bogus")
+    with pytest.raises(ValueError, match="pathologically truncated"):
+        M._resolve_unmatched(df, ["process", "thread"], None)
 
 
 def test_unmatched_set_is_broadcast(tiny_batch_spark):  # noqa: F811
@@ -289,9 +250,8 @@ def test_cluster_conf_emit_sort_spill_bound():
 
 
 def test_sql_audit_plan_is_python_free(spark):
-    """The default audit's executed plan must contain window exchanges
-    and sorts but ZERO Python evaluation nodes — the whole point of
-    audit='sql' (the kernel replay shows as a mapInPandas node)."""
+    """The audit's executed plan must contain window exchanges and
+    sorts but ZERO Python evaluation nodes."""
     import pipit_spark.operators.matching as M
 
     df = spark.createDataFrame(_random_trace(3))
@@ -304,11 +264,6 @@ def test_sql_audit_plan_is_python_free(spark):
     for marker in ("pythonudf", "mapinpandas", "arroweval", "batcheval",
                    "flatmapsinpandas", "pythonexec"):
         assert marker not in low, plan
-    kplan = (
-        M._audit_unmatched_enters(df, ["process", "thread"], 4)
-        ._jdf.queryExecution().executedPlan().toString().lower()
-    )
-    assert "mapinpandas" in kplan
 
 
 def test_sql_audit_oversharding_adds_no_exchange(spark):
@@ -328,30 +283,23 @@ def test_sql_audit_oversharding_adds_no_exchange(spark):
 
 def test_config_options_route_matching_defaults(spark, monkeypatch):
     """The config registry's engine options are CONSUMED, not
-    decorative: matching.kernel / matching.audit set the defaults that
-    kernel=None / audit=None resolve (explicit arg and the env var
-    still win), and cache.matched_frame drives Trace(cache=None)."""
+    decorative: matching.kernel sets the default that kernel=None
+    resolves (an explicit arg still wins), and cache.matched_frame
+    drives Trace(cache=None)."""
     import pipit_spark as pp
     import pipit_spark.operators.matching as M
     from pipit_spark.trace import Trace
 
     df = spark.createDataFrame(_random_trace(7))
-    monkeypatch.delenv("SPARK_GRAFT_MATCH_KERNEL", raising=False)
     try:
         pp.set_option("matching.kernel", "chunked")
-        pp.set_option("matching.audit", "kernel")
-        marker = {}
 
-        def spy(events, enc, map_cols, out_schema, group_cols,
-                metric_cols, num_partitions, assume_wellformed, audit,
-                cache=True):
-            marker["audit"] = audit
+        def spy(*_a, **_k):
             raise RuntimeError("chunked-route")
 
         monkeypatch.setattr(M, "_chunked_match", spy)
         with pytest.raises(RuntimeError, match="chunked-route"):
             M.match_events(df)
-        assert marker["audit"] == "kernel"
         # explicit arg still wins over the option
         monkeypatch.undo()
         out = M.match_events(df, kernel="location")

@@ -6,22 +6,14 @@
    cross-block pair dedup — pinned value-equal to an independent
    brute-force on randomized corpora, and the plan is pinned
    buffer-free (no collect_list / ObjectHashAggregate).
-2. The r10 ADVICE batch on the opportunistic audit mode:
-   cache=False is honored end-to-end (nothing persists), the aborted
-   first attempt releases its persist AND destroys its broadcast
-   before any re-raise, the retry gate is structural
-   (PythonException + marker, not substring-only), and the audited
-   retry returns persisted like the clean branch.
-3. Trace.unpersist releases the chunked kernel's unmatched-set
+2. Trace.unpersist releases the chunked kernel's unmatched-set
    broadcast together with the matched frame.
 """
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-import pytest
 
-from tests.test_round9 import _adversarial_events, _sorted, tiny_batch_spark  # noqa: F401
+from tests.test_round9 import _adversarial_events, tiny_batch_spark  # noqa: F401
 
 
 # --------------------------------------------------------------- simhash
@@ -102,113 +94,6 @@ def test_simhash_pairs_count_first_cap_still_exact(spark):
     assert simhash_pairs(docs).count() == 15 * 14 // 2
     assert simhash_pairs(docs, max_bucket=5).count() == 0
     spark.catalog.clearCache()
-
-
-# ------------------------------------------------- opportunistic advice
-def test_opportunistic_cache_false_keeps_nothing_persisted(
-    tiny_batch_spark,  # noqa: F811
-):
-    """Trace(cache=False)'s intent reaches the opportunistic probe: no
-    frame arrives persisted on either branch, and results stay
-    bit-equal to the location kernel."""
-    from pipit_spark.operators.matching import match_events
-
-    spark = tiny_batch_spark
-    pdf = _adversarial_events()
-    clean = pdf[~pdf["name"].isin(["truncated", "ghost", "orphan_a",
-                                   "inner", "in_trunc"])]
-    for fixture in (clean, pdf):
-        df = spark.createDataFrame(fixture)
-        a = _sorted(match_events(df, metric_cols=["metric1"],
-                                 kernel="location").toPandas())
-        out = match_events(df, metric_cols=["metric1"], kernel="chunked",
-                           audit="opportunistic", cache=False)
-        assert not (out.storageLevel.useMemory or out.storageLevel.useDisk)
-        b = _sorted(out.toPandas())
-        pd.testing.assert_frame_equal(a, b[a.columns])
-
-
-def test_opportunistic_fallback_returns_persisted_and_releases_probe(
-    tiny_batch_spark, monkeypatch,  # noqa: F811
-):
-    """The audited-retry branch honors the mode's contract (returned
-    frame persisted, like the clean branch), and the aborted probe's
-    persist + broadcast are both released before the retry builds."""
-    from pyspark.broadcast import Broadcast
-
-    from pipit_spark.operators.matching import match_events
-
-    destroyed = []
-    orig_destroy = Broadcast.destroy
-
-    def _spy_destroy(self, *a, **k):
-        destroyed.append(self)
-        return orig_destroy(self, *a, **k)
-
-    monkeypatch.setattr(Broadcast, "destroy", _spy_destroy)
-    spark = tiny_batch_spark
-    df = spark.createDataFrame(_adversarial_events())
-    out = match_events(df, metric_cols=["metric1"], kernel="chunked",
-                       audit="opportunistic")
-    # retry contract: persisted like the clean branch
-    assert out.storageLevel.useMemory or out.storageLevel.useDisk
-    # exactly the probe's broadcast died; the retry's own broadcast
-    # survives and the frame still executes through it
-    assert len(destroyed) == 1
-    assert destroyed[0] is not out._unmatched_bc
-    assert out.count() > 0
-    out.unpersist()
-
-
-def test_opportunistic_retry_gate_is_structural(
-    tiny_batch_spark, monkeypatch,  # noqa: F811
-):
-    """A non-PythonException whose text happens to contain the marker
-    must RE-RAISE (no silent retry) — and the aborted probe still
-    releases its persist and broadcast on the way out."""
-    import pipit_spark.operators.matching as M
-    from pyspark.broadcast import Broadcast
-
-    spark = tiny_batch_spark
-    pdf = _adversarial_events()
-    clean = pdf[~pdf["name"].isin(["truncated", "ghost", "orphan_a",
-                                   "inner", "in_trunc"])]
-    df = spark.createDataFrame(clean)
-    # patch the CONCRETE DataFrame class (Spark 4's classic DataFrame
-    # overrides the abstract base's methods)
-    DataFrame = type(df)
-
-    released = {"unpersist": 0, "destroy": 0}
-    orig_unpersist = DataFrame.unpersist
-    orig_destroy = Broadcast.destroy
-
-    def _spy_unpersist(self, *a, **k):
-        released["unpersist"] += 1
-        return orig_unpersist(self, *a, **k)
-
-    def _spy_destroy(self, *a, **k):
-        released["destroy"] += 1
-        return orig_destroy(self, *a, **k)
-
-    def _boom(self):
-        raise RuntimeError(
-            f"infrastructure failure mentioning {M._WELLFORMED_ERR_MARK}"
-        )
-
-    def _no_retry(*_a, **_k):
-        raise AssertionError("audit retry ran after a structural miss")
-
-    monkeypatch.setattr(DataFrame, "unpersist", _spy_unpersist)
-    monkeypatch.setattr(Broadcast, "destroy", _spy_destroy)
-    monkeypatch.setattr(DataFrame, "count", _boom)
-    monkeypatch.setattr(M, "_resolve_unmatched", _no_retry)
-    with pytest.raises(RuntimeError, match="infrastructure failure"):
-        # explicit num_partitions: the self-sizing count must not trip
-        # the boobytrap — the probe's own materializing count is the
-        # target of this test
-        M.match_events(df, metric_cols=["metric1"], kernel="chunked",
-                       audit="opportunistic", num_partitions=4)
-    assert released == {"unpersist": 1, "destroy": 1}
 
 
 def test_trace_unpersist_destroys_unmatched_broadcast(

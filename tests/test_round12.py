@@ -164,61 +164,6 @@ def test_simhash_pairs_persist_lifecycle(spark):
     assert not handle.storageLevel.useMemory
 
 
-# ------------------------------------------ fused inline RRF (opt r12)
-def test_rrf_fuse_portable_inline_bit_equality(spark):
-    """The single-plan fused searcher must return exactly the rows of
-    the two-tier composition it replaces (same scores, ranks and
-    tie-breaks) — the optimization changed the plan, not the query."""
-    from pyspark.sql import functions as F
-    from pipit_spark.llm.similarity import (
-        ivf_topk_portable,
-        lsh_topk_portable,
-        release_portable_caches,
-        rrf_fuse,
-        rrf_fuse_portable_inline,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    qs = emb.filter(F.col("vec_id") % 25 == 0)
-    corpus = emb.filter(F.col("vec_id") % 25 != 0)
-    try:
-        fused = sorted(
-            tuple(r) for r in
-            rrf_fuse_portable_inline(
-                corpus, qs, k=5, nlist=8, nprobe=3
-            ).collect()
-        )
-        composed = sorted(
-            tuple(r) for r in
-            rrf_fuse(
-                [
-                    lsh_topk_portable(corpus, qs, k=5),
-                    ivf_topk_portable(corpus, qs, k=5, nlist=8, nprobe=3),
-                ],
-                k=5,
-            ).collect()
-        )
-    finally:
-        release_portable_caches()
-    assert fused == composed and len(fused) > 0
-
-
-def test_rrf_fuse_portable_inline_empty_queries(spark):
-    """Zero query rows short-circuit to an empty frame with the full
-    output schema (no corpus work, no collect of an empty batch)."""
-    from pyspark.sql import functions as F
-    from pipit_spark.llm.similarity import rrf_fuse_portable_inline
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    out = rrf_fuse_portable_inline(
-        emb, emb.filter(F.lit(False)), k=5, nlist=8, nprobe=3
-    )
-    assert out.count() == 0
-    assert out.columns == [
-        "query_id", "rank", "item_id", "rrf_score", "n_lists", "best_rank",
-    ]
-
-
 # ------------------------------------------------ env validation
 def test_arrow_batch_env_validation(monkeypatch):
     from pipit_spark.session import get_spark

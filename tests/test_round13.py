@@ -19,9 +19,6 @@
    contracts (no join in message_latency, no second window scan).
 4. int64 surrogate keys for ngram/winnow pair paths (xxhash64 before
    the bucket exchange): plan pins that the exchanges carry longs.
-5. RRF fusion entry points route the >10k fallback on a cheap bounded
-   count (no query-side signature subtree built then discarded);
-   empty-queries early return still bit-stable.
 """
 from __future__ import annotations
 
@@ -453,23 +450,6 @@ def test_ngram_jaccard_values_unchanged_by_hashing(spark):
                 exp[(a, b)] = round(j, 6)
     assert got == exp
     spark.catalog.clearCache()
-
-
-# -------------------------------------------------- RRF count-first
-def test_rrf_inline_empty_queries_early_return(spark):
-    from pipit_spark.llm.similarity import rrf_fuse_portable_inline
-
-    emb = spark.createDataFrame(
-        [(i, [float(i), 1.0, 0.0, -1.0]) for i in range(8)],
-        "vec_id long, embedding array<float>",
-    )
-    out = rrf_fuse_portable_inline(
-        emb, emb.filter(F.col("vec_id") < 0), k=3, nlist=2
-    )
-    assert out.count() == 0
-    assert [f.name for f in out.schema.fields] == [
-        "query_id", "rank", "item_id", "rrf_score", "n_lists", "best_rank",
-    ]
 
 
 # -------------------------------------------------- load() plan memo

@@ -1,6 +1,5 @@
-"""Round-7 additions: index-pair corpus-drift guard, persisted
-vec_col in the ANN index metadata, and the portable-tier cache
-release hook."""
+"""Round-7 additions: persisted vec_col in the ANN index metadata and
+the portable-tier cache release hook."""
 
 from __future__ import annotations
 
@@ -20,41 +19,6 @@ def _clean_tables(spark, *prefixes):
         for suffix in ("_vecs", "_bands", "_cells", "__annmeta"):
             spark.sql(f"DROP TABLE IF EXISTS {t}{suffix}")
             shutil.rmtree(f"{wh}/{t}{suffix}", ignore_errors=True)
-
-
-def test_rrf_indexed_refuses_drifted_index_pair(spark):
-    """Appending a batch to only ONE of the two fused indexes must be
-    an error, not a silent candidate drop: rrf_ann_indexed scores both
-    tiers' candidates against {lsh_table}_vecs, so a lagging LSH index
-    would silently lose the IVF tier's new matches (the documented
-    bit-identity with the two-searcher composition would break)."""
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    qs = emb.filter(F.col("vec_id") % 25 == 0)
-    corpus = emb.filter(F.col("vec_id") % 25 != 0)
-    half_a = corpus.filter(F.col("vec_id") % 2 == 0)
-    half_b = corpus.filter(F.col("vec_id") % 2 == 1)
-
-    _clean_tables(spark, "t_r7_lsh", "t_r7_ivf")
-    V.save_lsh_topk_index(half_a, "t_r7_lsh", num_buckets=4)
-    V.save_ivf_topk_index(half_a, "t_r7_ivf", nlist=4)
-
-    # in sync: fuses fine
-    assert (
-        V.rrf_ann_indexed(spark, "t_r7_lsh", "t_r7_ivf", qs, k=3).count()
-        > 0
-    )
-
-    # grow only the IVF side -> fingerprints diverge -> hard error
-    V.append_ivf_topk_index(half_b, "t_r7_ivf")
-    with pytest.raises(ValueError, match="fingerprint"):
-        V.rrf_ann_indexed(spark, "t_r7_lsh", "t_r7_ivf", qs, k=3)
-
-    # catch the LSH side up -> fuses again
-    V.append_lsh_topk_index(half_b, "t_r7_lsh")
-    assert (
-        V.rrf_ann_indexed(spark, "t_r7_lsh", "t_r7_ivf", qs, k=3).count()
-        > 0
-    )
 
 
 def test_index_persists_custom_vec_col(spark):

@@ -155,10 +155,10 @@ def test_chunked_assume_wellformed(tiny_batch_spark):
         match_events(bad, kernel="chunked", assume_wellformed=True).count()
 
 
-def test_match_kernel_validation_and_env(tiny_batch_spark, monkeypatch):
-    """Unknown kernel raises; SPARK_GRAFT_MATCH_KERNEL selects the
-    chunked kernel with no parameter plumbing (the Trace-level switch,
-    since Trace.matched passes no kernel argument)."""
+def test_match_kernel_validation_and_env(tiny_batch_spark):
+    """Unknown kernel raises; Trace(kernel="chunked") selects the
+    chunked kernel at the Trace level and matches the default
+    location kernel bit for bit."""
     from pipit_spark import Trace
     from pipit_spark.operators.matching import match_events
 
@@ -169,8 +169,10 @@ def test_match_kernel_validation_and_env(tiny_batch_spark, monkeypatch):
         match_events(df, kernel="whole")
 
     a = Trace(df, cache=False).matched.toPandas()
-    monkeypatch.setenv("SPARK_GRAFT_MATCH_KERNEL", "chunked")
-    b = Trace(df, cache=False).matched.toPandas()
+    chunked = Trace(df, cache=False, kernel="chunked").matched
+    # only the chunked kernel attaches its unmatched-set broadcast
+    assert hasattr(chunked, "_unmatched_bc")
+    b = chunked.toPandas()
     pd.testing.assert_frame_equal(_sorted(a), _sorted(b)[a.columns])
 
 

@@ -179,3 +179,20 @@ def test_load_repins_nanos_conf_on_memo_hit(spark):
     b = Q.load(spark, SF, "events")
     assert b is a
     assert spark.conf.get(key) == "true"
+
+
+def test_load_memo_hit_stays_in_the_callers_session(spark):
+    """spark.newSession() shares the applicationId that keys the load()
+    memo; a hit must not hand back a frame bound to the other session.
+    The second session gets its own frame, which replaces the entry."""
+    Q.clear_state(spark)
+    other = spark.newSession()
+    try:
+        a = Q.load(spark, SF, "events")
+        b = Q.load(other, SF, "events")
+        assert a.sparkSession._jsparkSession.equals(spark._jsparkSession)
+        assert b.sparkSession._jsparkSession.equals(other._jsparkSession)
+        assert Q.load(other, SF, "events") is b
+        assert b.count() == a.count()
+    finally:
+        Q.clear_state(spark)

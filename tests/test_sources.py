@@ -484,6 +484,49 @@ def test_otf2_parse_packs_whole_locations(spark, write_otf2_archive, frames):
     pd.testing.assert_frame_equal(rows, per_file)
 
 
+def _hpctoolkit_read(spark, db):
+    """(rows, partition of each (process, thread), partition count) of
+    a read_hpctoolkit(order="process") frame."""
+    from pyspark.sql import functions as F
+
+    from pipit_spark.sources.hpctoolkit import read_hpctoolkit
+
+    events = read_hpctoolkit(spark, db, order="process")
+    pdf = (
+        events.withColumn("attributes", F.to_json("attributes"))
+        .withColumn("pid", F.spark_partition_id())
+        .toPandas()
+    )
+    parts = pdf.groupby(["process", "thread"]).pid.nunique()
+    rows = pdf.drop(columns="pid").sort_values("event_id")
+    return rows.reset_index(drop=True), parts, events.rdd.getNumPartitions()
+
+
+def test_hpctoolkit_parse_packs_whole_lines(spark, tmp_path):
+    """HPCToolkit trace lines pack into byte-balanced parse tasks like
+    OTF2 location files: a 16-thread db parses in at most
+    defaultParallelism tasks, every (process, thread) lands in exactly
+    one partition, and the rows equal a one-task-per-line read as a
+    multiset."""
+    from tools.synth_hpctoolkit import synthesize
+
+    db = str(tmp_path / "db")
+    synthesize(db, 16, 40)
+    rows, parts, n_parts = _hpctoolkit_read(spark, db)
+    assert n_parts <= spark.sparkContext.defaultParallelism
+    assert len(parts) == 16 and (parts == 1).all()
+
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1")  # one task per trace line
+    try:
+        per_line, _parts, n_lines = _hpctoolkit_read(spark, db)
+    finally:
+        spark.conf.set(key, old)
+    assert n_lines == 16
+    pd.testing.assert_frame_equal(rows, per_line)
+
+
 def test_pack_locations_balances_bytes():
     """Largest file first into the lightest group: one 4x file and
     fifteen unit files split into four groups whose loads differ by at
