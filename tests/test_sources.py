@@ -431,29 +431,35 @@ def test_otf2_packed_id_overflow_guard(tmp_path):
     assert read_location_events(str(evt), (1 << 23) - 1, 255, **common) == []
 
 
-# ---------------------------------------------- OTF2 parse-task packing
-def _packed_read(spark, archive):
-    """(rows, partition of each location, partition count, rule bound)
-    of a read_otf2_native(order="process") frame."""
+# ------------------------------------- binary-reader parse-task packing
+def _partitioned_rows(events):
+    """(rows sorted by event_id, partitions per (process, thread),
+    partition count) of a reader's events frame."""
     from pyspark.sql import functions as F
 
-    from pipit_spark.sources.otf2_native import read_otf2_native
-
-    events = read_otf2_native(spark, archive, order="process")[0]
     pdf = (
         events.withColumn("attributes", F.to_json("attributes"))
         .withColumn("pid", F.spark_partition_id())
         .toPandas()
     )
     parts = pdf.groupby(["process", "thread"]).pid.nunique()
+    rows = pdf.drop(columns="pid").sort_values("event_id")
+    return rows.reset_index(drop=True), parts, events.rdd.getNumPartitions()
+
+
+def _packed_read(spark, archive):
+    """(rows, partition of each location, partition count, rule bound)
+    of a read_otf2_native(order="process") frame."""
+    from pipit_spark.sources.otf2_native import read_otf2_native
+
+    events = read_otf2_native(spark, archive, order="process")[0]
     total = sum(
         os.path.getsize(os.path.join(archive, "traces", f))
         for f in os.listdir(os.path.join(archive, "traces"))
     )
     max_bytes = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
     bound = max(spark.sparkContext.defaultParallelism, -(-total // max_bytes))
-    rows = pdf.drop(columns="pid").sort_values("event_id")
-    return rows.reset_index(drop=True), parts, events.rdd.getNumPartitions(), bound
+    return (*_partitioned_rows(events), bound)
 
 
 @pytest.mark.parametrize(
@@ -484,35 +490,22 @@ def test_otf2_parse_packs_whole_locations(spark, write_otf2_archive, frames):
     pd.testing.assert_frame_equal(rows, per_file)
 
 
-def _hpctoolkit_read(spark, db):
-    """(rows, partition of each (process, thread), partition count) of
-    a read_hpctoolkit(order="process") frame."""
-    from pyspark.sql import functions as F
-
-    from pipit_spark.sources.hpctoolkit import read_hpctoolkit
-
-    events = read_hpctoolkit(spark, db, order="process")
-    pdf = (
-        events.withColumn("attributes", F.to_json("attributes"))
-        .withColumn("pid", F.spark_partition_id())
-        .toPandas()
-    )
-    parts = pdf.groupby(["process", "thread"]).pid.nunique()
-    rows = pdf.drop(columns="pid").sort_values("event_id")
-    return rows.reset_index(drop=True), parts, events.rdd.getNumPartitions()
-
-
 def test_hpctoolkit_parse_packs_whole_lines(spark, tmp_path):
     """HPCToolkit trace lines pack into byte-balanced parse tasks like
     OTF2 location files: a 16-thread db parses in at most
     defaultParallelism tasks, every (process, thread) lands in exactly
     one partition, and the rows equal a one-task-per-line read as a
     multiset."""
+    from pipit_spark.sources.hpctoolkit import read_hpctoolkit
     from tools.synth_hpctoolkit import synthesize
 
     db = str(tmp_path / "db")
     synthesize(db, 16, 40)
-    rows, parts, n_parts = _hpctoolkit_read(spark, db)
+
+    def read():
+        return _partitioned_rows(read_hpctoolkit(spark, db, order="process"))
+
+    rows, parts, n_parts = read()
     assert n_parts <= spark.sparkContext.defaultParallelism
     assert len(parts) == 16 and (parts == 1).all()
 
@@ -520,7 +513,7 @@ def test_hpctoolkit_parse_packs_whole_lines(spark, tmp_path):
     old = spark.conf.get(key)
     spark.conf.set(key, "1")  # one task per trace line
     try:
-        per_line, _parts, n_lines = _hpctoolkit_read(spark, db)
+        per_line, _parts, n_lines = read()
     finally:
         spark.conf.set(key, old)
     assert n_lines == 16
