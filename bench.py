@@ -130,6 +130,17 @@ def cooling_box(steady_totals: list[float]) -> bool:
     )
 
 
+def warmup(spark, sf_dir: str) -> None:
+    """JVM codegen, parquet reader init, Arrow + python worker pool
+    spin-up — so per-query timings measure plans, not process startup
+    (a real cluster amortizes these once per executor)."""
+    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    warm = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    warm.groupBy("n_regionkey").applyInPandas(
+        lambda pdf: pdf.head(1), schema=warm.schema
+    ).count()
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0)
@@ -140,14 +151,7 @@ def main() -> None:
 
     spark = get_spark(app_name="pipit-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
-    # warmup: JVM codegen, parquet reader init, Arrow + python worker
-    # pool spin-up — so per-query timings measure plans, not process
-    # startup (a real cluster amortizes these once per executor)
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    warm = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    warm.groupBy("n_regionkey").applyInPandas(
-        lambda pdf: pdf.head(1), schema=warm.schema
-    ).count()
+    warmup(spark, sf_dir)
 
     registry = Q.queries()
     names = sys.argv[1:] or HEADLINE

@@ -27,8 +27,7 @@ MATCH PARTITIONS. The pass hashes by location, and the default
 partition count (cluster parallelism) can put tens of millions of
 rows into every emit sort — 37 M-row sorts OOM a stock 8 g / 32-task
 box, while at one location per task (~9.3 M rows,
-SPARK_GRAFT_MATCH_PARTITIONS=128 below or Trace(match_partitions=))
-the SAME stock box clears 1.2 B events in 892.5 s — faster than a
+Trace(match_partitions=128)) the SAME stock box clears 1.2 B events in 892.5 s — faster than a
 24 g run at the default. cluster_conf()'s ~500k-rows/task guidance
 is the general form; effective partitions cap at the location count.
 """
@@ -72,8 +71,7 @@ def main() -> None:
         # match partitions: since r11 the chunked pass SELF-SIZES at
         # ~10M rows/task (one cheap count; the heap-floor rule), so no
         # explicit sizing is needed here — stock 8 g clears 1.2 B on
-        # the defaults. SPARK_GRAFT_MATCH_PARTITIONS /
-        # Trace(match_partitions=) still override; with
+        # the defaults. Trace(match_partitions=) still overrides; with
         # assume_wellformed=True (fully lazy, no count job) size
         # explicitly.
         t = Trace.from_parquet(spark, events_path, cache=False,

@@ -656,25 +656,6 @@ def _chunked_match(
     return out
 
 
-class _ChunkedState:
-    """Carried state of the chunked emit pass for ONE location.
-
-    ``stack1`` replays pass-1 matching (ALL open Enters, matched or
-    not); ``call_stack`` replays pass-2 (open Enters KNOWN matched via
-    the audit). Entries are shared mutable lists
-    ``[name, ref_kind, ref, depth, parent_id, parent_name, node,
-    parent_node, enter_known_matched]`` where ``ref`` is an in-batch
-    row position (``ref_kind='b'``) until the batch ends, then a
-    pending-store token (``'p'``). Only known-matched open Enters are
-    ever buffered — resident rows ∝ stack depth."""
-
-    __slots__ = ("stack1", "call_stack")
-
-    def __init__(self) -> None:
-        self.stack1: list[list] = []
-        self.call_stack: list[list] = []
-
-
 def _chunked_emit_plan(
     enc: DataFrame,
     out_schema: T.StructType,

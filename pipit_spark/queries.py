@@ -17,6 +17,8 @@ worst-case double-summation error.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from . import schema as S
@@ -28,6 +30,8 @@ from .llm import quality as QL
 from .llm import sampling as _SP
 from .llm import pipeline as _PL
 from .llm import scoring as _SC
+from .llm import sketches as _SK
+from .llm import multimodal as _MM
 
 
 def _t(sf_dir: str, name: str) -> str:
@@ -161,20 +165,39 @@ def _canonicalize(df: DataFrame, table: str) -> DataFrame:
     return df.select(*out) if changed else df
 
 
-# (application_id, sf_dir, table) -> canonicalized DataFrame. A loaded
-# frame is an immutable PLAN (unresolved relation + schema), not data:
-# memoizing it shares the driver-side file listing + parquet footer
-# read + canonicalize construction (~0.1 s of py4j/metadata work per
-# call) across the many load() calls of one bench pass / query batch,
-# while every EXECUTION still scans the parquet inputs. Cleared by
-# clear_state() alongside the trace memo, so each steady bench pass
-# re-lists every table once — same within-pass-sharing contract as the
-# matched-frame memo. Keyed by applicationId so a stopped session's
-# dead frames are never handed to a new session; a hit is reused only
-# when the frame belongs to the caller's own session, because
-# spark.newSession() shares the applicationId but not the session conf
-# or temp views the frame's plan resolves against.
-_load_memo: dict[tuple[str, str, str], DataFrame] = {}
+# The engine's one process-wide memo, behind load() and derived_trace():
+# (applicationId, sf_dir, table) -> canonicalized DataFrame, and
+# (applicationId, sf_dir, None) -> the derived Trace. A loaded frame is
+# an immutable PLAN (unresolved relation + schema), not data: memoizing
+# it shares the driver-side file listing + parquet footer read +
+# canonicalize construction (~0.1 s of py4j/metadata work per call)
+# across the many load() calls of one bench pass / query batch, while
+# every EXECUTION still scans the parquet inputs. The Trace entry shares
+# its persisted matched frame the same way. Keyed by applicationId so a
+# stopped session's dead frames are never handed to a new session; an
+# entry is reused only when its frame belongs to the caller's own JVM
+# session, because spark.newSession() shares the applicationId but not
+# the session conf or temp views the frame's plan resolves against —
+# on a mismatch the entry is rebuilt in the caller's session and
+# replaces the old one. clear_state() empties it, so each steady bench
+# pass re-lists every table and re-matches the trace once.
+_memo: dict[tuple[str, str, str | None], DataFrame | Trace] = {}
+
+
+def _memoized(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str | None,
+    build: Callable[[], DataFrame | Trace],
+):
+    key = (spark.sparkContext.applicationId, sf_dir, name)
+    hit = _memo.get(key)
+    if hit is not None:
+        frame = hit.events if isinstance(hit, Trace) else hit
+        if frame.sparkSession._jsparkSession.equals(spark._jsparkSession):
+            return hit
+    _memo[key] = hit = build()
+    return hit
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -184,23 +207,19 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # UTC session. Our get_spark() sets this, but the driver may hand
     # us its own session on a machine with any default TZ — pin it here
     # (runtime conf, same pattern as the nanosAsLong toggle). Both are
-    # pinned on EVERY call — including memo hits — because the pins
-    # govern later query execution, not the memoized plan.
+    # pinned on EVERY call — including hits in the session-keyed memo —
+    # because the pins govern later query execution, not the memoized
+    # plan.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    cached = _load_memo.get(key)
-    if cached is not None and cached.sparkSession._jsparkSession.equals(
-        spark._jsparkSession
-    ):
-        return cached
-    if name == "events":
-        df = load_events(spark, _t(sf_dir, name))
-    else:
-        df = _canonicalize(spark.read.parquet(_t(sf_dir, name)), name)
-    _load_memo[key] = df
-    return df
+
+    def build() -> DataFrame:
+        if name == "events":
+            return load_events(spark, _t(sf_dir, name))
+        return _canonicalize(spark.read.parquet(_t(sf_dir, name)), name)
+
+    return _memoized(spark, sf_dir, name, build)
 
 
 def load_events(spark: SparkSession, path: str) -> DataFrame:
@@ -386,34 +405,33 @@ def trace_events_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_trace_memo: dict[str, Trace] = {}
-
-
 def clear_state(spark: SparkSession) -> None:
-    """Drop every engine-side memo and cached frame: the trace memo's
-    persisted matched frames plus anything operators persisted internally
-    (shingle tables, signatures). After this, a query repeat re-does ALL
-    data work — used by bench.py to separate steady-state plan execution
-    from one-time JVM/codegen warmup without hiding any recomputation."""
-    for t in _trace_memo.values():
-        t.unpersist()
-    _trace_memo.clear()
-    _load_memo.clear()
+    """Drop every engine-side memo and cached frame: the session-keyed
+    memo behind load() and derived_trace() (its Traces' persisted
+    matched frames unpersisted first) plus anything operators persisted
+    internally (shingle tables, signatures). After this, a query repeat
+    re-does ALL data work — used by bench.py to separate steady-state
+    plan execution from one-time JVM/codegen warmup without hiding any
+    recomputation."""
+    app = spark.sparkContext.applicationId
+    for (app_id, _, _), v in _memo.items():
+        # a stopped context's frames died with it; unpersist would raise
+        if app_id == app and isinstance(v, Trace):
+            v.unpersist()
+    _memo.clear()
     V.release_portable_caches()
     D.release_block_caches()
     spark.catalog.clearCache()
 
 
 def derived_trace(spark: SparkSession, sf_dir: str) -> Trace:
-    # Memoized per sf_dir, mirroring the reference Trace's own
-    # compute-once discipline for derived columns (pipit/trace.py:111,
+    # Memoized per (session, sf_dir), mirroring the reference Trace's
+    # own compute-once discipline for derived columns (pipit/trace.py:111,
     # 202): the fused matching pass persists once and every trace gate
     # query reuses it instead of re-deriving + re-matching.
-    t = _trace_memo.get(sf_dir)
-    if t is None:
-        t = Trace(trace_events_frame(spark, sf_dir))
-        _trace_memo[sf_dir] = t
-    return t
+    return _memoized(
+        spark, sf_dir, None, lambda: Trace(trace_events_frame(spark, sf_dir))
+    )
 
 
 # the oracle's mirror of the derivation (DuckDB dialect)
@@ -4414,871 +4432,118 @@ FROM infl FULL OUTER JOIN suff ON infl.process = suff.process
 # ===================================================================== #
 # registry
 # ===================================================================== #
-# r07 driver window (slots 1-50) — freshness rotation (r06 verdict
-# item 1: "no gate's latest driver row predates the last commit
-# touching its implementing module"). After r06, every one of the 173
-# gates has a hash-green latest row; what remains is evidence AGE.
-# The window holds, in priority order:
-#   A. all 34 gates whose latest driver row is r03 (the oldest
-#      evidence in the registry);
-#   B. the 7 llm/similarity.py-backed gates whose code changed after
-#      their last row — 5 last-checked r04 that predate the r06
-#      +933-line rewrite, plus emb_pq_topk / emb_ivfpq_topk whose
-#      gate configs moved onto the compressed-codebook path in r07;
-#   C. the 9 llm/dedup.py- / llm/quality.py-backed gates last checked
-#      r04 (both modules changed in r05/r06: shingle-scan
-#      repartition drop, survivor_broadcast pair index, license ops).
-# Left for the r08 rotation (no slots): doc_winnow, doc_winnow_pairs,
-# doc_boilerplate (llm/text.py's r05 winnow/boilerplate changes
-# postdate their r04 rows; local parity covers them), then the r04
-# remainder oldest-first.
-_R07_WINDOW = [
-    # A. r03-stale (34)
-    "trace_comm_by_process", "trace_message_histogram",
-    "trace_comm_over_time",
-    "q6_forecast_revenue", "window_topk_orders", "sessionize_events",
-    "asof_attribution", "events_funnel", "events_retention",
-    "profile_lineitem",
-    "doc_text_stats", "doc_token_frequencies", "doc_token_counts",
-    "doc_lang_id", "doc_fingerprint", "doc_vocab", "doc_repetition",
-    "doc_heuristic_filter", "doc_pii_redact", "doc_corpus_summary",
-    "doc_exact_dedup", "doc_minhash", "doc_ngram_jaccard",
-    "doc_incremental", "doc_simhash", "doc_embedding_dedup",
-    "doc_sample_stratified", "doc_pack_sequences", "doc_mix_sources",
-    "doc_token_budget", "doc_decontaminate",
-    "emb_cosine_pairs", "emb_norm_stats", "emb_quantize",
-    # B. similarity.py-backed, code newer than last driver row (7)
-    "emb_semantic_dedup", "emb_lsh_ann", "emb_ivf_topk_exact",
-    "emb_pq_topk_exact", "emb_ivfpq_topk_exact",
-    "emb_pq_topk", "emb_ivfpq_topk",
-    # C. dedup.py/quality.py-backed r04-stale (8) + the r07 in-round
-    # addition (1): the band-join skew hatch under a full value oracle.
-    # doc_dedup_lines_within yields its slot (its r04 row is green,
-    # doc_dedup_lines stays and exercises the same line-dedup path,
-    # which no r05-r07 commit touched).
-    "doc_fuzzy_dedup", "doc_containment", "doc_edit_pairs",
-    "doc_simhash_pairs", "doc_dedup_quality", "doc_incremental_bloom",
-    "doc_incremental_neardup", "doc_dedup_lines",
-    "doc_minhash_lsh_capped",
-]
-# r08 carry-overs (first candidates for the next rotation): gates
-# whose implementing module changed in r07 but that did NOT fit this
-# window — llm/dedup.py-backed (max_bucket landed r07):
-# doc_minhash_lsh, doc_minhash_lsh_fast, doc_dedup_clusters,
-# doc_neardup_cluster_summary, doc_dedup_lines_within, doc_despan;
-# llm/similarity.py-backed (index-lifecycle hardening + PQ reform
-# landed r07, last driver rows r05/r06): emb_rrf_fusion_indexed,
-# emb_lsh_topk, emb_ivf_topk_portable, emb_cell_balance,
-# emb_ann_recall, emb_hamming_topk, emb_rrf_fusion; then the
-# r04-stale remainder by age.
-
-# r08 driver window (slots 1-50) — the r07 verdict item 1 burn-down,
-# recomputed this round at METHOD granularity (gate body → Trace
-# method → delegating operator module, tools-free audit in the r08
-# session): modules that changed during r07 are llm/dedup.py
-# (max_bucket hatch), llm/similarity.py (index-lifecycle + PQ
-# reform), llm/sketches.py (KLL tier), operators/comm.py
-# (empty-trace histograms). EVERY gate backed by one of those whose
-# latest driver row predates r07 is in this window — 39 gates, a
-# superset of the 13 pre-declared r08 carry-overs (the method-level
-# map also catches emb_topk_pandas/emb_cosine_topk/emb_ivf_topk/
-# doc_hybrid_retrieval and the ten comm.py trace gates the alias-
-# level list missed). doc_dedup_lines_within (pre-declared) is
-# quality.py-backed on the method map — quality.py did NOT change in
-# r07 — but it keeps its promised slot anyway. NOTE the round-8
-# freshness discipline this window assumes: r08 code changes are
-# CONFINED to modules whose driver-gated surface is fully inside
-# this window (queries.py gate configs, llm/sketches.py) or that
-# back no driver gate at all (sources/*, session.py); in particular
-# llm/similarity.py's low-severity _write_annmeta advice is DEFERRED
-# to r09 because touching it would restale its ten r07-green gates
-# (emb_semantic_dedup, emb_lsh_ann, the four _exact twins,
-# emb_pq_topk, emb_ivfpq_topk, emb_quantize, emb_norm_stats,
-# emb_cosine_pairs) — 10 slots this window cannot hold.
-_R08_WINDOW = [
-    # A. llm/dedup.py-backed, row < r07 (13)
-    "doc_minhash_lsh", "doc_minhash_lsh_fast", "doc_dedup_clusters",
-    "doc_neardup_cluster_summary", "doc_despan",
-    "doc_contamination_report", "doc_cluster_summary",
-    "doc_decontaminate_spans", "doc_dup_degree", "doc_exact_dups",
-    "doc_dup_inflation", "doc_snapshot_overlap", "doc_source_jaccard",
-    # B. llm/similarity.py-backed, row < r07 (14)
-    "emb_rrf_fusion_indexed", "emb_lsh_topk", "emb_ivf_topk_portable",
-    "emb_cell_balance", "emb_ann_recall", "emb_hamming_topk",
-    "emb_rrf_fusion", "emb_decontaminate", "emb_hard_negatives",
-    "emb_isolation", "emb_topk_pandas", "emb_cosine_topk",
-    "emb_ivf_topk", "doc_hybrid_retrieval",
-    # C. llm/sketches.py-backed, row < r07 (2)
-    "doc_cms_tokens", "doc_quantile_sketch",
-    # D. operators/comm.py-backed, row < r07 (10)
-    "trace_latency_histogram", "trace_message_latency",
-    "trace_comm_matrix_over_time", "trace_comm_by_function",
-    "trace_comm_locality", "trace_comm_count", "trace_comm_matrix",
-    "trace_late_senders", "trace_late_receivers",
-    "trace_wait_attribution",
-    # E. r08 in-round changes (2): the reformed bounded-subset
-    # profile gate (r07 verdict item 2) and the new KLL contract
-    # gate (item 8; sketches.py grew kll_rank_check this round)
-    "profile_lineitem", "doc_kll_quantiles",
-    # F. the r07 comment's promised slots (4)
-    "doc_dedup_lines_within", "doc_winnow", "doc_winnow_pairs",
-    "doc_boilerplate",
-    # G. r04-stale burn-down, oldest evidence first (5)
-    "trace_flat_profile", "trace_load_imbalance", "trace_multirun",
-    "trace_detect_pattern", "doc_bpe",
-]
-# r09 slot accounting (the r08 comment's carry-over plan, resolved
-# against the hard freshness criterion "no gate's latest driver row
-# may predate the last commit touching its implementing module"):
-#
-#   * llm/similarity.py changes this round (the deferred
-#     _write_annmeta fix, r08 verdict item 2) — at module
-#     granularity that restales ALL 24 similarity-backed gates: the
-#     ten r07-green ones the r08 comment named AND the 14 that got
-#     r08 rows (their rows predate an r09 commit just the same).
-#     All 24 take window slots — restales are mandatory, recency
-#     burn-down is not.
-#   * operators/matching.py changes this round (the chunked
-#     carried-stack kernel, r08 verdict item 1) — restales its three
-#     gates: trace_match_inc, trace_cct, trace_caller_callee.
-#   * 24 + 3 = 27 mandatory slots; the remaining 23 are exactly the
-#     r04-stale list below — the full burn-down the r08 comment
-#     promised. The r05-stale remainder (26 gates, modules unchanged
-#     since r05 so the freshness criterion holds for them on their
-#     existing rows) rotates in r10.
-#
-# Freshness discipline for r09 code changes: confined to
-# operators/matching.py + llm/similarity.py (fully window-covered
-# above), modules backing no driver gate (session.py, sources/*,
-# tools/, tests/, examples/, docs), and this window comment.
-# DELIBERATE DEFERRAL: the low ADVICE item asking for **kw
-# passthrough on Trace.from_hpctoolkit and a cache/order kwarg on
-# Trace.from_parquet is NOT done this round — trace.py is the
-# implementing module of trace_session_stats (r06 row) and
-# trace_flat_profile (r08 row), neither of which fits this window
-# (50/50 slots are spoken for by the mandatory restales + the
-# promised r04 burn-down). It is first in line for r10, windowed
-# with those two gates — the same justified-deferral pattern r08
-# used for _write_annmeta itself.
-_R09_WINDOW = [
-    # A. operators/matching.py-backed — restaled by the chunked
-    # carried-stack kernel (3)
-    "trace_match_inc", "trace_cct", "trace_caller_callee",
-    # B. llm/similarity.py-backed — restaled by the _write_annmeta
-    # type fix (24). B1: the ten whose latest row is r07
-    "emb_quantize", "emb_cosine_pairs", "emb_norm_stats",
-    "emb_ivf_topk_exact", "emb_pq_topk_exact", "emb_pq_topk",
-    "emb_ivfpq_topk_exact", "emb_ivfpq_topk", "emb_lsh_ann",
-    "emb_semantic_dedup",
-    # B2: the 14 whose latest row is r08
-    "emb_rrf_fusion_indexed", "emb_lsh_topk", "emb_ivf_topk_portable",
-    "emb_cell_balance", "emb_ann_recall", "emb_hamming_topk",
-    "emb_rrf_fusion", "emb_decontaminate", "emb_hard_negatives",
-    "emb_isolation", "emb_topk_pandas", "emb_cosine_topk",
-    "emb_ivf_topk", "doc_hybrid_retrieval",
-    # C. r04-stale burn-down, the full remainder (23)
-    "trace_diff", "trace_slow_calls", "trace_folded_stacks",
-    "q2_min_cost_supplier", "q9_product_profit", "q11_important_stock",
-    "q16_parts_supplier_count", "q20_excess_stock",
-    "q21_waiting_orders", "doc_line_fluency", "doc_fluency",
-    "doc_pretokenize", "doc_novelty", "doc_pattern_stats",
-    "doc_vocab_coverage", "doc_corpus_card", "doc_corpus_diff",
-    "doc_model_score", "doc_dsir", "doc_select_dsir", "doc_chunk",
-    "doc_chunked_training_set", "doc_sample_exact_k",
-]
-# r10 carry-overs: the r05-stale remainder (26 gates, oldest
-# evidence after this round), plus trace_session_stats +
-# trace_flat_profile alongside the deferred trace.py API advice
-# (see the deferral note above).
-#
-# r10 slot accounting (the plan above, resolved against the hard
-# freshness criterion):
-#
-#   * trace.py changes this round (the deferred public-API batch:
-#     from_hpctoolkit **kw, from_parquet(**kw -> cache=/kernel=/...),
-#     Trace(kernel=/assume_wellformed=/audit=) plumbing) — restales
-#     its two gates per the judge's attribution table:
-#     trace_session_stats (already in the r06 burn-down group) and
-#     trace_flat_profile (r08 row -> one extra mandatory slot).
-#   * operators/matching.py changes this round (the JVM
-#     window-function audit now default, an audit-skipping mode,
-#     broadcast unmatched set, bounded audit collect — r09 verdict
-#     item 3 + all three ADVICE items) — restales its three gates:
-#     trace_match_inc, trace_cct, trace_caller_callee.
-#   * burn-down pools: all 26 r05-stale gates + the 24 r06-stale
-#     gates = 50; with the 4 extra mandatory restales that is 54
-#     needs for 50 slots. Restales are mandatory, recency burn-down
-#     is not (the r09 rule): FOUR r06-stale pure-SQL TPC-H gates —
-#     q8_market_share, q13_customer_distribution, q18_large_volume,
-#     q22_idle_customers — keep their r06-green rows and rotate in
-#     r11. Their implementing surface is SQL text in this file,
-#     unchanged since r01, so the freshness criterion holds on their
-#     existing rows, and the r09 verdict's done-criterion ("after
-#     r10, no gate's latest driver row predates r06") still holds.
-#
-# doc_simhash_pairs (r09 verdict item 6) stays OUT of this window,
-# deliberately: getting it under the 8 s tripwire without weakening
-# the exact-semantics oracle needs a plan reform inside
-# llm/dedup.py (the winnow_pairs-style fix: self-join instead of
-# collect_list buckets, oracle extended alongside) — and touching
-# llm/dedup.py restales its ~15 driver gates, which this window
-# cannot hold on top of the 50 above. It keeps its audited
-# 14 s budget exception (tools/time_registry.py) this round; the
-# reform is FIRST IN LINE for r11, whose window has only the four
-# deferred TPC-H gates as carry-overs (same justified-deferral
-# pattern as r08 _write_annmeta and r09 trace.py).
-#
-# Freshness discipline for r10 code changes: confined to trace.py +
-# operators/matching.py (window-covered above), modules backing no
-# driver gate (sources/hpctoolkit.py — the ctx_id rename; session.py;
-# tools/; tests/; examples/; docs), and this window comment.
-_R10_WINDOW = [
-    # A. trace.py-backed — restaled by the public-API batch (2)
-    "trace_flat_profile", "trace_session_stats",
-    # B. operators/matching.py-backed — restaled by the SQL audit /
-    # audit-skipping mode / broadcast+bounded-collect fixes (3)
-    "trace_match_inc", "trace_cct", "trace_caller_callee",
-    # C. r05-stale burn-down, the full remainder (26)
-    "doc_bigram_lm", "doc_bigram_lm_merged", "doc_bm25",
-    "doc_card_scan", "doc_clean_report", "doc_length_buckets",
-    "doc_length_percentiles", "doc_lm_score", "doc_pack_manifest",
-    "doc_perplexity_buckets", "doc_shuffle", "doc_source_tfidf",
-    "doc_split", "doc_tfidf", "events_burst_windows",
-    "events_common_paths", "media_decode", "media_decode_real",
-    "media_near_dups", "q3_shipping_priority",
-    "q5_local_supplier_volume", "q7_nation_volume", "rollup_orders",
-    "web_dedup_urls", "web_domain_stats", "web_url_features",
-    # D. r06-stale burn-down (19 of 24: trace_session_stats rides in
-    # group A; the four deferred TPC-H gates are named in the
-    # accounting comment above)
-    "doc_clean_corpus", "doc_license_mix", "doc_licensed_pack",
-    "doc_licenses", "doc_structure_stats", "doc_training_set",
-    "events_outliers", "events_props_stats", "q10_returned_items",
-    "q12_priority_lines", "q14_promo_revenue", "q15_top_supplier",
-    "q17_small_quantity", "q19_disjunctive_revenue",
-    "q1_pricing_summary", "q4_order_priority", "trace_idle_time",
-    "trace_time_profile", "web_pagerank",
-]
-
-# ---- r11 window accounting -------------------------------------------
-# Slot budget: 50 (the driver hashes the FIRST 50 registry entries).
-#
-#   * llm/dedup.py changed this round (the simhash_pairs plan reform —
-#     count-first bucket filter + streaming self-join + packed-word
-#     pre-dedup hamming verify — that retired the gate's 14 s budget
-#     exception, r10 verdict item 1). Module-granularity restale of
-#     ALL 26 dedup-backed gates (the r10 comment's "~15" was an
-#     undercount; the exact attribution is the 26 gates whose query
-#     functions call into llm/dedup.py, group A below).
-#   * operators/matching.py changed this round (the r10 ADVICE batch:
-#     cache= plumbed through the audit-skipping probe, aborted-probe
-#     persist+broadcast release on re-raise, structural
-#     PythonException retry gate, persisted audited-retry branch) —
-#     restales its three gates (group B).
-#   * trace.py changed this round (cache= plumbing in `matched`,
-#     broadcast destroy in `unpersist`) — restales its two gates
-#     (group C, same attribution as r10).
-#   * group D: the four r06 pure-SQL TPC-H gates q8/q13/q18/q22,
-#     deferred from the r10 window with rationale — due now.
-#   * group E: r07-stale burn-down, 15 of the 26 not already covered
-#     by group A (13 of the 39 r07-stale gates are dedup-backed and
-#     ride group A). The 11 deferred to r12 — doc_corpus_summary,
-#     doc_dedup_lines, doc_heuristic_filter, doc_incremental,
-#     doc_incremental_bloom, doc_mix_sources, doc_pack_sequences,
-#     doc_repetition, doc_sample_stratified, doc_token_budget,
-#     doc_token_frequencies — are pure recency burn-down (their
-#     implementing modules are unchanged since their r07-green rows),
-#     the r09/r10-accepted deferral pattern.
-#
-# 26 + 3 + 2 + 4 + 15 = 50. After this run, mandatory freshness holds
-# everywhere (no gate's latest row predates the last commit touching
-# its module) and the oldest pure-recency evidence is the 11 named
-# r07 gates plus the r08 cohort.
-_R11_WINDOW = [
-    # A. llm/dedup.py-backed — restaled by the simhash_pairs reform (26)
-    "doc_cluster_summary", "doc_containment", "doc_contamination_report",
-    "doc_decontaminate", "doc_decontaminate_spans", "doc_dedup_clusters",
-    "doc_dedup_quality", "doc_despan", "doc_dup_degree",
-    "doc_dup_inflation", "doc_edit_pairs", "doc_embedding_dedup",
-    "doc_exact_dedup", "doc_exact_dups", "doc_fuzzy_dedup",
-    "doc_incremental_neardup", "doc_minhash", "doc_minhash_lsh",
-    "doc_minhash_lsh_capped", "doc_minhash_lsh_fast",
-    "doc_neardup_cluster_summary", "doc_ngram_jaccard", "doc_simhash",
-    "doc_simhash_pairs", "doc_snapshot_overlap", "doc_source_jaccard",
-    # B. operators/matching.py-backed — restaled by the ADVICE batch (3)
-    "trace_match_inc", "trace_cct", "trace_caller_callee",
-    # C. trace.py-backed — restaled by the cache=/unpersist plumbing (2)
-    "trace_flat_profile", "trace_session_stats",
-    # D. the four deferred r06 TPC-H gates (4)
-    "q8_market_share", "q13_customer_distribution", "q18_large_volume",
-    "q22_idle_customers",
-    # E. r07-stale burn-down (15 of 26; the 11 deferred are named in
-    # the accounting comment above)
-    "trace_comm_by_process", "trace_comm_over_time",
-    "trace_message_histogram", "asof_attribution", "events_funnel",
-    "events_retention", "sessionize_events", "window_topk_orders",
-    "q6_forecast_revenue", "doc_text_stats", "doc_token_counts",
-    "doc_lang_id", "doc_fingerprint", "doc_vocab", "doc_pii_redact",
-]
-
-
-def queries():
-    """Registry order is load-bearing: the driver's correctness gate
-    checks the FIRST 50 entries per round.
-
-    Driver-coverage history (from CORRECTNESS_r0*.json): r01+r02
-    checked the first-50 of the original order (TPC-H + trace + events
-    gates); r03 a rotated window (trace + core LLM gates); r04 the
-    56-strong never-checked backlog — 49/50 hash-green, the one red
-    being media_decode's ERR (list-typed feat_bytes broke the driver's
-    canonicalizer; the gate now serializes features to a string).
-    After r04, 114 of 137 gates have at least one driver-hash-green
-    row and 23 have never been driver-checked.  This round (r05) the
-    registry grew to 159 and the window holds ALL 44 never-driver-
-    checked gates: the 23 from the r04 backlog (media_decode + tail
-    additions + the emb_* approximate-ANN rows-only gates), the 12
-    round-5 first-wave additions (web module, bigram LM, cluster
-    audits, bursts, isolation, caller-callee, second-wave audits), and
-    the 7 round-5 in-round additions (web_pagerank, emb_decontaminate,
-    media_near_dups, emb_lsh_topk — the value-checked approximate-ANN
-    path — doc_length_percentiles, events_common_paths,
-    doc_bigram_lm_merged), the three round-5 session-3 additions
-    (media_decode_real — the real-codec proof, emb_ivf_topk_portable
-    and emb_rrf_fusion — the value-checked approximate-ANN twins),
-    plus 5 stale reconfirmations whose last green row is r02
-    (q8/q13/q18 yielded their window slots to the three new gates and
-    sit in the tail on their r01+r02 green rows).  The other 10
-    r02-stale gates moved to the tail
-    end (r01/r02 driver-green rows exist for all of them); the rest of
-    the tail is driver-hash-green in r03 or r04.  The round-5
-    session-4 additions (doc_licenses, doc_license_mix,
-    doc_structure_stats, doc_licensed_pack — bringing the registry to
-    163) sit at the tail end with NO driver row yet (local parity
-    only); they are the first candidates for the r06 window rotation.
-
-    r11 (this round): the window is `_R11_WINDOW` above — the 31
-    mandatory restales (all 26 llm/dedup.py gates for the
-    simhash_pairs plan reform; operators/matching.py's three and
-    trace.py's two for the r10 ADVICE batch), the four r06 TPC-H
-    gates deferred from r10, and 15 of the 26 remaining r07-stale
-    gates. See the _R11_WINDOW comment for the slot accounting and
-    the 11 r07 gates deferred to r12.
-
-    r10: the window was `_R10_WINDOW` above — the 5
-    mandatory restales (trace.py's two gates for the public-API
-    batch; operators/matching.py's three for the SQL audit /
-    audit-skipping mode / ADVICE fixes) plus the full 26-gate
-    r05-stale burn-down and 19 of the 24 r06-stale gates. See the
-    _R10_WINDOW comment for the slot accounting, the four deferred
-    r06 TPC-H gates, and the doc_simhash_pairs re-audit rationale.
-
-    r09: the window was `_R09_WINDOW` above — the 27
-    mandatory restales (all 24 llm/similarity.py gates for the
-    _write_annmeta fix; the three operators/matching.py gates for
-    the chunked carried-stack kernel) plus the full 23-gate
-    r04-stale burn-down the r08 comment promised. See the
-    _R09_WINDOW comment for the slot accounting and the one
-    deliberate deferral (trace.py API advice → r10).
-
-    r08: the window was `_R08_WINDOW` above — the r07
-    verdict's item-1 burn-down. All 39 gates whose implementing
-    module changed during r07 after their last driver row (method-
-    granularity audit; see the _R08_WINDOW comment), the two r08
-    in-round changes (reformed profile_lineitem, new
-    doc_kll_quantiles), the four slots the r07 comment promised, and
-    five r04-stale re-confirmations. After this run, no gate's
-    latest driver row predates the last commit touching its
-    implementing module, and the registry's oldest evidence moves
-    toward r05 (r04-stale remainder listed in the r09 comment).
-
-    r07: the window was `_R07_WINDOW` above — a pure
-    FRESHNESS rotation. The r06 run closed every deficit class (all
-    173 gates have a hash-green latest row, zero fail/err/unchecked),
-    so r07 re-verified the oldest evidence: all 34 r03-stale gates,
-    plus every gate whose implementing module changed after its last
-    driver row (the llm/similarity.py r06 rewrite and the r07
-    compressed-PQ gate reform; the llm/dedup.py / llm/quality.py
-    r05-r06 changes). See the _R07_WINDOW comment for the slot
-    accounting and the r08 carry-overs.
-
-    r06: the window was `_R06_WINDOW` — after the
-    r05 run, 159/169 gates had a driver row (149 green; the 5 FAILs
-    were the HUGEINT oracle dtype bug, repaired this round). The
-    window now holds all 11 never-checked gates, the 5 repaired
-    FAILs, the 5 reformulated ex-`err: no_oracle` gates, and the 29
-    stalest re-confirmations (every r02-stale gate + 13 r03-stale
-    core-engine gates). After this round's run, every one of the 170
-    registry gates will have at least one driver row across r01-r06,
-    with nothing last-checked earlier than r03.
-
-    Every oracle-bearing gate — window or tail — is additionally
-    value-checked locally by tools/parity_check.py (dtype-STRICT +
-    EXACT float compare since r06, predicting the driver's hash) and
-    column-checked by tests/test_oracle_parity.
-    """
-    reg = {
-        # ---- registry body (r05 order; the r06 window is applied by
-        # the _R06_WINDOW reorder at the end of this function) -------
-        # never-driver-checked before this round (media_decode's r04
-        # row was an ERR: list-typed feat_bytes; now string-serialized)
-        "media_decode": q_media_decode,
-        "doc_clean_report": q_doc_clean_report,
-        "emb_ann_recall": q_emb_ann_recall,
-        "emb_topk_pandas": q_emb_topk_pandas,
-        "emb_ivf_topk": q_emb_ivf_topk,
-        "emb_pq_topk": q_emb_pq_topk,
-        "emb_ivfpq_topk": q_emb_ivfpq_topk,
-        "doc_minhash_lsh_fast": q_doc_minhash_lsh_fast,
-        "doc_minhash_lsh_capped": q_doc_minhash_lsh_capped,
-        "doc_shuffle": q_doc_shuffle,
-        "doc_split": q_doc_split,
-        "doc_length_buckets": q_doc_length_buckets,
-        "doc_pack_manifest": q_doc_pack_manifest,
-        "doc_perplexity_buckets": q_doc_perplexity_buckets,
-        "doc_card_scan": q_doc_card_scan,
-        "trace_message_latency": q_trace_message_latency,
-        "doc_tfidf": q_doc_tfidf,
-        "emb_hamming_topk": q_emb_hamming_topk,
-        "emb_hard_negatives": q_emb_hard_negatives,
-        "doc_bm25": q_doc_bm25,
-        "doc_decontaminate_spans": q_doc_decontaminate_spans,
-        "trace_latency_histogram": q_trace_latency_histogram,
-        "doc_source_tfidf": q_doc_source_tfidf,
-        "trace_comm_matrix_over_time": q_trace_comm_matrix_over_time,
-        # stalest re-confirmations: last driver-green in r02
-        "q3_shipping_priority": q3_shipping_priority,
-        "q5_local_supplier_volume": q5_local_supplier_volume,
-        "q7_nation_volume": q7_nation_volume,
-        "rollup_orders": q_rollup_orders,
-        "doc_exact_dups": q_doc_exact_dups,
-        # round-5 in-round additions, never driver-checked — every
-        # never-checked gate in the registry is now inside the window
-        "doc_neardup_cluster_summary": q_doc_neardup_cluster_summary,
-        "doc_dup_degree": q_doc_dup_degree,
-        "doc_length_percentiles": q_doc_length_percentiles,
-        "events_common_paths": q_events_common_paths,
-        "doc_bigram_lm_merged": q_doc_bigram_lm_merged,
-        "web_domain_stats": q_web_domain_stats,
-        "web_pagerank": q_web_pagerank,
-        "emb_decontaminate": q_emb_decontaminate,
-        "media_near_dups": q_media_near_dups,
-        "emb_lsh_topk": q_emb_lsh_topk,
-        "emb_ivf_topk_portable": q_emb_ivf_topk_portable,
-        "emb_rrf_fusion": q_emb_rrf_fusion,
-        "emb_rrf_fusion_indexed": q_emb_rrf_fusion_indexed,
-        "emb_cell_balance": q_emb_cell_balance,
-        "doc_hybrid_retrieval": q_doc_hybrid_retrieval,
-        "doc_quantile_sketch": q_doc_quantile_sketch,
-        # round-5 real-codec proof gate (displaces the q8 stale
-        # reconfirmation to the tail — q8 has r01+r02 green rows)
-        "media_decode_real": q_media_decode_real,
-        # new this round: web module, bigram LM, cluster audits,
-        # bursts, caller-callee edges (never driver-checked)
-        "web_dedup_urls": q_web_dedup_urls,
-        "web_url_features": q_web_url_features,
-        "doc_bigram_lm": q_doc_bigram_lm,
-        "doc_lm_score": q_doc_lm_score,
-        "doc_cluster_summary": q_doc_cluster_summary,
-        "doc_dup_inflation": q_doc_dup_inflation,
-        "emb_isolation": q_emb_isolation,
-        "events_burst_windows": q_events_burst_windows,
-        "trace_caller_callee": q_trace_caller_callee,
-        # ---- window boundary (entry 50) ----------------------------
-        # tail: every entry below is driver-hash-green in r03 or r04
-        "trace_match_inc": q_trace_match_inc,
-        "trace_cct": q_trace_cct,
-        "trace_time_profile": q_trace_time_profile,
-        "q1_pricing_summary": q1_pricing_summary,
-        "doc_minhash_lsh": q_doc_minhash_lsh,
-        "doc_training_set": q_doc_training_set,
-        "emb_cosine_topk": q_emb_cosine_topk,
-        "doc_clean_corpus": q_doc_clean_corpus,
-        "doc_dedup_clusters": q_doc_dedup_clusters,
-        "trace_flat_profile": q_trace_flat_profile,
-        "trace_load_imbalance": q_trace_load_imbalance,
-        "trace_multirun": q_trace_multirun,
-        "trace_detect_pattern": q_trace_detect_pattern,
-        "doc_bpe": q_doc_bpe,
-        "trace_diff": q_trace_diff,
-        "trace_slow_calls": q_trace_slow_calls,
-        "trace_folded_stacks": q_trace_folded_stacks,
-        "trace_comm_by_function": q_trace_comm_by_function,
-        "trace_comm_locality": q_trace_comm_locality,
-        "q2_min_cost_supplier": q2_min_cost_supplier,
-        "q9_product_profit": q9_product_profit,
-        "q11_important_stock": q11_important_stock,
-        "q16_parts_supplier_count": q16_parts_supplier_count,
-        "q20_excess_stock": q20_excess_stock,
-        "q21_waiting_orders": q21_waiting_orders,
-        "q8_market_share": q8_market_share,
-        "q18_large_volume": q18_large_volume,
-        "q13_customer_distribution": q13_customer_distribution,
-        "doc_fuzzy_dedup": q_doc_fuzzy_dedup,
-        "doc_containment": q_doc_containment,
-        "doc_edit_pairs": q_doc_edit_pairs,
-        "doc_winnow": q_doc_winnow,
-        "doc_winnow_pairs": q_doc_winnow_pairs,
-        "doc_despan": q_doc_despan,
-        "doc_simhash_pairs": q_doc_simhash_pairs,
-        "doc_dedup_lines": q_doc_dedup_lines,
-        "doc_dedup_lines_within": q_doc_dedup_lines_within,
-        "doc_line_fluency": q_doc_line_fluency,
-        "doc_fluency": q_doc_fluency,
-        "doc_boilerplate": q_doc_boilerplate,
-        "doc_pretokenize": q_doc_pretokenize,
-        "doc_novelty": q_doc_novelty,
-        "doc_pattern_stats": q_doc_pattern_stats,
-        "doc_vocab_coverage": q_doc_vocab_coverage,
-        "doc_corpus_card": q_doc_corpus_card,
-        "doc_corpus_diff": q_doc_corpus_diff,
-        "doc_contamination_report": q_doc_contamination_report,
-        "emb_lsh_ann": q_emb_lsh_ann,
-        "doc_dedup_quality": q_doc_dedup_quality,
-        "doc_model_score": q_doc_model_score,
-        "doc_dsir": q_doc_dsir,
-        "doc_select_dsir": q_doc_select_dsir,
-        "doc_chunk": q_doc_chunk,
-        "doc_chunked_training_set": q_doc_chunked_training_set,
-        "doc_sample_exact_k": q_doc_sample_exact_k,
-        "doc_incremental_bloom": q_doc_incremental_bloom,
-        "doc_incremental_neardup": q_doc_incremental_neardup,
-        "emb_semantic_dedup": q_emb_semantic_dedup,
-        "emb_ivf_topk_exact": q_emb_ivf_topk_exact,
-        "emb_pq_topk_exact": q_emb_pq_topk_exact,
-        "emb_ivfpq_topk_exact": q_emb_ivfpq_topk_exact,
-        "trace_session_stats": q_trace_session_stats,
-        "trace_idle_time": q_trace_idle_time,
-        "trace_comm_matrix": q_trace_comm_matrix,
-        "trace_comm_count": q_trace_comm_count,
-        "trace_comm_by_process": q_trace_comm_by_process,
-        "trace_message_histogram": q_trace_message_histogram,
-        "trace_comm_over_time": q_trace_comm_over_time,
-        "q6_forecast_revenue": q6_forecast_revenue,
-        "window_topk_orders": q_window_topk,
-        "sessionize_events": q_sessionize,
-        "asof_attribution": q_asof_attribution,
-        "events_funnel": q_events_funnel,
-        "events_retention": q_events_retention,
-        "profile_lineitem": q_profile_lineitem,
-        "doc_text_stats": q_doc_text_stats,
-        "doc_token_frequencies": q_doc_token_frequencies,
-        "doc_token_counts": q_doc_token_counts,
-        "doc_lang_id": q_doc_lang_id,
-        "doc_fingerprint": q_doc_fingerprint,
-        "doc_vocab": q_doc_vocab,
-        "doc_repetition": q_doc_repetition,
-        "doc_heuristic_filter": q_doc_heuristic_filter,
-        "doc_pii_redact": q_doc_pii_redact,
-        "doc_corpus_summary": q_doc_corpus_summary,
-        "doc_exact_dedup": q_doc_exact_dedup,
-        "doc_minhash": q_doc_minhash,
-        "doc_ngram_jaccard": q_doc_ngram_jaccard,
-        "doc_incremental": q_doc_incremental,
-        "doc_simhash": q_doc_simhash,
-        "doc_embedding_dedup": q_doc_embedding_dedup,
-        "doc_sample_stratified": q_doc_sample_stratified,
-        "doc_pack_sequences": q_doc_pack_sequences,
-        "doc_mix_sources": q_doc_mix_sources,
-        "doc_token_budget": q_doc_token_budget,
-        "doc_decontaminate": q_doc_decontaminate,
-        "emb_cosine_pairs": q_emb_cosine_pairs,
-        "emb_norm_stats": q_emb_norm_stats,
-        "emb_quantize": q_emb_quantize,
-        # stale reconfirmations displaced from the window by the
-        # round-5 additions (all have r01/r02 driver-green rows)
-        "q4_order_priority": q4_order_priority,
-        "q10_returned_items": q10_returned_items,
-        "q12_priority_lines": q12_priority_lines,
-        "q14_promo_revenue": q14_promo_revenue,
-        "q15_top_supplier": q15_top_supplier,
-        "q17_small_quantity": q17_small_quantity,
-        "q19_disjunctive_revenue": q19_disjunctive_revenue,
-        "q22_idle_customers": q22_idle_customers,
-        "events_props_stats": q_events_props_stats,
-        "events_outliers": q_events_outliers,
-        # round-5 session-4 additions (r06 window candidates — no
-        # driver row yet; local parity only)
-        "doc_licenses": q_doc_licenses,
-        "doc_license_mix": q_doc_license_mix,
-        "doc_structure_stats": q_doc_structure_stats,
-        "doc_licensed_pack": q_doc_licensed_pack,
-        "doc_source_jaccard": q_doc_source_jaccard,
-        "doc_snapshot_overlap": q_doc_snapshot_overlap,
-        "doc_cms_tokens": q_doc_cms_tokens,
-        "trace_late_senders": q_trace_late_senders,
-        "trace_late_receivers": q_trace_late_receivers,
-        "trace_wait_attribution": q_trace_wait_attribution,
-        # round-8 addition: the KLL tier's deterministic driver gate
-        "doc_kll_quantiles": q_doc_kll_quantiles,
-        # round-11 addition: the simhash max_bucket hatch under the
-        # full value oracle (tail — no driver row yet; first r12
-        # rotation candidate)
-        "doc_simhash_pairs_capped": q_doc_simhash_pairs_capped,
-    }
-    out = {k: reg[k] for k in _R11_WINDOW}
-    out.update(reg)  # tail keeps its prior relative order
-    assert len(out) == len(reg)
-    return out
-
-
-def oracle_sql():
-    return {
-        "trace_match_inc": ORACLE_TRACE_MATCH_INC,
-        "trace_flat_profile": ORACLE_TRACE_FLAT_PROFILE,
-        "trace_load_imbalance": ORACLE_TRACE_LOAD_IMBALANCE,
-        "trace_detect_pattern": ORACLE_TRACE_DETECT_PATTERN,
-        "trace_session_stats": ORACLE_TRACE_SESSION_STATS,
-        "trace_cct": ORACLE_TRACE_CCT,
-        "trace_idle_time": ORACLE_TRACE_IDLE,
-        "trace_comm_matrix": ORACLE_TRACE_COMM_MATRIX,
-        "trace_comm_count": ORACLE_TRACE_COMM_COUNT,
-        "trace_comm_by_process": ORACLE_TRACE_COMM_BY_PROCESS,
-        "trace_message_histogram": ORACLE_TRACE_MESSAGE_HISTOGRAM,
-        "trace_comm_over_time": ORACLE_TRACE_COMM_OVER_TIME,
-        "trace_time_profile": ORACLE_TRACE_TIME_PROFILE,
-        "trace_multirun": ORACLE_TRACE_MULTIRUN,
-        "q1_pricing_summary": Q1_SQL,
-        "q3_shipping_priority": ORACLE_Q3,
-        "q5_local_supplier_volume": Q5_SQL,
-        "q6_forecast_revenue": Q6_SQL,
-        "q14_promo_revenue": Q14_SQL,
-        "window_topk_orders": ORACLE_Q_TOPK,
-        "sessionize_events": ORACLE_Q_SESSION,
-        "asof_attribution": ORACLE_ASOF,
-        "events_outliers": ORACLE_EVENTS_OUTLIERS,
-        "events_funnel": ORACLE_EVENTS_FUNNEL,
-        "events_retention": ORACLE_EVENTS_RETENTION,
-        "events_props_stats": ORACLE_EVENTS_PROPS_STATS,
-        "profile_lineitem": _oracle_profile_lineitem(),
-        "rollup_orders": Q_ROLLUP_SQL,
-        "q4_order_priority": Q4_SQL,
-        "q7_nation_volume": Q7_SQL,
-        "q8_market_share": Q8_SQL,
-        "q10_returned_items": Q10_SQL,
-        "q12_priority_lines": Q12_SQL,
-        "q13_customer_distribution": Q13_SQL,
-        "q15_top_supplier": Q15_SQL,
-        "q17_small_quantity": Q17_SQL,
-        "q18_large_volume": Q18_SQL,
-        "q19_disjunctive_revenue": Q19_SQL,
-        "q22_idle_customers": Q22_SQL,
-        "q2_min_cost_supplier": Q2_SQL,
-        "q9_product_profit": Q9_SQL,
-        "q11_important_stock": Q11_SQL,
-        "q16_parts_supplier_count": Q16_SQL,
-        "q20_excess_stock": Q20_SQL,
-        "q21_waiting_orders": Q21_SQL,
-        "doc_text_stats": X.oracle_text_stats(),
-        "doc_token_frequencies": X.oracle_token_frequencies(min_count=5),
-        "doc_token_counts": X.oracle_token_counts(),
-        "doc_lang_id": X.oracle_lang_id(),
-        "doc_fingerprint": X.oracle_doc_fingerprint(),
-        "doc_vocab": X.oracle_vocab_stats(),
-        "doc_repetition": QL.oracle_repetition_stats(),
-        "doc_heuristic_filter": QL.oracle_heuristic_filter(),
-        "doc_pii_redact": QL.oracle_pii_redact(),
-        "doc_corpus_summary": QL.oracle_corpus_summary(),
-        "doc_exact_dups": ORACLE_DOC_EXACT_DUPS,
-        "doc_exact_dedup": ORACLE_DOC_EXACT_DEDUP,
-        "doc_minhash": D.oracle_minhash_signatures(num_hashes=8),
-        "doc_minhash_lsh": D.oracle_minhash_lsh_pairs(
-            num_hashes=16, bands=8
-        ),
-        "doc_minhash_lsh_fast": D.oracle_minhash_lsh_pairs_fast(
-            num_hashes=16, bands=8
-        ),
-        "doc_minhash_lsh_capped": D.oracle_minhash_lsh_pairs_fast(
-            num_hashes=16, bands=8, max_bucket=2
-        ),
-        "doc_ngram_jaccard": D.oracle_ngram_jaccard_pairs(n=3, threshold=0.5),
-        "doc_dedup_clusters": D.oracle_dedup_clusters(n=3, threshold=0.5),
-        "doc_fuzzy_dedup": D.oracle_fuzzy_dedup(n=3, threshold=0.5),
-        "doc_shuffle": _SP.oracle_shuffle_corpus(),
-        "doc_contamination_report": D.oracle_contamination_report(n=5),
-        "doc_model_score": _SC.oracle_score_documents(),
-        "doc_fluency": X.oracle_fluency_score(top_k=1000),
-        "doc_pack_manifest": _SP.oracle_pack_assignments(
-            context_len=512, n_shards=16
-        ),
-        "doc_simhash_pairs": D.oracle_simhash_pairs(max_hamming=3),
-        "doc_simhash_pairs_capped": D.oracle_simhash_pairs(
-            max_hamming=3, max_bucket=20
-        ),
-        "doc_dedup_lines": QL.oracle_dedup_lines(max_line_df=2),
-        "emb_lsh_ann": V.oracle_lsh_ann_pairs(
-            num_planes=8, threshold=0.2
-        ),
-        "doc_clean_report": _PL.oracle_clean_corpus_report(),
-        "doc_dedup_lines_within": QL.oracle_dedup_lines_within(),
-        "doc_corpus_diff": _PL.oracle_corpus_diff(),
-        "doc_winnow": X.oracle_winnow_fingerprints(),
-        "doc_despan": D.oracle_remove_repeated_spans(k=5, min_run=2),
-        "emb_semantic_dedup": V.oracle_semantic_dedup(threshold=0.95),
-        "doc_pretokenize": X.oracle_pretokenize(),
-        "doc_dedup_quality": D.oracle_dedup_quality_report(),
-        "doc_split": "SELECT doc_id, split FROM (" + _SP.oracle_split_corpus() + ") s",
-        "doc_length_buckets": _SP.oracle_length_buckets(),
-        "doc_winnow_pairs": X.oracle_winnow_pairs(
-            min_shared=20, max_df=128
-        ),
-        "doc_line_fluency": QL.oracle_filter_lines_by_fluency(
-            min_fluency=-3.4016
-        ),
-        "doc_dsir": _SP.oracle_dsir_weights(buckets=4096),
-        "doc_sample_exact_k": (
-            "SELECT doc_id, source FROM ("
-            + _SP.oracle_sample_exact_k(k=5, strata="source").strip()
-            + ") s"
-        ),
-        "doc_incremental": _PL.oracle_incremental_new_docs(
-            seen_doc_id_below=250
-        ),
-        # same oracle on purpose: the Bloom pre-filter must be invisible
-        # in the result (no-false-negative guarantee + exact verify join)
-        "doc_incremental_bloom": _PL.oracle_incremental_new_docs(
-            seen_doc_id_below=250
-        ),
-        "doc_chunk": _SP.oracle_chunk_documents(
-            chunk_tokens=48, overlap=16
-        ),
-        "doc_vocab_coverage": X.oracle_vocab_coverage(top_k=20),
-        "doc_boilerplate": X.oracle_boilerplate_ngrams(
-            n=3, top_k=20, min_df=2
-        ),
-        "doc_corpus_card": QL.oracle_corpus_card(),
-        "doc_novelty": X.oracle_novelty_scores(n=3),
-        "doc_containment": D.oracle_containment_pairs(
-            n=3, threshold=0.4, max_df=1000
-        ),
-        "doc_pattern_stats": QL.oracle_pattern_stats(
-            pattern=r"\b[aeiou]\w+", per="source"
-        ),
-        "doc_edit_pairs": D.oracle_edit_verified_pairs(
-            n=3, cand_threshold=0.15, edit_threshold=0.3, max_df=1000
-        ),
-        "trace_slow_calls": ORACLE_TRACE_SLOW_CALLS,
-        "doc_incremental_neardup": D.oracle_incremental_near_dups(
-            corpus_below=250, threshold=0.5
-        ),
-        "trace_folded_stacks": ORACLE_TRACE_FOLDED_STACKS,
-        "trace_comm_by_function": ORACLE_TRACE_COMM_BY_FUNCTION,
-        "trace_comm_locality": ORACLE_TRACE_COMM_LOCALITY,
-        "trace_diff": ORACLE_TRACE_DIFF,
-        "doc_select_dsir": _SP.oracle_select_by_dsir(
-            budget_per_source=500, buckets=4096
-        ),
-        "doc_chunked_training_set": _PL.oracle_prepare_chunked_training_set(
-            chunk_tokens=48, overlap=16, context_len=256, n_shards=16
-        ),
-        "emb_cosine_topk": V.oracle_cosine_topk(k=5, query_max_id=10),
-        "emb_topk_pandas": V.oracle_cosine_topk(k=5, query_max_id=10),
-        "emb_cosine_pairs": V.oracle_cosine_pairs(threshold=0.3, query_max_id=50),
-        "emb_norm_stats": ORACLE_EMB_NORM_STATS,
-        "emb_ivf_topk_exact": V.oracle_cosine_topk(k=5, query_max_id=10),
-        "emb_pq_topk_exact": V.oracle_cosine_topk(k=5, query_max_id=10),
-        "emb_ivfpq_topk_exact": V.oracle_cosine_topk(k=5, query_max_id=10),
-        "emb_quantize": V.oracle_quantize_embeddings(),
-        "doc_simhash": D.oracle_simhash(),
-        "doc_embedding_dedup": D.oracle_embedding_dedup(threshold=0.35),
-        "doc_bpe": _oracle_bpe(),
-        "doc_perplexity_buckets": _oracle_perplexity_buckets(),
-        "doc_card_scan": _oracle_card_scan(),
-        "trace_message_latency": ORACLE_TRACE_MSG_LATENCY,
-        "doc_tfidf": X.oracle_tfidf_topk(k=3),
-        "emb_hamming_topk": V.oracle_hamming_topk(k=5, query_max_id=10),
-        "emb_hard_negatives": V.oracle_hard_negatives(k=5, query_max_id=10),
-        "doc_bm25": X.oracle_bm25_topk(_BM25_QUERIES, k=5),
-        "doc_decontaminate_spans": D.oracle_decontaminate_spans(n=5),
-        "trace_latency_histogram": ORACLE_TRACE_LATENCY_HISTOGRAM,
-        "doc_source_tfidf": X.oracle_tfidf_topk(k=3, group_col="source"),
-        "trace_comm_matrix_over_time": ORACLE_TRACE_COMM_MATRIX_OVER_TIME,
-        "media_decode": ORACLE_MEDIA_DECODE,
-        "media_decode_real": ORACLE_MEDIA_DECODE_REAL,
-        "web_dedup_urls": ORACLE_WEB_DEDUP_URLS,
-        "web_url_features": ORACLE_WEB_URL_FEATURES,
-        "doc_bigram_lm": X.oracle_bigram_lm(top_k=200, min_count=2),
-        "doc_lm_score": X.oracle_lm_score(top_k=200, min_count=2),
-        "doc_cluster_summary": ORACLE_DOC_CLUSTER_SUMMARY,
-        "doc_dup_inflation": ORACLE_DOC_DUP_INFLATION,
-        "emb_isolation": V.oracle_isolation_scores(
-            query_max_id=100, bottom_k=20
-        ),
-        "events_burst_windows": _oracle_burst_windows(),
-        "trace_caller_callee": ORACLE_TRACE_CALLER_CALLEE,
-        "doc_neardup_cluster_summary": D.oracle_near_dup_cluster_summary(
-            n=3, threshold=0.5
-        ),
-        "doc_dup_degree": D.oracle_dup_degree_stats(n=3, threshold=0.5),
-        "doc_length_percentiles": X.oracle_length_percentiles(),
-        "events_common_paths": _oracle_common_paths(),
-        "doc_bigram_lm_merged": X.oracle_bigram_lm(top_k=200, min_count=2),
-        "web_domain_stats": ORACLE_WEB_DOMAIN_STATS,
-        "web_pagerank": ORACLE_WEB_PAGERANK,
-        "emb_lsh_topk": V.oracle_lsh_topk_portable(
+# the indexed twin must be bit-identical to the inline plan, so both RRF
+# gates share the same composed oracle
+_ORACLE_RRF_FUSION = V.oracle_rrf_fuse(
+    [
+        V.oracle_lsh_topk_portable(
             "vec_id % 25 != 0", "vec_id % 25 = 0", k=5
         ),
-        "emb_ivf_topk_portable": V.oracle_ivf_topk_portable(
-            "vec_id % 25 != 0", "vec_id % 25 = 0", k=5, nlist=8, nprobe=3
+        V.oracle_ivf_topk_portable(
+            "vec_id % 25 != 0", "vec_id % 25 = 0",
+            k=5, nlist=8, nprobe=3,
         ),
-        "emb_rrf_fusion": V.oracle_rrf_fuse(
-            [
-                V.oracle_lsh_topk_portable(
-                    "vec_id % 25 != 0", "vec_id % 25 = 0", k=5
-                ),
-                V.oracle_ivf_topk_portable(
-                    "vec_id % 25 != 0", "vec_id % 25 = 0",
-                    k=5, nlist=8, nprobe=3,
-                ),
-            ],
-            k=5,
+    ],
+    k=5,
+)
+
+# One row per driver gate: (name, Spark query, DuckDB oracle SQL), so a
+# gate cannot exist without its oracle. Row order is load-bearing: the
+# driver's correctness gate checks the FIRST 50 rows (the per-round
+# window history is in CORRECTNESS_r*.json and git). Every gate is also
+# value-checked locally by tools/parity_check.py and column-checked by
+# tests/test_oracle_parity.py.
+_GATES = (
+    ("doc_cluster_summary", q_doc_cluster_summary, ORACLE_DOC_CLUSTER_SUMMARY),
+    ("doc_containment", q_doc_containment,
+     D.oracle_containment_pairs(n=3, threshold=0.4, max_df=1000)),
+    ("doc_contamination_report", q_doc_contamination_report,
+     D.oracle_contamination_report(n=5)),
+    ("doc_decontaminate", q_doc_decontaminate, D.oracle_decontaminate(n=5)),
+    ("doc_decontaminate_spans", q_doc_decontaminate_spans,
+     D.oracle_decontaminate_spans(n=5)),
+    ("doc_dedup_clusters", q_doc_dedup_clusters,
+     D.oracle_dedup_clusters(n=3, threshold=0.5)),
+    ("doc_dedup_quality", q_doc_dedup_quality,
+     D.oracle_dedup_quality_report()),
+    ("doc_despan", q_doc_despan,
+     D.oracle_remove_repeated_spans(k=5, min_run=2)),
+    ("doc_dup_degree", q_doc_dup_degree,
+     D.oracle_dup_degree_stats(n=3, threshold=0.5)),
+    ("doc_dup_inflation", q_doc_dup_inflation, ORACLE_DOC_DUP_INFLATION),
+    (
+        "doc_edit_pairs", q_doc_edit_pairs,
+        D.oracle_edit_verified_pairs(
+            n=3, cand_threshold=0.15, edit_threshold=0.3, max_df=1000
         ),
-        # the indexed twin must be bit-identical to the inline plan,
-        # so it shares the same composed oracle
-        "emb_rrf_fusion_indexed": V.oracle_rrf_fuse(
-            [
-                V.oracle_lsh_topk_portable(
-                    "vec_id % 25 != 0", "vec_id % 25 = 0", k=5
-                ),
-                V.oracle_ivf_topk_portable(
-                    "vec_id % 25 != 0", "vec_id % 25 = 0",
-                    k=5, nlist=8, nprobe=3,
-                ),
-            ],
-            k=5,
+    ),
+    ("doc_embedding_dedup", q_doc_embedding_dedup,
+     D.oracle_embedding_dedup(threshold=0.35)),
+    ("doc_exact_dedup", q_doc_exact_dedup, ORACLE_DOC_EXACT_DEDUP),
+    ("doc_exact_dups", q_doc_exact_dups, ORACLE_DOC_EXACT_DUPS),
+    ("doc_fuzzy_dedup", q_doc_fuzzy_dedup,
+     D.oracle_fuzzy_dedup(n=3, threshold=0.5)),
+    ("doc_incremental_neardup", q_doc_incremental_neardup,
+     D.oracle_incremental_near_dups(corpus_below=250, threshold=0.5)),
+    ("doc_minhash", q_doc_minhash, D.oracle_minhash_signatures(num_hashes=8)),
+    ("doc_minhash_lsh", q_doc_minhash_lsh,
+     D.oracle_minhash_lsh_pairs(num_hashes=16, bands=8)),
+    ("doc_minhash_lsh_capped", q_doc_minhash_lsh_capped,
+     D.oracle_minhash_lsh_pairs_fast(num_hashes=16, bands=8, max_bucket=2)),
+    ("doc_minhash_lsh_fast", q_doc_minhash_lsh_fast,
+     D.oracle_minhash_lsh_pairs_fast(num_hashes=16, bands=8)),
+    ("doc_neardup_cluster_summary", q_doc_neardup_cluster_summary,
+     D.oracle_near_dup_cluster_summary(n=3, threshold=0.5)),
+    ("doc_ngram_jaccard", q_doc_ngram_jaccard,
+     D.oracle_ngram_jaccard_pairs(n=3, threshold=0.5)),
+    ("doc_simhash", q_doc_simhash, D.oracle_simhash()),
+    ("doc_simhash_pairs", q_doc_simhash_pairs,
+     D.oracle_simhash_pairs(max_hamming=3)),
+    (
+        "doc_snapshot_overlap", q_doc_snapshot_overlap,
+        D.oracle_kmv_source_similarity(
+            k=64,
+            ngram=3,
+            group_col=(
+                "CASE WHEN doc_id % 2 = 0 THEN 'old' ELSE 'new' END"
+            ),
         ),
-        "media_near_dups": __import__(
-            "pipit_spark.llm.multimodal", fromlist=["x"]
-        ).oracle_media_near_dups(),
-        "emb_decontaminate": V.oracle_decontaminate_embeddings(
-            "vec_id % 25 != 0", "vec_id % 25 = 0", threshold_ppm=400_000
-        ),
-        "doc_clean_corpus": _oracle_clean_corpus(),
-        "doc_sample_stratified": _oracle_sampling("sample"),
-        "doc_pack_sequences": _oracle_sampling("pack"),
-        "doc_mix_sources": _SP.oracle_mix_sources(
-            temperature=2.0, target_frac=0.5
-        ),
-        "doc_token_budget": _SP.oracle_select_by_token_budget(
-            budget_per_source=500
-        ),
-        "doc_decontaminate": D.oracle_decontaminate(n=5),
-        "doc_training_set": _oracle_training_set(),
-        # r06: the five formerly-rows-only ANN/dedup gates now carry
-        # full value oracles (portable/lossless/exact-degenerate
-        # formulations; the float approximate paths remain library ops
-        # pinned by pytest recall floors).
-        "emb_ivf_topk": V.oracle_cosine_topk(k=5, query_max_id=10),
-        "emb_pq_topk": V.oracle_synth_pq_topk(k=5, query_max_id=10),
-        "emb_ivfpq_topk": V.oracle_synth_pq_topk(k=5, query_max_id=10),
-        "emb_cell_balance": V.oracle_cell_balance(nlist=8),
-        "doc_hybrid_retrieval": _build_oracle_hybrid_retrieval(),
-        "doc_quantile_sketch": __import__(
-            "pipit_spark.llm.sketches", fromlist=["x"]
-        ).oracle_sketch_quantiles(pct=20),
-        "doc_kll_quantiles": __import__(
-            "pipit_spark.llm.sketches", fromlist=["x"]
-        ).oracle_kll_rank_check(),
-        "emb_ann_recall": V.oracle_recall_report(
+    ),
+    ("doc_source_jaccard", q_doc_source_jaccard,
+     D.oracle_kmv_source_similarity(k=64, ngram=3)),
+    ("trace_match_inc", q_trace_match_inc, ORACLE_TRACE_MATCH_INC),
+    ("trace_cct", q_trace_cct, ORACLE_TRACE_CCT),
+    ("trace_caller_callee", q_trace_caller_callee, ORACLE_TRACE_CALLER_CALLEE),
+    ("trace_flat_profile", q_trace_flat_profile, ORACLE_TRACE_FLAT_PROFILE),
+    ("trace_session_stats", q_trace_session_stats, ORACLE_TRACE_SESSION_STATS),
+    ("q8_market_share", q8_market_share, Q8_SQL),
+    ("q13_customer_distribution", q13_customer_distribution, Q13_SQL),
+    ("q18_large_volume", q18_large_volume, Q18_SQL),
+    ("q22_idle_customers", q22_idle_customers, Q22_SQL),
+    ("trace_comm_by_process", q_trace_comm_by_process,
+     ORACLE_TRACE_COMM_BY_PROCESS),
+    ("trace_comm_over_time", q_trace_comm_over_time,
+     ORACLE_TRACE_COMM_OVER_TIME),
+    ("trace_message_histogram", q_trace_message_histogram,
+     ORACLE_TRACE_MESSAGE_HISTOGRAM),
+    ("asof_attribution", q_asof_attribution, ORACLE_ASOF),
+    ("events_funnel", q_events_funnel, ORACLE_EVENTS_FUNNEL),
+    ("events_retention", q_events_retention, ORACLE_EVENTS_RETENTION),
+    ("sessionize_events", q_sessionize, ORACLE_Q_SESSION),
+    ("window_topk_orders", q_window_topk, ORACLE_Q_TOPK),
+    ("q6_forecast_revenue", q6_forecast_revenue, Q6_SQL),
+    ("doc_text_stats", q_doc_text_stats, X.oracle_text_stats()),
+    ("doc_token_counts", q_doc_token_counts, X.oracle_token_counts()),
+    ("doc_lang_id", q_doc_lang_id, X.oracle_lang_id()),
+    ("doc_fingerprint", q_doc_fingerprint, X.oracle_doc_fingerprint()),
+    ("doc_vocab", q_doc_vocab, X.oracle_vocab_stats()),
+    ("doc_pii_redact", q_doc_pii_redact, QL.oracle_pii_redact()),
+    # ---- end of the driver's first-50 window ----
+    ("media_decode", q_media_decode, ORACLE_MEDIA_DECODE),
+    ("doc_clean_report", q_doc_clean_report, _PL.oracle_clean_corpus_report()),
+    (
+        "emb_ann_recall", q_emb_ann_recall,
+        V.oracle_recall_report(
             V.oracle_ivf_topk_portable(
                 "vec_id % 25 != 0", "vec_id % 25 = 0",
                 k=5, nlist=8, nprobe=8,
@@ -5288,28 +4553,213 @@ def oracle_sql():
                 k=5, nlist=8, nprobe=3,
             ),
         ),
-        "doc_licenses": QL.oracle_detect_licenses(
-            text_expr=_sql_inject(_LICENSE_SNIPPETS)
+    ),
+    ("emb_topk_pandas", q_emb_topk_pandas,
+     V.oracle_cosine_topk(k=5, query_max_id=10)),
+    ("emb_ivf_topk", q_emb_ivf_topk,
+     V.oracle_cosine_topk(k=5, query_max_id=10)),
+    ("emb_pq_topk", q_emb_pq_topk,
+     V.oracle_synth_pq_topk(k=5, query_max_id=10)),
+    ("emb_ivfpq_topk", q_emb_ivfpq_topk,
+     V.oracle_synth_pq_topk(k=5, query_max_id=10)),
+    ("doc_shuffle", q_doc_shuffle, _SP.oracle_shuffle_corpus()),
+    ("doc_split", q_doc_split,
+     "SELECT doc_id, split FROM (" + _SP.oracle_split_corpus() + ") s"),
+    ("doc_length_buckets", q_doc_length_buckets, _SP.oracle_length_buckets()),
+    ("doc_pack_manifest", q_doc_pack_manifest,
+     _SP.oracle_pack_assignments(context_len=512, n_shards=16)),
+    ("doc_perplexity_buckets", q_doc_perplexity_buckets,
+     _oracle_perplexity_buckets()),
+    ("doc_card_scan", q_doc_card_scan, _oracle_card_scan()),
+    ("trace_message_latency", q_trace_message_latency,
+     ORACLE_TRACE_MSG_LATENCY),
+    ("doc_tfidf", q_doc_tfidf, X.oracle_tfidf_topk(k=3)),
+    ("emb_hamming_topk", q_emb_hamming_topk,
+     V.oracle_hamming_topk(k=5, query_max_id=10)),
+    ("emb_hard_negatives", q_emb_hard_negatives,
+     V.oracle_hard_negatives(k=5, query_max_id=10)),
+    ("doc_bm25", q_doc_bm25, X.oracle_bm25_topk(_BM25_QUERIES, k=5)),
+    ("trace_latency_histogram", q_trace_latency_histogram,
+     ORACLE_TRACE_LATENCY_HISTOGRAM),
+    ("doc_source_tfidf", q_doc_source_tfidf,
+     X.oracle_tfidf_topk(k=3, group_col="source")),
+    ("trace_comm_matrix_over_time", q_trace_comm_matrix_over_time,
+     ORACLE_TRACE_COMM_MATRIX_OVER_TIME),
+    ("q3_shipping_priority", q3_shipping_priority, ORACLE_Q3),
+    ("q5_local_supplier_volume", q5_local_supplier_volume, Q5_SQL),
+    ("q7_nation_volume", q7_nation_volume, Q7_SQL),
+    ("rollup_orders", q_rollup_orders, Q_ROLLUP_SQL),
+    ("doc_length_percentiles", q_doc_length_percentiles,
+     X.oracle_length_percentiles()),
+    ("events_common_paths", q_events_common_paths, _oracle_common_paths()),
+    ("doc_bigram_lm_merged", q_doc_bigram_lm_merged,
+     X.oracle_bigram_lm(top_k=200, min_count=2)),
+    ("web_domain_stats", q_web_domain_stats, ORACLE_WEB_DOMAIN_STATS),
+    ("web_pagerank", q_web_pagerank, ORACLE_WEB_PAGERANK),
+    (
+        "emb_decontaminate", q_emb_decontaminate,
+        V.oracle_decontaminate_embeddings(
+            "vec_id % 25 != 0", "vec_id % 25 = 0", threshold_ppm=400_000
         ),
-        "doc_license_mix": QL.oracle_license_mix(
-            text_expr=_sql_inject(_LICENSE_SNIPPETS)
+    ),
+    ("media_near_dups", q_media_near_dups, _MM.oracle_media_near_dups()),
+    ("emb_lsh_topk", q_emb_lsh_topk,
+     V.oracle_lsh_topk_portable("vec_id % 25 != 0", "vec_id % 25 = 0", k=5)),
+    (
+        "emb_ivf_topk_portable", q_emb_ivf_topk_portable,
+        V.oracle_ivf_topk_portable(
+            "vec_id % 25 != 0", "vec_id % 25 = 0", k=5, nlist=8, nprobe=3
         ),
-        "doc_structure_stats": X.oracle_structure_stats(
-            text_expr=_sql_inject(_STRUCT_SNIPPETS)
+    ),
+    ("emb_rrf_fusion", q_emb_rrf_fusion, _ORACLE_RRF_FUSION),
+    ("emb_rrf_fusion_indexed", q_emb_rrf_fusion_indexed, _ORACLE_RRF_FUSION),
+    ("emb_cell_balance", q_emb_cell_balance, V.oracle_cell_balance(nlist=8)),
+    ("doc_hybrid_retrieval", q_doc_hybrid_retrieval,
+     _build_oracle_hybrid_retrieval()),
+    ("doc_quantile_sketch", q_doc_quantile_sketch,
+     _SK.oracle_sketch_quantiles(pct=20)),
+    ("media_decode_real", q_media_decode_real, ORACLE_MEDIA_DECODE_REAL),
+    ("web_dedup_urls", q_web_dedup_urls, ORACLE_WEB_DEDUP_URLS),
+    ("web_url_features", q_web_url_features, ORACLE_WEB_URL_FEATURES),
+    ("doc_bigram_lm", q_doc_bigram_lm,
+     X.oracle_bigram_lm(top_k=200, min_count=2)),
+    ("doc_lm_score", q_doc_lm_score,
+     X.oracle_lm_score(top_k=200, min_count=2)),
+    ("emb_isolation", q_emb_isolation,
+     V.oracle_isolation_scores(query_max_id=100, bottom_k=20)),
+    ("events_burst_windows", q_events_burst_windows, _oracle_burst_windows()),
+    ("trace_time_profile", q_trace_time_profile, ORACLE_TRACE_TIME_PROFILE),
+    ("q1_pricing_summary", q1_pricing_summary, Q1_SQL),
+    ("doc_training_set", q_doc_training_set, _oracle_training_set()),
+    ("emb_cosine_topk", q_emb_cosine_topk,
+     V.oracle_cosine_topk(k=5, query_max_id=10)),
+    ("doc_clean_corpus", q_doc_clean_corpus, _oracle_clean_corpus()),
+    ("trace_load_imbalance", q_trace_load_imbalance,
+     ORACLE_TRACE_LOAD_IMBALANCE),
+    ("trace_multirun", q_trace_multirun, ORACLE_TRACE_MULTIRUN),
+    ("trace_detect_pattern", q_trace_detect_pattern,
+     ORACLE_TRACE_DETECT_PATTERN),
+    ("doc_bpe", q_doc_bpe, _oracle_bpe()),
+    ("trace_diff", q_trace_diff, ORACLE_TRACE_DIFF),
+    ("trace_slow_calls", q_trace_slow_calls, ORACLE_TRACE_SLOW_CALLS),
+    ("trace_folded_stacks", q_trace_folded_stacks, ORACLE_TRACE_FOLDED_STACKS),
+    ("trace_comm_by_function", q_trace_comm_by_function,
+     ORACLE_TRACE_COMM_BY_FUNCTION),
+    ("trace_comm_locality", q_trace_comm_locality, ORACLE_TRACE_COMM_LOCALITY),
+    ("q2_min_cost_supplier", q2_min_cost_supplier, Q2_SQL),
+    ("q9_product_profit", q9_product_profit, Q9_SQL),
+    ("q11_important_stock", q11_important_stock, Q11_SQL),
+    ("q16_parts_supplier_count", q16_parts_supplier_count, Q16_SQL),
+    ("q20_excess_stock", q20_excess_stock, Q20_SQL),
+    ("q21_waiting_orders", q21_waiting_orders, Q21_SQL),
+    ("doc_winnow", q_doc_winnow, X.oracle_winnow_fingerprints()),
+    ("doc_winnow_pairs", q_doc_winnow_pairs,
+     X.oracle_winnow_pairs(min_shared=20, max_df=128)),
+    ("doc_dedup_lines", q_doc_dedup_lines,
+     QL.oracle_dedup_lines(max_line_df=2)),
+    ("doc_dedup_lines_within", q_doc_dedup_lines_within,
+     QL.oracle_dedup_lines_within()),
+    ("doc_line_fluency", q_doc_line_fluency,
+     QL.oracle_filter_lines_by_fluency(min_fluency=-3.4016)),
+    ("doc_fluency", q_doc_fluency, X.oracle_fluency_score(top_k=1000)),
+    ("doc_boilerplate", q_doc_boilerplate,
+     X.oracle_boilerplate_ngrams(n=3, top_k=20, min_df=2)),
+    ("doc_pretokenize", q_doc_pretokenize, X.oracle_pretokenize()),
+    ("doc_novelty", q_doc_novelty, X.oracle_novelty_scores(n=3)),
+    ("doc_pattern_stats", q_doc_pattern_stats,
+     QL.oracle_pattern_stats(pattern=r"\b[aeiou]\w+", per="source")),
+    ("doc_vocab_coverage", q_doc_vocab_coverage,
+     X.oracle_vocab_coverage(top_k=20)),
+    ("doc_corpus_card", q_doc_corpus_card, QL.oracle_corpus_card()),
+    ("doc_corpus_diff", q_doc_corpus_diff, _PL.oracle_corpus_diff()),
+    ("emb_lsh_ann", q_emb_lsh_ann,
+     V.oracle_lsh_ann_pairs(num_planes=8, threshold=0.2)),
+    ("doc_model_score", q_doc_model_score, _SC.oracle_score_documents()),
+    ("doc_dsir", q_doc_dsir, _SP.oracle_dsir_weights(buckets=4096)),
+    ("doc_select_dsir", q_doc_select_dsir,
+     _SP.oracle_select_by_dsir(budget_per_source=500, buckets=4096)),
+    ("doc_chunk", q_doc_chunk,
+     _SP.oracle_chunk_documents(chunk_tokens=48, overlap=16)),
+    (
+        "doc_chunked_training_set", q_doc_chunked_training_set,
+        _PL.oracle_prepare_chunked_training_set(
+            chunk_tokens=48, overlap=16, context_len=256, n_shards=16
         ),
-        "doc_licensed_pack": _oracle_licensed_pack(),
-        "doc_source_jaccard": D.oracle_kmv_source_similarity(k=64, ngram=3),
-        "doc_snapshot_overlap": D.oracle_kmv_source_similarity(
-            k=64,
-            ngram=3,
-            group_col=(
-                "CASE WHEN doc_id % 2 = 0 THEN 'old' ELSE 'new' END"
-            ),
-        ),
-        "doc_cms_tokens": __import__(
-            "pipit_spark.llm.sketches", fromlist=["x"]
-        ).oracle_cms_estimates(_CMS_PROBES, width=1024, depth=4),
-        "trace_late_senders": ORACLE_TRACE_LATE_SENDERS,
-        "trace_late_receivers": ORACLE_TRACE_LATE_RECEIVERS,
-        "trace_wait_attribution": ORACLE_TRACE_WAIT_ATTRIBUTION,
-    }
+    ),
+    (
+        "doc_sample_exact_k", q_doc_sample_exact_k,
+        "SELECT doc_id, source FROM ("
+        + _SP.oracle_sample_exact_k(k=5, strata="source").strip()
+        + ") s",
+    ),
+    # same oracle as doc_incremental on purpose: the Bloom pre-filter
+    # must be invisible in the result (no-false-negative guarantee +
+    # exact verify join)
+    ("doc_incremental_bloom", q_doc_incremental_bloom,
+     _PL.oracle_incremental_new_docs(seen_doc_id_below=250)),
+    ("emb_semantic_dedup", q_emb_semantic_dedup,
+     V.oracle_semantic_dedup(threshold=0.95)),
+    ("emb_ivf_topk_exact", q_emb_ivf_topk_exact,
+     V.oracle_cosine_topk(k=5, query_max_id=10)),
+    ("emb_pq_topk_exact", q_emb_pq_topk_exact,
+     V.oracle_cosine_topk(k=5, query_max_id=10)),
+    ("emb_ivfpq_topk_exact", q_emb_ivfpq_topk_exact,
+     V.oracle_cosine_topk(k=5, query_max_id=10)),
+    ("trace_idle_time", q_trace_idle_time, ORACLE_TRACE_IDLE),
+    ("trace_comm_matrix", q_trace_comm_matrix, ORACLE_TRACE_COMM_MATRIX),
+    ("trace_comm_count", q_trace_comm_count, ORACLE_TRACE_COMM_COUNT),
+    ("profile_lineitem", q_profile_lineitem, _oracle_profile_lineitem()),
+    ("doc_token_frequencies", q_doc_token_frequencies,
+     X.oracle_token_frequencies(min_count=5)),
+    ("doc_repetition", q_doc_repetition, QL.oracle_repetition_stats()),
+    ("doc_heuristic_filter", q_doc_heuristic_filter,
+     QL.oracle_heuristic_filter()),
+    ("doc_corpus_summary", q_doc_corpus_summary, QL.oracle_corpus_summary()),
+    ("doc_incremental", q_doc_incremental,
+     _PL.oracle_incremental_new_docs(seen_doc_id_below=250)),
+    ("doc_sample_stratified", q_doc_sample_stratified,
+     _oracle_sampling("sample")),
+    ("doc_pack_sequences", q_doc_pack_sequences, _oracle_sampling("pack")),
+    ("doc_mix_sources", q_doc_mix_sources,
+     _SP.oracle_mix_sources(temperature=2.0, target_frac=0.5)),
+    ("doc_token_budget", q_doc_token_budget,
+     _SP.oracle_select_by_token_budget(budget_per_source=500)),
+    ("emb_cosine_pairs", q_emb_cosine_pairs,
+     V.oracle_cosine_pairs(threshold=0.3, query_max_id=50)),
+    ("emb_norm_stats", q_emb_norm_stats, ORACLE_EMB_NORM_STATS),
+    ("emb_quantize", q_emb_quantize, V.oracle_quantize_embeddings()),
+    ("q4_order_priority", q4_order_priority, Q4_SQL),
+    ("q10_returned_items", q10_returned_items, Q10_SQL),
+    ("q12_priority_lines", q12_priority_lines, Q12_SQL),
+    ("q14_promo_revenue", q14_promo_revenue, Q14_SQL),
+    ("q15_top_supplier", q15_top_supplier, Q15_SQL),
+    ("q17_small_quantity", q17_small_quantity, Q17_SQL),
+    ("q19_disjunctive_revenue", q19_disjunctive_revenue, Q19_SQL),
+    ("events_props_stats", q_events_props_stats, ORACLE_EVENTS_PROPS_STATS),
+    ("events_outliers", q_events_outliers, ORACLE_EVENTS_OUTLIERS),
+    ("doc_licenses", q_doc_licenses,
+     QL.oracle_detect_licenses(text_expr=_sql_inject(_LICENSE_SNIPPETS))),
+    ("doc_license_mix", q_doc_license_mix,
+     QL.oracle_license_mix(text_expr=_sql_inject(_LICENSE_SNIPPETS))),
+    ("doc_structure_stats", q_doc_structure_stats,
+     X.oracle_structure_stats(text_expr=_sql_inject(_STRUCT_SNIPPETS))),
+    ("doc_licensed_pack", q_doc_licensed_pack, _oracle_licensed_pack()),
+    ("doc_cms_tokens", q_doc_cms_tokens,
+     _SK.oracle_cms_estimates(_CMS_PROBES, width=1024, depth=4)),
+    ("trace_late_senders", q_trace_late_senders, ORACLE_TRACE_LATE_SENDERS),
+    ("trace_late_receivers", q_trace_late_receivers,
+     ORACLE_TRACE_LATE_RECEIVERS),
+    ("trace_wait_attribution", q_trace_wait_attribution,
+     ORACLE_TRACE_WAIT_ATTRIBUTION),
+    ("doc_kll_quantiles", q_doc_kll_quantiles, _SK.oracle_kll_rank_check()),
+    ("doc_simhash_pairs_capped", q_doc_simhash_pairs_capped,
+     D.oracle_simhash_pairs(max_hamming=3, max_bucket=20)),
+)
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    return {name: fn for name, fn, _ in _GATES}
+
+
+def oracle_sql() -> dict[str, str]:
+    return {name: sql for name, _, sql in _GATES}

@@ -22,8 +22,6 @@ Scale notes (100 TB design point):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import schema as S
@@ -93,11 +91,7 @@ class Trace:
         # envelope: one partition — several complete ranks — must fit a
         # task's memory, Arrow buffers included; raise this to shrink
         # partitions toward one rank each on very large traces).
-        # Default: cluster parallelism; env SPARK_GRAFT_MATCH_PARTITIONS
-        # overrides for tooling that cannot pass the parameter.
-        if match_partitions is None:
-            env = os.environ.get("SPARK_GRAFT_MATCH_PARTITIONS")
-            match_partitions = int(env) if env else None
+        # Default (None): cluster parallelism.
         self._match_partitions = match_partitions
         # matching-kernel choice: kernel=None defers to the
         # "matching.kernel" option ("location"); "chunked" streams with

@@ -36,8 +36,14 @@ def oracle_con():
 
 
 def test_every_oracle_has_a_query():
+    """Both registry views project one gate table: the same names in the
+    same order, so no gate exists without its oracle; every bench.py
+    headline query is a gate, so a table edit cannot break the bench."""
+    import bench
+
     qs, osql = Q.queries(), Q.oracle_sql()
-    assert set(osql) <= set(qs), set(osql) - set(qs)
+    assert list(qs) == list(osql)
+    assert set(bench.HEADLINE) <= set(qs), set(bench.HEADLINE) - set(qs)
 
 
 def test_columns_match_between_query_and_oracle(spark, oracle_con):

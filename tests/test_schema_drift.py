@@ -196,3 +196,42 @@ def test_load_memo_hit_stays_in_the_callers_session(spark):
         assert b.count() == a.count()
     finally:
         Q.clear_state(spark)
+
+
+def test_derived_trace_memo_stays_in_the_callers_session(spark):
+    """derived_trace() goes through the same session-keyed memo as
+    load(): a new session sharing the applicationId gets a Trace whose
+    events frame belongs to it, not the first session's Trace."""
+    Q.clear_state(spark)
+    other = spark.newSession()
+    try:
+        a = Q.derived_trace(spark, SF)
+        b = Q.derived_trace(other, SF)
+        assert b is not a
+        assert a.events.sparkSession._jsparkSession.equals(
+            spark._jsparkSession
+        )
+        assert b.events.sparkSession._jsparkSession.equals(
+            other._jsparkSession
+        )
+        assert Q.derived_trace(other, SF) is b
+    finally:
+        Q.clear_state(spark)
+
+
+def test_clear_state_drops_a_stopped_apps_trace_untouched(spark):
+    """After spark.stop() and a new session the memo still holds the old
+    application's Trace, whose frames died with that context:
+    clear_state() drops the entry without calling into them."""
+    Q.clear_state(spark)
+    t = Q.derived_trace(spark, SF)
+    Q._memo[("stopped-app", SF, None)] = Q._memo.pop(
+        (spark.sparkContext.applicationId, SF, None)
+    )
+
+    def dead_unpersist():
+        raise AssertionError("unpersist called on a stopped app's Trace")
+
+    t.unpersist = dead_unpersist
+    Q.clear_state(spark)
+    assert not Q._memo

@@ -21,14 +21,11 @@ def main() -> None:
 
     from pipit_spark.session import get_spark
     from pipit_spark import queries as Q
+    import bench
 
     spark = get_spark(app_name=f"ab-{name}")
     spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    warm = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    warm.groupBy("n_regionkey").applyInPandas(
-        lambda pdf: pdf.head(1), schema=warm.schema
-    ).count()
+    bench.warmup(spark, sf_dir)
     registry = Q.queries()
     if name == "doc_minhash_lsh_xxh":
         from pipit_spark.llm import dedup as _D

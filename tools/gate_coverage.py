@@ -15,7 +15,6 @@ def main() -> None:
     import __spark_entry__ as e
 
     names = list(e.queries())
-    oracles = set(e.oracle_sql())
     history: dict[str, dict[str, str]] = {}
     for f in sorted(glob.glob("CORRECTNESS_r*.json")):
         rnd = f.split("CORRECTNESS_")[1].split(".")[0]
@@ -33,8 +32,7 @@ def main() -> None:
     ever_green = {n for n, h in history.items() if "green" in h.values()}
     never = [n for n in names if n not in history]
     in_window = set(names[:50])
-    print(f"registry: {len(names)} gates ({len(oracles)} with value "
-          f"oracles, {len(names) - len(oracles)} rows-only)")
+    print(f"registry: {len(names)} gates, each with a value oracle")
     print(f"ever driver-hash-green: {len(ever_green)}")
     print(f"never driver-checked:   {len(never)} "
           f"({sum(1 for n in never if n in in_window)} in the current "

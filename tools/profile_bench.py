@@ -37,11 +37,7 @@ def main() -> None:
 
     spark = get_spark(app_name="pipit-spark-profile")
     spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    warm = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    warm.groupBy("n_regionkey").applyInPandas(
-        lambda pdf: pdf.head(1), schema=warm.schema
-    ).count()
+    bench.warmup(spark, sf_dir)
 
     registry = Q.queries()
     names = args or bench.HEADLINE
