@@ -63,8 +63,8 @@ _REGISTRY: dict[str, tuple[Any, Callable[[str, Any], None]]] = {
     "notebook_url": ("http://localhost:8888", _url),
     # engine options
     # Arrow batch rows for pandas-UDF lanes — consumed by
-    # session.get_spark (spark.sql.execution.arrow.maxRecordsPerBatch;
-    # env SPARK_GRAFT_ARROW_BATCH overrides). Emit-lane per-task heap
+    # session.get_spark (spark.sql.execution.arrow.maxRecordsPerBatch)
+    # and by the location kernel's emit slices. Emit-lane per-task heap
     # scales with it (SCALING.md round-11 stock-heap probe).
     "matching.max_records_per_batch": (65536, _pos_int),
     # default matching kernel when the call site does not pick one

@@ -35,34 +35,11 @@ def get_spark(
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", cpus))
     # Arrow batch rows for every pandas-UDF lane (the matching emit
-    # pass is the big consumer): env var > config registry option
-    # (matching.max_records_per_batch, default 65536). Per-task heap in
-    # the emit lane scales with this (in-flight Arrow buffers on both
-    # sides of the Python worker) — the round-11 stock-heap probe
-    # shrinks it to fit 8 g / 32 tasks at the billion tier.
-    # the env override gets the SAME positive-int validation the config
-    # registry applies to matching.max_records_per_batch (r11 ADVICE:
-    # "0"/"-1" would pass int() and set maxRecordsPerBatch<=0, which
-    # Spark treats as UNLIMITED batch size — the opposite of the
-    # option's memory-bounding intent; junk raised an opaque ValueError)
-    env_batch = os.environ.get("SPARK_GRAFT_ARROW_BATCH")
-    if env_batch is not None and env_batch != "":
-        try:
-            arrow_batch = int(env_batch)
-        except ValueError:
-            raise ValueError(
-                f"invalid SPARK_GRAFT_ARROW_BATCH={env_batch!r}: "
-                "expected a positive integer (Arrow rows per batch)"
-            ) from None
-        if arrow_batch <= 0:
-            raise ValueError(
-                f"invalid SPARK_GRAFT_ARROW_BATCH={env_batch!r}: must be "
-                "a POSITIVE integer — values <= 0 would make Spark's "
-                "arrow.maxRecordsPerBatch unlimited, defeating the "
-                "memory bound"
-            )
-    else:
-        arrow_batch = int(get_option("matching.max_records_per_batch"))
+    # pass is the big consumer), from the matching.max_records_per_batch
+    # option — the same value the location kernel slices its emit by.
+    # Per-task heap in the emit lane scales with it (in-flight Arrow
+    # buffers on both sides of the Python worker).
+    arrow_batch = int(get_option("matching.max_records_per_batch"))
 
     builder = (
         SparkSession.builder.appName(app_name)

@@ -22,10 +22,13 @@ observable semantics reproduced here:
   (timestamp, emission order) (hpctoolkit_reader.py:1348-1378).
 
 Spark shape (SURVEY §2.1): driver parses the small meta/profile dbs and
-broadcasts plain dicts; the per-thread trace lines (the bulk) fan out one
-Spark task per line, each reading only its ``[pStart, pEnd)`` byte range
-of trace.db and running the numpy-backed reconstruction kernel —
-embarrassingly parallel across threads, no shuffle until the final sort.
+broadcasts plain dicts; the per-thread trace lines (the bulk) are packed
+by their byte ranges into core-sized parse tasks through the binary
+readers' shared driver (sources/packed.py, the same packing, bounded
+chunk flush and rows→pandas step as the OTF2 reader). Each line reads
+only its ``[pStart, pEnd)`` byte range of trace.db and runs the
+numpy-backed reconstruction kernel — embarrassingly parallel across
+threads, no shuffle until the final sort.
 """
 
 from __future__ import annotations
@@ -33,12 +36,11 @@ from __future__ import annotations
 import struct
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from .otf2_native import _pack_locations, _parse_task_count
+from .packed import group_frame, parse_units
 
 from .. import schema as S
 
@@ -319,6 +321,13 @@ _EXTRA_FIELDS = [
 
 _HPCT_SCHEMA = T.StructType(list(S.CORE_FIELDS) + _EXTRA_FIELDS)
 
+_HDR_SCHEMA = T.StructType([
+    T.StructField("hdr_idx", T.LongType(), False),
+    T.StructField("prof_index", T.LongType(), False),
+    T.StructField("p_start", T.LongType(), False),
+    T.StructField("p_end", T.LongType(), False),
+])
+
 
 def read_hpctoolkit(
     spark: SparkSession, dirname: str, order: str = "trace"
@@ -348,87 +357,41 @@ def read_hpctoolkit(
         (meta["resolve"], meta["parent"], meta["name"], meta["is_loop"], profiles)
     )
 
-    # one parse task per GROUP of whole trace lines, packed by their
-    # byte ranges the way read_otf2_native packs location files: each
-    # Python task pays a fixed start-up cost that dwarfs a small line's
-    # parse. Each line reads only its own byte range. Arrow-batched
-    # mapInPandas with bounded chunk flushes (same shape as
-    # sources/projections.py / otf2_native.py — never a whole line's
-    # row list in task memory, no per-row Pyrolite pickling)
-    hdr_schema = T.StructType([
-        T.StructField("hdr_idx", T.LongType(), False),
-        T.StructField("prof_index", T.LongType(), False),
-        T.StructField("p_start", T.LongType(), False),
-        T.StructField("p_end", T.LongType(), False),
-    ])
+    def rows_of(hdr_idx, prof_index, p_start, p_end):
+        resolve, parent, name, is_loop, profs = b.value
+        hit = profs.get(int(prof_index), {})
+        process = int(hit.get("RANK", 0))
+        thread = int(hit.get("THREAD", 0))
+        core = hit.get("CORE")
+        host = hit.get("NODE")
+        # reproduce the reference's global append order for equal
+        # timestamps: lines append header-by-header
+        base = int(hdr_idx) * 100_000_000
+        for t, etype, nm, node, idx in _reconstruct_line(
+            trace_path, int(p_start), int(p_end), min_ts, max_ts,
+            resolve, parent, name, is_loop,
+        ):
+            if idx >= 100_000_000:
+                # mirror the OTF2 reader's 2^32 guard: a silent roll
+                # into the next header's id space would corrupt
+                # ordering and matching
+                raise ValueError(
+                    f"trace line {hdr_idx} exceeds 1e8 reconstructed "
+                    "events — packed event ids would collide; widen the "
+                    "id scheme"
+                )
+            seq = base + idx
+            yield (seq, int(t), seq, etype, nm, process, thread, None,
+                   core, host, node)
+
+    # one parse task per byte-balanced group of whole trace lines, the
+    # way read_otf2_native packs location files
     lines = [(i, int(pi), int(s), int(e))
              for i, (pi, s, e) in enumerate(headers)]
     sizes = [e - s for _i, _pi, s, e in lines]
-    groups = _pack_locations(
-        lines, sizes, _parse_task_count(spark, sum(sizes))
+    events = parse_units(
+        group_frame(spark, lines, sizes, _HDR_SCHEMA), rows_of, _HPCT_SCHEMA
     )
-    hdr_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(groups, max(1, len(groups)))
-        .flatMap(lambda g: g),
-        hdr_schema,
-    )
-
-    _CHUNK = 262_144
-
-    def _chunk_pdf(rows: list) -> pd.DataFrame:
-        cols = list(zip(*rows))
-        return pd.DataFrame({
-            S.EVENT_ID: pd.array(cols[0], dtype="int64"),
-            S.TIMESTAMP: pd.array(cols[1], dtype="int64"),
-            S.SEQ: pd.array(cols[2], dtype="int64"),
-            S.EVENT_TYPE: pd.Series(cols[3], dtype=object),
-            S.NAME: pd.Series(cols[4], dtype=object),
-            S.PROCESS: pd.array(cols[5], dtype="int32"),
-            S.THREAD: pd.array(cols[6], dtype="int32"),
-            S.ATTRIBUTES: pd.Series(cols[7], dtype=object),
-            "core": pd.array(cols[8], dtype="Int64"),
-            "host": pd.array(cols[9], dtype="Int64"),
-            "ctx_id": pd.array(cols[10], dtype="Int64"),
-        })
-
-    def parse(batches):
-        resolve, parent, name, is_loop, profs = b.value
-        for pdf_in in batches:
-            for hdr_idx, prof_index, p_start, p_end in pdf_in.itertuples(
-                index=False
-            ):
-                hit = profs.get(int(prof_index), {})
-                process = int(hit.get("RANK", 0))
-                thread = int(hit.get("THREAD", 0))
-                core = hit.get("CORE")
-                host = hit.get("NODE")
-                # reproduce the reference's global append order for
-                # equal timestamps: lines append header-by-header
-                base = int(hdr_idx) * 100_000_000
-                rows: list = []
-                for t, etype, nm, node, idx in _reconstruct_line(
-                    trace_path, int(p_start), int(p_end), min_ts, max_ts,
-                    resolve, parent, name, is_loop,
-                ):
-                    if idx >= 100_000_000:
-                        # mirror the OTF2 reader's 2^32 guard: a
-                        # silent roll into the next header's id space
-                        # would corrupt ordering and matching
-                        raise ValueError(
-                            f"trace line {hdr_idx} exceeds 1e8 "
-                            "reconstructed events — packed event ids "
-                            "would collide; widen the id scheme"
-                        )
-                    seq = base + idx
-                    rows.append((seq, int(t), seq, etype, nm, process,
-                                 thread, None, core, host, node))
-                    if len(rows) >= _CHUNK:
-                        yield _chunk_pdf(rows)
-                        rows = []
-                if rows:
-                    yield _chunk_pdf(rows)
-
-    events = hdr_df.mapInPandas(parse, schema=_HPCT_SCHEMA)
     # reference sorts globally by (timestamp, emission index)
     # (hpctoolkit_reader.py:1353-1363); within-location order is what the
     # matching pass consumes — order="process" returns the packed

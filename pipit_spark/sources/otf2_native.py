@@ -22,24 +22,27 @@ Spark shape mirrors the reference's multiprocessing fan-out
 (otf2_reader.py:436-452): the tiny definitions parse on the driver and
 broadcast; whole location ``.evt`` files, packed by bytes into
 core-sized groups, are the executor tasks (the archive must be on
-shared storage, same requirement as the reference).
+shared storage, same requirement as the reference). This is the only
+OTF2 reader: the packing, the bounded chunk flush and the rows→pandas
+step are the binary readers' shared driver (sources/packed.py).
+
+A stream that runs past the end of its file, or ends without its
+``0x02`` end-of-stream record, raises ``ValueError`` naming the file
+and the byte offset — a truncated ``.evt`` never yields a prefix of
+its events as if it were whole.
 """
 
 from __future__ import annotations
 
 import glob
-import heapq
 import os
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 from .. import schema as S
-
-# max parsed events buffered per Arrow chunk in the executor parse
-# (same bound as the projections reader's _CHUNK_LINES — keeps task
-# memory ~chunk-sized however large one location's .evt file grows)
-_CHUNK_EVENTS = 262_144
+from .packed import group_frame, parse_units
 
 # global definition record ids (OTF2_GlobalDefinitions.h public ids),
 # named as the otf2 python bindings name them (pipit's def_type values)
@@ -123,22 +126,35 @@ def _sp_int(buf: bytes, pos: int) -> tuple[int | None, int]:
     return int.from_bytes(buf[pos + 1: pos + 1 + n], "little"), pos + 1 + n
 
 
-def _records(buf: bytes, with_timestamps: bool):
-    """Yield (timestamp|None, record_type, payload) from a record stream."""
+def _records(buf: bytes, with_timestamps: bool, source: str):
+    """Yield (timestamp|None, record_type, payload) from a record
+    stream; ``ValueError`` naming ``source`` and the byte offset when a
+    record or timestamp runs past the end of ``buf`` or the stream ends
+    without its end-of-stream record."""
+    n = len(buf)
     pos = _HEADER_LEN
     ts = None
-    while pos < len(buf):
+    while pos < n:
         t = buf[pos]
         if t == _END_OF_STREAM:
             return
         if with_timestamps and t == _TIMESTAMP:
-            ts = int.from_bytes(buf[pos + 1: pos + 9], "little")
-            pos += 9
+            end = pos + 9
+            if end > n:
+                raise _truncated(source, pos, f"timestamp overruns {n} bytes")
+            ts = int.from_bytes(buf[pos + 1: end], "little")
+            pos = end
             continue
-        ln = buf[pos + 1]
-        payload = buf[pos + 2: pos + 2 + ln]
-        pos += 2 + ln
+        if pos + 1 == n or (end := pos + 2 + buf[pos + 1]) > n:
+            raise _truncated(source, pos, f"record 0x{t:02x} overruns {n} bytes")
+        payload = buf[pos + 2: end]
+        pos = end
         yield ts, t, payload
+    raise _truncated(source, n, "no end-of-stream record")
+
+
+def _truncated(source: str, pos: int, detail: str) -> ValueError:
+    return ValueError(f"{source}: truncated at byte {pos}: {detail}")
 
 
 def parse_global_defs(path: str) -> dict:
@@ -153,7 +169,7 @@ def parse_global_defs(path: str) -> dict:
     metric_class_members: dict[int, list[int]] = {}  # class ref -> member refs
     def_rows: list[tuple[str, int | None, dict | None]] = []
 
-    for _, t, p in _records(buf, with_timestamps=False):
+    for _, t, p in _records(buf, with_timestamps=False, source=path):
         name = GLOBAL_DEF_NAMES.get(t, f"Def{t}")
         ref = None
         attrs: dict[str, str] = {}
@@ -243,7 +259,7 @@ def _iter_location_rows(
     with open(evt_path, "rb") as f:
         buf = f.read()
     yield from _iter_buf_rows(
-        buf, process, thread, region_names, resolution, offset,
+        buf, evt_path, process, thread, region_names, resolution, offset,
         metric_members=metric_members,
         metric_class_members=metric_class_members,
     )
@@ -251,6 +267,7 @@ def _iter_location_rows(
 
 def _iter_buf_rows(
     buf: bytes,
+    source: str,
     process: int,
     thread: int,
     region_names: dict[int, str],
@@ -261,7 +278,8 @@ def _iter_buf_rows(
 ):
     """The byte-buffer core of :func:`_iter_location_rows`, shared
     with the streaming twin (whose ``binaryFile`` source hands the
-    .evt content as bytes rather than a path)."""
+    .evt content as bytes rather than a path); ``source`` names the
+    file in a truncation error."""
     if not 0 <= process < (1 << 23):
         raise ValueError(
             f"process {process} out of packed-id range [0, 2^23)"
@@ -279,7 +297,7 @@ def _iter_buf_rows(
     seq = 0
     pending_ts: int | None = None
     pending_vals: list[float | None] = [None] * n_metrics
-    for ts, t, p in _records(buf, with_timestamps=True):
+    for ts, t, p in _records(buf, with_timestamps=True, source=source):
         if t == _ATTRIBUTE_LIST:
             continue  # extra attrs for the next event; not an event row
         if t == EVT_METRIC and n_metrics:
@@ -345,32 +363,6 @@ def _iter_buf_rows(
         seq += 1
 
 
-def read_location_events(*args, **kwargs) -> list:
-    """List form of :func:`_iter_location_rows` (same signature) —
-    kept for callers that want one location materialized (tests, the
-    driver-side single-file path)."""
-    return list(_iter_location_rows(*args, **kwargs))
-
-
-def _chunk_pdf(rows: list, metric_names: list) -> pd.DataFrame:
-    """Bounded chunk of parsed event tuples → one Arrow-bound frame
-    (shared by the batch reader and the streaming twin)."""
-    cols = list(zip(*rows))
-    pdf = pd.DataFrame({
-        S.EVENT_ID: pd.array(cols[0], dtype="int64"),
-        S.TIMESTAMP: pd.array(cols[1], dtype="int64"),
-        S.SEQ: pd.array(cols[2], dtype="int64"),
-        S.EVENT_TYPE: pd.Series(cols[3], dtype=object),
-        S.NAME: pd.Series(cols[4], dtype=object),
-        S.PROCESS: pd.array(cols[5], dtype="int32"),
-        S.THREAD: pd.array(cols[6], dtype="int32"),
-        S.ATTRIBUTES: pd.Series(cols[7], dtype=object),
-    })
-    for i, nm in enumerate(metric_names):
-        pdf[nm] = pd.array(cols[8 + i], dtype="float64")
-    return pdf
-
-
 def _location_map(defs: dict, dirname: str | None = None) -> list:
     """(path-or-basename, process, thread) per location, in location
     order — process = location-group ref (MPI rank), thread = per-group
@@ -393,36 +385,18 @@ def _location_map(defs: dict, dirname: str | None = None) -> list:
     return out
 
 
-def _parse_task_count(spark: SparkSession, total_bytes: int) -> int:
-    """Parse tasks for a batch read: enough to fill the cluster, more
-    only when the archive outgrows ``spark.sql.files.maxPartitionBytes``
-    per task (the file scans' own split rule)."""
-    max_bytes = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
-    return max(spark.sparkContext.defaultParallelism, -(-total_bytes // max_bytes))
-
-
-def _pack_locations(locs: list, sizes: list[int], n_groups: int) -> list[list]:
-    """Greedy byte balance of whole location files into at most
-    ``n_groups`` non-empty groups: largest file first, each into the
-    currently lightest group; a group keeps its members in ``locs``
-    order. A location is never split, so every parse task emits
-    complete locations (``match_events_iter``'s input contract)."""
-    heap = [(0, g) for g in range(min(n_groups, len(locs)))]
-    members: list[list[int]] = [[] for _ in heap]
-    for i in sorted(range(len(locs)), key=lambda i: -sizes[i]):
-        load, g = heapq.heappop(heap)
-        members[g].append(i)
-        heapq.heappush(heap, (load + sizes[i], g))
-    return [[locs[i] for i in sorted(m)] for m in members]
-
-
 def _event_schema_with_metrics(metric_names: list):
-    from pyspark.sql import types as T
-
     return T.StructType(
         list(S.EVENT_SCHEMA.fields)
         + [T.StructField(nm, T.DoubleType(), True) for nm in metric_names]
     )
+
+
+_LOC_SCHEMA = T.StructType([
+    T.StructField("path", T.StringType(), False),
+    T.StructField("process", T.IntegerType(), False),
+    T.StructField("thread", T.IntegerType(), False),
+])
 
 
 def read_otf2_native(
@@ -433,8 +407,10 @@ def read_otf2_native(
     Each parse task reads whole locations, packed by bytes: the
     ``.evt`` files are balanced into at most ``max(defaultParallelism,
     ceil(archive bytes / spark.sql.files.maxPartitionBytes))`` groups
-    (:func:`_pack_locations`), so a location is never split across
-    partitions and small archives do not pay one Python task per file.
+    (:func:`~pipit_spark.sources.packed.group_frame`), so a location is
+    never split across partitions and small archives do not pay one
+    Python task per file. A truncated ``.evt`` fails the read with a
+    ``ValueError`` naming the file and the byte offset.
 
     order="trace" (default) reproduces the reference's global
     (timestamp, seq) frame order — one range shuffle. The matching
@@ -468,54 +444,23 @@ def read_otf2_native(
 
     b_defs = spark.sparkContext.broadcast(
         (defs["region_name"], defs["metric_members"],
-         defs["metric_class_members"], defs["metric_names"])
+         defs["metric_class_members"])
     )
 
-    from pyspark.sql import types as T
+    def rows_of(path, process, thread):
+        regions, members, class_members = b_defs.value
+        return _iter_location_rows(
+            path, int(process), int(thread), regions, res, off,
+            metric_members=members, metric_class_members=class_members,
+        )
 
-    schema = _event_schema_with_metrics(defs["metric_names"])
-    loc_schema = T.StructType([
-        T.StructField("path", T.StringType(), False),
-        T.StructField("process", T.IntegerType(), False),
-        T.StructField("thread", T.IntegerType(), False),
-    ])
-    # one input partition per GROUP of whole location files: the
-    # fan-out axis is the archive's own (reference otf2_reader.py:
-    # 436-452 fans an mp.Pool over the same files), packed into
-    # core-sized tasks because each Python parse task pays a fixed
-    # start-up cost that dwarfs a small .evt file's parse
+    # the fan-out axis is the archive's own (reference otf2_reader.py:
+    # 436-452 fans an mp.Pool over the same files)
     sizes = [os.path.getsize(path) for path, _p, _t in loc_map]
-    groups = _pack_locations(
-        loc_map, sizes, _parse_task_count(spark, sum(sizes))
+    events = parse_units(
+        group_frame(spark, loc_map, sizes, _LOC_SCHEMA), rows_of,
+        _event_schema_with_metrics(defs["metric_names"]),
     )
-    loc_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(groups, max(1, len(groups)))
-        .flatMap(lambda g: g),
-        loc_schema,
-    )
-
-    def parse(batches):
-        # Arrow-batched executor parse, bounded chunks per location
-        # (never a whole location's row list in memory) — replaces
-        # the previous row-at-a-time pickled-RDD flatMap, which paid
-        # Pyrolite serialization per event
-        regions, members, class_members, metric_names = b_defs.value
-        for pdf_in in batches:
-            for path, process, thread in pdf_in.itertuples(index=False):
-                rows: list = []
-                for row in _iter_location_rows(
-                    path, int(process), int(thread), regions, res, off,
-                    metric_members=members,
-                    metric_class_members=class_members,
-                ):
-                    rows.append(row)
-                    if len(rows) >= _CHUNK_EVENTS:
-                        yield _chunk_pdf(rows, metric_names)
-                        rows = []
-                if rows:
-                    yield _chunk_pdf(rows, metric_names)
-
-    events = loc_df.mapInPandas(parse, schema=schema)
     if order == "trace":
         events = events.orderBy(S.TIMESTAMP, S.SEQ)
     definitions = spark.createDataFrame(
@@ -539,10 +484,12 @@ def stream_otf2_native(
 
     ``readStream.format("binaryFile")`` discovers complete ``.evt``
     files per micro-batch; each parses through the SAME byte-buffer
-    core as the batch reader (:func:`_iter_buf_rows`), emitting
-    bounded ``_CHUNK_EVENTS`` Arrow chunks. File-granular source →
-    per-location state (seq counter, pending metric row) never spans
-    a trigger, exactly like the Projections twin.
+    core and the same bounded-chunk driver as the batch reader
+    (:func:`_iter_buf_rows`, :func:`~pipit_spark.sources.packed.parse_units`),
+    so a truncated file fails the query the way it fails a batch read.
+    File-granular source → per-location state (seq counter, pending
+    metric row) never spans a trigger, exactly like the Projections
+    twin.
 
     ``traces.def`` must already exist (OTF2 writes global definitions
     at archive creation for the location/clock tables this needs; an
@@ -565,11 +512,8 @@ def stream_otf2_native(
     }
     b = spark.sparkContext.broadcast(
         (lookup, defs["region_name"], defs["metric_members"],
-         defs["metric_class_members"], defs["metric_names"])
+         defs["metric_class_members"])
     )
-    schema = _event_schema_with_metrics(defs["metric_names"])
-
-    from pyspark.sql import types as T
 
     # binaryFile's fixed schema, required explicitly for streaming
     bin_schema = T.StructType([
@@ -587,28 +531,20 @@ def stream_otf2_native(
         "path", "content"
     )
 
-    def parse(batches):
-        lkp, regions, members, class_members, metric_names = b.value
-        for pdf_in in batches:
-            for path, content in pdf_in.itertuples(index=False):
-                fname = os.path.basename(path)
-                if fname not in lkp:
-                    raise ValueError(
-                        f"{fname} has no location entry in traces.def — "
-                        "cannot assign (process, thread) ids"
-                    )
-                process, thread = lkp[fname]
-                rows: list = []
-                for row in _iter_buf_rows(
-                    bytes(content), process, thread, regions, res, off,
-                    metric_members=members,
-                    metric_class_members=class_members,
-                ):
-                    rows.append(row)
-                    if len(rows) >= _CHUNK_EVENTS:
-                        yield _chunk_pdf(rows, metric_names)
-                        rows = []
-                if rows:
-                    yield _chunk_pdf(rows, metric_names)
+    def rows_of(path, content):
+        lkp, regions, members, class_members = b.value
+        fname = os.path.basename(path)
+        if fname not in lkp:
+            raise ValueError(
+                f"{fname} has no location entry in traces.def — "
+                "cannot assign (process, thread) ids"
+            )
+        process, thread = lkp[fname]
+        return _iter_buf_rows(
+            bytes(content), path, process, thread, regions, res, off,
+            metric_members=members, metric_class_members=class_members,
+        )
 
-    return files.mapInPandas(parse, schema=schema)
+    return parse_units(
+        files, rows_of, _event_schema_with_metrics(defs["metric_names"])
+    )

@@ -13,8 +13,10 @@ qualifying event wins (within a batch, events are processed in
 timestamp order; cross-batch ordering is the upstream watermark's
 responsibility, as with :mod:`pipit_spark.streaming.matching`).
 
-State per user = current step index + its timestamp (two scalars —
-constant memory per user; users who complete are dropped from state).
+State per user = current step index + its timestamp (constant memory
+per user). A user who completes keeps a terminal state row (step =
+number of steps), so events of theirs in later micro-batches cannot
+restart the funnel: like the batch funnel, one row per user.
 """
 
 from __future__ import annotations
@@ -87,11 +89,7 @@ def streaming_funnel(
                 if step == n_steps:
                     done.append((user, ts, start_ts, n_steps))
 
-        if step >= n_steps:
-            # completed — drop the state row entirely
-            state.remove()
-        else:
-            state.update((step, step_ts, start_ts))
+        state.update((step, step_ts, start_ts))
         if done:
             yield pd.DataFrame(
                 done, columns=[f.name for f in FUNNEL_OUT_SCHEMA.fields]

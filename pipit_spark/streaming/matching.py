@@ -58,7 +58,8 @@ _STATE_SCHEMA = T.StructType(
 
 def streaming_match(events: DataFrame) -> DataFrame:
     """events stream → matched-interval stream (one row per completed
-    call), state = per-location open-Enter stack."""
+    call), state = per-location open-Enter stack, keyed by (process,
+    thread) when the stream has a thread column, else by process."""
 
     def fn(
         key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -105,13 +106,16 @@ def streaming_match(events: DataFrame) -> DataFrame:
                 columns=[f.name for f in MATCHED_INTERVAL_SCHEMA.fields],
             )
 
+    # state per location: the batch pass's (process[, thread]) key, so
+    # the threads of one process never share a stack
+    loc = [S.PROCESS] + ([S.THREAD] if S.THREAD in events.columns else [])
     # project to the consumed columns before the worker boundary — extra
     # columns (esp. the MapType attributes, whose Arrow serialization is
     # ~27× the rest of the row) would otherwise ride through Python
     events = events.select(
-        S.PROCESS, S.EVENT_ID, S.TIMESTAMP, S.SEQ, S.EVENT_TYPE, S.NAME
+        *loc, S.EVENT_ID, S.TIMESTAMP, S.SEQ, S.EVENT_TYPE, S.NAME
     )
-    return events.groupBy(S.PROCESS).applyInPandasWithState(
+    return events.groupBy(*loc).applyInPandasWithState(
         fn,
         outputStructType=MATCHED_INTERVAL_SCHEMA,
         stateStructType=_STATE_SCHEMA,

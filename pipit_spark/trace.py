@@ -141,12 +141,16 @@ class Trace:
 
     @classmethod
     def from_otf2(cls, spark: SparkSession, dirname: str, **kw) -> "Trace":
-        """Reference: pipit/readers/otf2_reader.py, via the native
-        parser (sources/otf2.py). ``**kw`` reaches :func:`read_otf2` —
-        ``order="process"`` skips the parity sort."""
-        from .sources.otf2 import read_otf2
+        """Reference: pipit/readers/otf2_reader.py, via the one OTF2
+        reader, the native binary parser (sources/otf2_native.py) on the
+        binary readers' shared packed-parse driver. ``**kw`` reaches
+        :func:`read_otf2_native` — ``order="process"`` skips the parity
+        sort. Its errors reach the caller unchanged: a missing archive
+        is a ``FileNotFoundError``, a truncated ``.evt`` a
+        ``ValueError`` naming the file and the byte offset."""
+        from .sources.otf2_native import read_otf2_native
 
-        events, definitions = read_otf2(spark, dirname, **kw)
+        events, definitions = read_otf2_native(spark, dirname, **kw)
         return cls(events, definitions)
 
     @classmethod

@@ -125,22 +125,19 @@ def test_trace_unpersist_destroys_unmatched_broadcast(
     assert bc in destroyed
 
 
-def test_arrow_batch_option_is_consumed(spark, monkeypatch):
+def test_arrow_batch_option_is_consumed(spark):
     """matching.max_records_per_batch is CONSUMED by get_spark (the
     r10 rule: no decorative config options): the option lands in the
-    session's Arrow batch conf; the env var wins over it."""
+    session's Arrow batch conf."""
     import pipit_spark as pp
     from pipit_spark.session import get_spark
 
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     orig = spark.conf.get(key)
-    monkeypatch.delenv("SPARK_GRAFT_ARROW_BATCH", raising=False)
     try:
         pp.set_option("matching.max_records_per_batch", 16384)
         s = get_spark()  # getOrCreate applies confs to the live session
         assert s.conf.get(key) == "16384"
-        monkeypatch.setenv("SPARK_GRAFT_ARROW_BATCH", "8192")
-        assert get_spark().conf.get(key) == "8192"
     finally:
         pp.reset_all_options()
         spark.conf.set(key, orig)

@@ -11,11 +11,9 @@
 2. The r11 ADVICE batch: the chunked kernel's self-sizing accepts a
    lazy ``row_count`` hint (Trace memoizes its events count and plumbs
    it through, so un-sized chunked passes on DERIVED plans never
-   re-execute the upstream plan per call), simhash_pairs' per-block
+   re-execute the upstream plan per call), and simhash_pairs' per-block
    persist has a per-call release lifecycle (``persist=`` kwarg,
-   ``_blocks_cache`` handle, ``release_block_caches``), and
-   SPARK_GRAFT_ARROW_BATCH gets the registry's positive-int
-   validation instead of silently disabling the Arrow batch bound.
+   ``_blocks_cache`` handle, ``release_block_caches``).
 3. bench.py's cooling-box tripwire: the r10/r11 driver benches showed
    monotonically-declining pass totals with ``contaminated: false`` —
    the new check flags that shape.
@@ -24,7 +22,6 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-import pytest
 
 from tests.test_round9 import _adversarial_events, _sorted, tiny_batch_spark  # noqa: F401
 
@@ -162,16 +159,6 @@ def test_simhash_pairs_persist_lifecycle(spark):
     D.release_block_caches()
     assert D._PERSISTED_BLOCKS == []
     assert not handle.storageLevel.useMemory
-
-
-# ------------------------------------------------ env validation
-def test_arrow_batch_env_validation(monkeypatch):
-    from pipit_spark.session import get_spark
-
-    for bad in ("0", "-3", "junk"):
-        monkeypatch.setenv("SPARK_GRAFT_ARROW_BATCH", bad)
-        with pytest.raises(ValueError, match="SPARK_GRAFT_ARROW_BATCH"):
-            get_spark(app_name="env-validation-test")
 
 
 # ------------------------------------------------ bench cooling check

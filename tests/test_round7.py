@@ -7,6 +7,7 @@ import os
 import shutil
 from urllib.parse import urlparse
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -265,34 +266,51 @@ def test_projections_chunked_parse_bit_identical(spark, monkeypatch):
     ]
 
 
-def test_otf2_chunked_parse_bit_identical(spark, monkeypatch):
-    """The Arrow-batched OTF2 reader flushes bounded event chunks per
-    location; a pathologically small chunk must reproduce the
-    default-chunk read bit-for-bit on the golden trace."""
-    import os
+def _chunk_bound_reads(monkeypatch, read):
+    """(default-bound frame, 7-event-bound frame) of ``read()``, each
+    sorted by event_id with attributes as JSON."""
+    import pipit_spark.sources.packed as P
 
-    import pipit_spark.sources.otf2_native as O
+    def frame():
+        pdf = read().withColumn("attributes", F.to_json("attributes")).toPandas()
+        return pdf.sort_values("event_id").reset_index(drop=True)
 
-    ref = "/root/reference/pipit/tests/data/ping-pong-otf2"
-    if not os.path.isdir(ref):
-        import pytest
+    whole = frame()
+    monkeypatch.setattr(P, "_CHUNK_EVENTS", 7)
+    return whole, frame()
 
-        pytest.skip("reference golden traces unavailable")
 
-    whole = O.read_otf2_native(spark, ref)[0].toPandas()
-    monkeypatch.setattr(O, "_CHUNK_EVENTS", 7)
-    chunked = O.read_otf2_native(spark, ref)[0].toPandas()
+def test_otf2_chunked_parse_bit_identical(spark, monkeypatch,
+                                          write_otf2_archive):
+    """The Arrow-batched OTF2 reader flushes bounded event chunks; a
+    pathologically small chunk must reproduce the default-chunk read
+    bit-for-bit — uneven locations (one with no events) put a chunk
+    boundary inside and across every location file."""
+    from pipit_spark.sources.otf2_native import read_otf2_native
 
-    key = ["process", "seq"]
-    whole = whole.sort_values(key).reset_index(drop=True)
-    chunked = chunked.sort_values(key).reset_index(drop=True)
-    assert whole.drop(columns="attributes").equals(
-        chunked.drop(columns="attributes")
+    frames = [0, 50, 4, 13, 1]
+    archive = write_otf2_archive(frames)
+    whole, chunked = _chunk_bound_reads(
+        monkeypatch, lambda: read_otf2_native(spark, archive)[0]
     )
-    assert [dict(a) if a is not None else None
-            for a in whole.attributes] == [
-        dict(a) if a is not None else None for a in chunked.attributes
-    ]
+    assert len(whole) == 3 * sum(frames)
+    pd.testing.assert_frame_equal(whole, chunked)
+
+
+def test_hpctoolkit_chunked_parse_bit_identical(spark, monkeypatch, tmp_path):
+    """The HPCToolkit reader flushes through the same bounded chunks: a
+    7-event bound reproduces the default-bound read bit-for-bit on a
+    synthetic 16-thread db."""
+    from pipit_spark.sources.hpctoolkit import read_hpctoolkit
+    from tools.synth_hpctoolkit import synthesize
+
+    db = str(tmp_path / "db")
+    synthesize(db, 16, 40)
+    whole, chunked = _chunk_bound_reads(
+        monkeypatch, lambda: read_hpctoolkit(spark, db, order="process")
+    )
+    assert len(whole) == 308
+    pd.testing.assert_frame_equal(whole, chunked)
 
 
 def test_stream_projections_incremental_matches_batch(spark, tmp_path):

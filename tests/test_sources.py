@@ -416,19 +416,86 @@ def test_otf2_packed_id_overflow_guard(tmp_path):
     colliding ids across locations."""
     import pytest
 
-    from pipit_spark.sources.otf2_native import read_location_events
+    from pipit_spark.sources.otf2_native import _iter_location_rows
+    from tools.synth_otf2 import _HEADER
 
     evt = tmp_path / "loc.evt"
-    evt.write_bytes(b"")
+    evt.write_bytes(_HEADER + b"\x02")  # a location with no events
     common = dict(
         region_names={}, resolution=1_000_000_000, offset=0
     )
     with pytest.raises(ValueError, match="process"):
-        read_location_events(str(evt), 1 << 23, 0, **common)
+        list(_iter_location_rows(str(evt), 1 << 23, 0, **common))
     with pytest.raises(ValueError, match="thread"):
-        read_location_events(str(evt), 0, 256, **common)
+        list(_iter_location_rows(str(evt), 0, 256, **common))
     # in-range empty location parses to no rows
-    assert read_location_events(str(evt), (1 << 23) - 1, 255, **common) == []
+    assert list(_iter_location_rows(str(evt), (1 << 23) - 1, 255, **common)) == []
+
+
+def _truncate(path: str, keep: int) -> None:
+    with open(path, "rb") as f:
+        buf = f.read()
+    with open(path, "wb") as f:
+        f.write(buf[:keep])
+
+
+def test_truncated_evt_raises_with_file_and_offset(tmp_path):
+    """A cut .evt stream raises ValueError naming the file and the byte
+    offset: a timestamp or a record that runs past the end, and a
+    stream that ends without its 0x02 end-of-stream record (an empty
+    file included). The parse never returns the prefix as if whole."""
+    from pipit_spark.sources.otf2_native import _iter_location_rows
+    from tools.synth_otf2 import write_loc_evt
+
+    os.makedirs(tmp_path / "traces")
+    write_loc_evt((str(tmp_path), 0, 50, 1))  # 150 events
+    evt = str(tmp_path / "traces" / "0.evt")
+    with open(evt, "rb") as f:
+        whole = f.read()
+
+    def rows():
+        return list(_iter_location_rows(
+            evt, 0, 0, region_names={}, resolution=1_000_000_000, offset=0,
+        ))
+
+    assert len(rows()) == 150
+    # header (18 bytes), then the first timestamp record (9 bytes) at 18
+    # and the first send record (type, length, payload) at 27
+    for keep, at in [(20, "18"), (29, "27"), (len(whole) // 2, r"\d+"),
+                     (len(whole) - 1, str(len(whole) - 1)), (0, "0")]:
+        _truncate(evt, keep)
+        with pytest.raises(ValueError, match=rf"0\.evt: truncated at byte {at}:"):
+            rows()
+        with open(evt, "wb") as f:
+            f.write(whole)
+
+
+def test_truncated_evt_fails_the_read(spark, write_otf2_archive, tmp_path):
+    """A 150-event location cut at half its bytes fails Trace.from_otf2
+    and the streaming twin with the file and offset in the error,
+    instead of parsing to a prefix of its events."""
+    from pipit_spark import Trace
+    from pipit_spark.sources.otf2_native import stream_otf2_native
+
+    archive = write_otf2_archive([50, 20])
+    evt = os.path.join(archive, "traces", "0.evt")
+    _truncate(evt, os.path.getsize(evt) // 2)
+    want = r"0\.evt: truncated at byte \d+"
+
+    with pytest.raises(Exception, match=want):
+        Trace.from_otf2(spark, archive).events.count()
+
+    q = (
+        stream_otf2_native(spark, archive)
+        .writeStream.format("parquet")
+        .option("path", str(tmp_path / "out"))
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    with pytest.raises(Exception, match=want):
+        q.awaitTermination(120)
+    q.stop()
 
 
 # ------------------------------------- binary-reader parse-task packing
@@ -524,7 +591,7 @@ def test_pack_locations_balances_bytes():
     """Largest file first into the lightest group: one 4x file and
     fifteen unit files split into four groups whose loads differ by at
     most one unit file, each location in exactly one group."""
-    from pipit_spark.sources.otf2_native import _pack_locations
+    from pipit_spark.sources.packed import _pack_locations
 
     locs = [(f"{i}.evt", i, 0) for i in range(16)]
     sizes = [100] * 15 + [400]

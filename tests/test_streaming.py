@@ -419,8 +419,9 @@ def test_streaming_bpe_encode(spark, tmp_path):
 
 def test_streaming_matching_randomized(spark, tmp_path):
     """Randomized differential: streaming_match over arbitrary
-    micro-batch splits of random well-nested multi-process traces agrees
-    pair-for-pair with the batch matching kernel."""
+    micro-batch splits of random well-nested traces (3 processes × 2
+    threads, interleaved in time) agrees pair-for-pair with the batch
+    matching kernel — state is per (process, thread) location."""
     import random
 
     import pandas as pd
@@ -432,7 +433,7 @@ def test_streaming_matching_randomized(spark, tmp_path):
     rng = random.Random(23)
     rows = []
     eid = 0
-    for proc in range(3):
+    for proc, thread in [(p, t) for p in range(3) for t in range(2)]:
         ts = 0
         stack = []
         seq = 0
@@ -441,16 +442,16 @@ def test_streaming_matching_randomized(spark, tmp_path):
             ts += rng.randrange(1, 50)
             if stack and (len(stack) >= 4 or rng.random() < 0.45):
                 name = stack.pop()
-                rows.append((eid, ts, seq, "Leave", name, proc, 0, None))
+                rows.append((eid, ts, seq, "Leave", name, proc, thread, None))
             else:
                 name = f"f{rng.randrange(5)}"
                 stack.append(name)
-                rows.append((eid, ts, seq, "Enter", name, proc, 0, None))
+                rows.append((eid, ts, seq, "Enter", name, proc, thread, None))
             eid += 1
             seq += 1
         while stack:  # close remaining frames
             ts += rng.randrange(1, 50)
-            rows.append((eid, ts, seq, "Leave", stack.pop(), proc, 0, None))
+            rows.append((eid, ts, seq, "Leave", stack.pop(), proc, thread, None))
             eid += 1
             seq += 1
 
@@ -498,6 +499,73 @@ def test_streaming_matching_randomized(spark, tmp_path):
         (int(r["enter_event_id"]), int(r["leave_event_id"]))
         for r in spark.sql("select * from rand_matched").collect()
     )
+    assert got == want
+
+
+def test_streaming_funnel_one_row_per_user(spark, tmp_path):
+    """streaming_funnel over three micro-batches gives batch funnel's
+    completions, one row per user: a user whose events go on after
+    completing (a second full view→cart→buy run in a later batch) is
+    not reported again, a funnel may complete across batches, and an
+    out-of-order step does not count."""
+    import pandas as pd
+    from pyspark.sql import types as T
+
+    from pipit_spark.operators.relational import funnel
+    from pipit_spark.streaming.funnel import streaming_funnel
+
+    steps = ["view", "cart", "buy"]
+    batches = [
+        [(1, "view", 1), (1, "cart", 2), (1, "buy", 3),
+         (2, "view", 5), (3, "view", 1), (5, "view", 2), (5, "cart", 4)],
+        [(1, "view", 10), (1, "cart", 11), (1, "buy", 12),
+         (2, "cart", 6), (3, "buy", 2), (5, "buy", 9), (4, "view", 20)],
+        [(2, "buy", 7), (2, "view", 8), (3, "cart", 3),
+         (4, "cart", 21), (4, "buy", 22),
+         (5, "view", 30), (5, "cart", 31), (5, "buy", 32)],
+    ]
+    schema = T.StructType([
+        T.StructField("user_id", T.LongType()),
+        T.StructField("event_type", T.StringType()),
+        T.StructField("ts", T.LongType()),
+    ])
+    d = tmp_path / "funnel_stream"
+    d.mkdir()
+    for i, rows in enumerate(batches):
+        spark.createDataFrame(
+            pd.DataFrame(rows, columns=schema.names), schema=schema
+        ).coalesce(1).write.parquet(str(d / f"b{i}"))
+    stream = (
+        spark.readStream.schema(schema)
+        .option("recursiveFileLookup", "true")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(str(d))
+    )
+    q = (
+        streaming_funnel(stream, steps)
+        .writeStream.format("memory")
+        .queryName("funnel_done")
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "funnel_ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(180)
+    got = sorted(
+        (r["user_id"], r["completed_at"], r["started_at"], r["n_steps"])
+        for r in spark.sql("select * from funnel_done").collect()
+    )
+
+    every = spark.createDataFrame(
+        pd.DataFrame([r for b in batches for r in b], columns=schema.names),
+        schema=schema,
+    )
+    want = sorted(
+        (r["user_id"], r["t_step3"], r["t_step1"], 3)
+        for r in funnel(every, steps).collect()
+        if r["steps_completed"] == 3
+    )
+    assert want == [(1, 3, 1, 3), (2, 7, 5, 3), (4, 22, 20, 3), (5, 9, 2, 3)]
     assert got == want
 
 
