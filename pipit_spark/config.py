@@ -2,9 +2,10 @@
 config.py semantics: validated get/set/reset of named options).
 
 Spark-relevant options are added alongside the reference's UI-oriented
-ones — matching-pass batch sizing and kernel choice, dedup bloom
+ones — the Arrow batch size of the matching pass and the dedup bloom
 sizing — so deployments tune the engine the same way users tune the
-reference.
+reference. Per-call choices (the matching kernel, whether a Trace
+persists its matched frame) are parameters, not options.
 """
 
 from __future__ import annotations
@@ -43,19 +44,6 @@ def _word_aligned_int(key: str, value: Any) -> None:
         )
 
 
-def _choice(*allowed: str) -> Callable[[str, Any], None]:
-    def check(key: str, value: Any) -> None:
-        if value not in allowed:
-            raise ValueError(f"{key} must be one of {allowed}, got {value!r}")
-
-    return check
-
-
-def _bool(key: str, value: Any) -> None:
-    if not isinstance(value, bool):
-        raise ValueError(f"invalid value {value!r} for {key!r}: expected bool")
-
-
 # key -> (default, validator)
 _REGISTRY: dict[str, tuple[Any, Callable[[str, Any], None]]] = {
     # reference options (pipit/tests/config.py golden values)
@@ -67,11 +55,6 @@ _REGISTRY: dict[str, tuple[Any, Callable[[str, Any], None]]] = {
     # and by the location kernel's emit slices. Emit-lane per-task heap
     # scales with it (SCALING.md round-11 stock-heap probe).
     "matching.max_records_per_batch": (65536, _pos_int),
-    # default matching kernel when the call site does not pick one
-    # (operators/matching.py resolution order: explicit arg > this)
-    "matching.kernel": ("location", _choice("location", "chunked")),
-    # default for Trace(cache=None): persist the matched frame
-    "cache.matched_frame": (True, _bool),
     # incremental-ingestion bloom pre-filter sizing (fp ≈ (1-e^-kn/m)^k);
     # bits must be word-aligned for the bitmap's bit_or aggregation
     "dedup.bloom_bits": (1 << 20, _word_aligned_int),

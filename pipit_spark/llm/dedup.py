@@ -170,8 +170,6 @@ def _pair_common_counts(
     docs: DataFrame,
     n: int,
     max_df: int,
-    persist: bool = True,
-    survivor_broadcast: bool = False,
 ) -> DataFrame:
     """The shared bucketed inverted-index plan behind every set-overlap
     pair operator: distinct shingles per doc with set sizes riding the
@@ -187,29 +185,16 @@ def _pair_common_counts(
     and size-filtering after would buffer a stop-shingle's ENTIRE
     posting list (corpus-scale for "of the and" at 1e9 docs) in one
     task before the filter discards it. The shingle stream feeds both
-    the count and the join probe; with ``persist=True`` (default) the
-    compact PER-DOC set frame caches spill-safely — one row per doc,
-    far cheaper to materialize than the exploded shingle stream, which
-    both branches re-derive with an in-memory explode — for the
-    query's lifetime (the vocab_coverage contract: clear with
-    ``spark.catalog.clearCache()``, or pass ``persist=False`` to trade
-    a second text scan for zero cache footprint).
-
-    ``survivor_broadcast=True`` is the BOUNDED-corpus fast path: the
-    surviving-shingle set rides a broadcast join, so the exploded
-    shingle stream never pays the probe-side exchange, and the persist
-    is skipped (two text scans beat materializing the set frame once
-    nothing downstream re-reads it) — measured 1.73 s→1.38 s at
-    sf0.1. It is OPT-IN because the surviving set (df ∈ [2, max_df])
-    grows with the corpus: at 100 TB it is NOT broadcastable, and the
-    default count-first shuffle plan — whose exchanges are map-side
-    combined down to one row per distinct shingle — is the shape that
-    survives. Flip it only when the shingle vocabulary is known to fit
-    an executor (≲ low GB)."""
+    the count and the join probe, so the compact PER-DOC set frame
+    caches spill-safely — one row per doc, far cheaper to materialize
+    than the exploded shingle stream, which both branches re-derive
+    with an in-memory explode — for the query's lifetime (the
+    vocab_coverage contract: clear with ``spark.catalog.clearCache()``).
+    The count-first shuffle plan, whose exchanges are map-side combined
+    down to one row per distinct shingle, is the shape that survives
+    corpus growth: the surviving set (df ∈ [2, max_df]) grows with the
+    corpus, so it is never broadcast."""
     from pyspark import StorageLevel
-
-    if survivor_broadcast:
-        persist = False
 
     sets = (
         docs.select("doc_id", _tokens(F.col("text")).alias("toks"))
@@ -241,9 +226,8 @@ def _pair_common_counts(
         )
         .groupBy("doc_id")
         .agg(F.collect_set("shingle").alias("__set"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    if persist:
-        sets = sets.persist(StorageLevel.MEMORY_AND_DISK)
     sh = sets.select(
         "doc_id",
         F.size("__set").alias("sz"),
@@ -257,8 +241,6 @@ def _pair_common_counts(
     )
     # post-filter, every shingle has <= max_df rows — the pair
     # explosion is bounded by construction
-    if survivor_broadcast:
-        surviving = F.broadcast(surviving)
     # intra-bucket pairs via a streaming SELF-JOIN on the bucket key
     # (r12; the r11 simhash reform's shape): the old
     # collect_list-of-(doc_id,sz) + double-explode buffered each
@@ -295,19 +277,14 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.8,
     max_df: int = 1000,
-    survivor_broadcast: bool = False,
 ) -> DataFrame:
     """Near-duplicate pairs by word-n-gram Jaccard similarity.
 
     Plan: the shared :func:`_pair_common_counts` inverted index (df cap
     kills stop-shingle skew; only docs sharing >=1 shingle ever pair
     up), then Jaccard = |∩| / (|A| + |B| − |∩|).
-    ``survivor_broadcast`` passes through to the index plan (bounded-
-    corpus fast path — see there).
     """
-    pairs = _pair_common_counts(
-        docs, n, max_df, survivor_broadcast=survivor_broadcast
-    )
+    pairs = _pair_common_counts(docs, n, max_df)
     return (
         pairs.withColumn(
             "jaccard",
@@ -509,24 +486,9 @@ def build_lsh_index(
     mode — orders smaller than the text it indexes."""
     rows_per_band = num_hashes // bands
     if portable:
-        # MIN is duplicate-invariant -> skip the shingle dedup shuffle
-        sh = shingle_table(docs, shingle_n, distinct=False)
-        sigs = (
-            sh.groupBy("doc_id")
-            .agg(
-                *[
-                    F.min(
-                        F.md5(F.concat(F.lit(f"{i}:"), F.col("shingle")))
-                    ).alias(f"__mh_{i}")
-                    for i in range(num_hashes)
-                ]
-            )
-            .select(
-                "doc_id",
-                F.array(
-                    *[F.col(f"__mh_{i}") for i in range(num_hashes)]
-                ).alias("sig"),
-            )
+        sigs = minhash_signatures(docs, num_hashes, shingle_n).select(
+            "doc_id",
+            F.array(*[F.col(f"mh_{i}") for i in range(num_hashes)]).alias("sig"),
         )
         if persist:
             sigs = sigs.persist()
@@ -2076,7 +2038,6 @@ def containment_pairs(
     n: int = 3,
     threshold: float = 0.8,
     max_df: int = 1000,
-    survivor_broadcast: bool = False,
 ) -> DataFrame:
     """Asymmetric near-dup pairs by n-gram CONTAINMENT
     ``|A∩B| / |A|`` — the subsumption detector Jaccard misses: a short
@@ -2089,9 +2050,7 @@ def containment_pairs(
     both directions of a pair come from one pair row via an explode,
     and the qualifying direction(s) are emitted.
     """
-    pairs = _pair_common_counts(
-        docs, n, max_df, survivor_broadcast=survivor_broadcast
-    )
+    pairs = _pair_common_counts(docs, n, max_df)
     directions = pairs.select(
         F.explode(
             F.array(

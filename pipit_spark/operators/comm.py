@@ -450,6 +450,30 @@ def comm_locality(
     )
 
 
+def _recv_waits(events: DataFrame, matched: DataFrame) -> DataFrame:
+    """``(src, dst, send_ts, recv_enter_ts)`` per FIFO-matched message:
+    the recv Instant's ``parent_event_id`` is its enclosing operation's
+    Enter (stack top at the instant), whose timestamp is when the
+    receiver started waiting. The matched-message frame (ids + channel
+    only) joins the matched events twice by event id, so shuffle volume
+    is matched-message-sized and event bodies never move."""
+    inst = matched.select(
+        F.col(S.EVENT_ID).alias("recv_event_id"),
+        F.col("parent_event_id").alias("__pe"),
+    )
+    par = matched.select(
+        F.col(S.EVENT_ID).alias("__pe"),
+        F.col(S.TIMESTAMP).alias("recv_enter_ts"),
+    )
+    return (
+        match_messages(events)
+        .select("src", "dst", "recv_event_id", "send_ts")
+        .join(inst, "recv_event_id")
+        .join(par, "__pe")
+        .select("src", "dst", "send_ts", "recv_enter_ts")
+    )
+
+
 def late_senders(events: DataFrame, matched: DataFrame) -> DataFrame:
     """Scalasca-style late-sender wait states (Geimer et al., "The
     Scalasca performance toolset architecture", 2010 — public
@@ -459,31 +483,14 @@ def late_senders(events: DataFrame, matched: DataFrame) -> DataFrame:
     ``send_ts − recv_enter_ts``. Per channel: matched count, late
     count + integer-ppm share, total and max blocked ns.
 
-    ``recv_enter_ts`` comes generically from the matching pass — the
-    recv Instant's ``parent_event_id`` is its enclosing operation's
-    Enter (stack top at the instant), so the operator works on any
-    ingested format, not just brackets the fixture happens to emit.
+    ``recv_enter_ts`` comes generically from the matching pass
+    (:func:`_recv_waits`), so the operator works on any ingested
+    format, not just brackets the fixture happens to emit.
 
-    Plan: the matched-message frame (ids + channel only) joins the
-    matched events twice by event id (instant → parent → parent's
-    Enter timestamp), then one hash aggregation on the channel.
-    Shuffle volume is matched-message-sized; event bodies never move.
-    All-BIGINT waits, no mean column (PLANS.md §14 — emit sums and
-    counts, divide at read time)."""
-    msgs = match_messages(events)
-    inst = matched.select(
-        F.col(S.EVENT_ID).alias("recv_event_id"),
-        F.col("parent_event_id").alias("__pe"),
-    )
-    par = matched.select(
-        F.col(S.EVENT_ID).alias("__pe"),
-        F.col(S.TIMESTAMP).alias("recv_enter_ts"),
-    )
-    j = (
-        msgs.select("src", "dst", "recv_event_id", "send_ts")
-        .join(inst, "recv_event_id")
-        .join(par, "__pe")
-    )
+    Plan: :func:`_recv_waits`, then one hash aggregation on the
+    channel. All-BIGINT waits, no mean column (PLANS.md §14 — emit sums
+    and counts, divide at read time)."""
+    j = _recv_waits(events, matched)
     wait = F.greatest(
         (F.col("send_ts") - F.col("recv_enter_ts")).cast("long"),
         F.lit(0).cast("long"),
@@ -512,20 +519,7 @@ def late_receivers(events: DataFrame, matched: DataFrame) -> DataFrame:
     :func:`late_senders` — the two read the identical joined frame, so
     a combined dashboard costs one extra aggregation, not a new
     scan."""
-    msgs = match_messages(events)
-    inst = matched.select(
-        F.col(S.EVENT_ID).alias("recv_event_id"),
-        F.col("parent_event_id").alias("__pe"),
-    )
-    par = matched.select(
-        F.col(S.EVENT_ID).alias("__pe"),
-        F.col(S.TIMESTAMP).alias("recv_enter_ts"),
-    )
-    j = (
-        msgs.select("src", "dst", "recv_event_id", "send_ts")
-        .join(inst, "recv_event_id")
-        .join(par, "__pe")
-    )
+    j = _recv_waits(events, matched)
     wait = F.greatest(
         (F.col("recv_enter_ts") - F.col("send_ts")).cast("long"),
         F.lit(0).cast("long"),
@@ -557,20 +551,7 @@ def wait_attribution(events: DataFrame, matched: DataFrame) -> DataFrame:
     One extra pair of hash aggregations over the same joined frame as
     :func:`late_senders`; a process with traffic in neither direction
     simply doesn't appear."""
-    msgs = match_messages(events)
-    inst = matched.select(
-        F.col(S.EVENT_ID).alias("recv_event_id"),
-        F.col("parent_event_id").alias("__pe"),
-    )
-    par = matched.select(
-        F.col(S.EVENT_ID).alias("__pe"),
-        F.col(S.TIMESTAMP).alias("recv_enter_ts"),
-    )
-    j = (
-        msgs.select("src", "dst", "recv_event_id", "send_ts")
-        .join(inst, "recv_event_id")
-        .join(par, "__pe")
-    )
+    j = _recv_waits(events, matched)
     wait = F.greatest(
         (F.col("send_ts") - F.col("recv_enter_ts")).cast("long"),
         F.lit(0).cast("long"),

@@ -61,6 +61,11 @@ Two kernels share those semantics bit-for-bit:
   ``assume_wellformed=True`` skips the audit and raises loudly if a
   location ends with an open Enter.
 
+The kernel is a per-call choice (``kernel=``, default "location"). Both
+public entry points run one body, :func:`_match`: :func:`match_events`
+hash-partitions by location (and self-sizes the chunked pass), while
+:func:`match_events_iter` trusts input already partitioned by location.
+
 A pure-SQL window-function fast path for well-nested traces is provided in
 :func:`well_nested_matching_sql` (used by tests and the DuckDB oracle).
 """
@@ -634,10 +639,10 @@ def _chunked_match(
     num_partitions: int | None,
     assume_wellformed: bool,
 ) -> DataFrame:
-    """Shared chunked-kernel driver for :func:`match_events` /
-    :func:`match_events_iter`: resolve the unmatched-Enter set with the
-    audit (skipped under ``assume_wellformed``), broadcast it (NOT
-    pickled into every task closure), and build the emit plan.
+    """Chunked-kernel driver behind :func:`_match`: resolve the
+    unmatched-Enter set with the audit (skipped under
+    ``assume_wellformed``), broadcast it (NOT pickled into every task
+    closure), and build the emit plan.
 
     Broadcast lifecycle: the unmatched-set Broadcast (up to ~100 MB at
     the 2 M-id collect cap) is attached to the returned frame as
@@ -940,18 +945,32 @@ def _dedup_matched_schema(
     return T.StructType(fields)
 
 
-def _location_match(
-    enc: DataFrame,
-    map_cols: dict,
-    out_schema: T.StructType,
-    group_cols: list[str],
-    metric_cols: list[str],
+def _match(
+    events: DataFrame,
+    metric_cols: list[str] | None,
+    kernel: str,
+    assume_wellformed: bool,
     num_partitions: int | None,
 ) -> DataFrame:
-    """Location-kernel plan shared by :func:`match_events` /
-    :func:`match_events_iter`: :func:`_sorted_locations`, then ONE
-    ``mapInPandas`` running :func:`_stack_match_multi` over each whole
-    partition."""
+    """Body of :func:`match_events` / :func:`match_events_iter`: check
+    the kernel, encode the map columns, build the output schema and
+    location keys, then plan the chosen kernel over
+    :func:`_sorted_locations` (``num_partitions=None`` skips its
+    repartition). The location kernel is ONE ``mapInPandas`` running
+    :func:`_stack_match_multi` over each whole partition."""
+    if kernel not in ("location", "chunked"):
+        raise ValueError(f"kernel must be 'location' or 'chunked', got {kernel!r}")
+    metric_cols = list(metric_cols or [])
+    enc, map_cols = _encode_map_cols(events)
+    out_schema = _dedup_matched_schema(enc.schema, metric_cols)
+    group_cols = [S.PROCESS] + ([S.THREAD] if S.THREAD in events.columns else [])
+
+    if kernel == "chunked":
+        return _chunked_match(
+            events, enc, map_cols, out_schema, group_cols, metric_cols,
+            num_partitions, assume_wellformed,
+        )
+
     emit_step = int(get_option("matching.max_records_per_batch"))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -974,9 +993,8 @@ def match_events(
     events: DataFrame,
     metric_cols: list[str] | None = None,
     num_partitions: int | None = None,
-    kernel: str | None = None,
+    kernel: str = "location",
     assume_wellformed: bool = False,
-    row_count=None,
 ) -> DataFrame:
     """Run the fused matching pass over the whole trace.
 
@@ -1014,9 +1032,6 @@ def match_events(
     (:func:`_emit_slices`, ``matching.max_records_per_batch`` rows per
     Arrow batch), so the location kernel is correct at any location
     width and its envelope is purely the worker-RSS one above.
-    ``row_count`` (int or zero-arg callable) optionally supplies the
-    events row count so the chunked kernel's self-sizing skips its
-    count job — ``Trace`` memoizes the count across its derived passes.
     ``kernel="chunked"`` deletes that envelope entirely (resident state
     ∝ stack depth — module docstring); it costs one extra NARROW audit
     scan (Enter/Leave keys only, pruned at the source), a pure
@@ -1030,76 +1045,43 @@ def match_events(
     instead of emitting wrong depths. Choose "chunked" whenever
     events-per-location × concurrent tasks threatens executor memory
     (the round-8 1.2 B capstone's binding constraint).
-
-    ``kernel=None`` resolves the ``matching.kernel`` config option
-    (default "location") — tooling can switch kernels without plumbing
-    the parameter through every call site.
     """
-    metric_cols = list(metric_cols or [])
-    if kernel is None:
-        kernel = get_option("matching.kernel")
-    if kernel not in ("location", "chunked"):
-        raise ValueError(f"kernel must be 'location' or 'chunked', got {kernel!r}")
-    enc, map_cols = _encode_map_cols(events)
-    out_schema = _dedup_matched_schema(enc.schema, metric_cols)
-    group_cols = [S.PROCESS]
-    if S.THREAD in events.columns:
-        group_cols.append(S.THREAD)
     base = events.sparkSession.sparkContext.defaultParallelism
     n_part = num_partitions or base
-
-    if kernel == "chunked":
-        # self-sizing (round-11 heap-floor rule): unless the caller
-        # sized the pass, shard the emit at ~_CHUNKED_ROWS_PER_TASK
-        # rows per task instead of bare cluster parallelism — at the
-        # billion tier the default under-shards into emit sorts that
-        # OOM stock heaps. The count is one narrow job (1.3-4 s on a
-        # 1.2 B parquet, metadata-dominated) on a path that is already
-        # eager (the audit); assume_wellformed=True keeps the pass
-        # fully lazy and therefore keeps the bare default — those
-        # callers size explicitly (examples/billion_scale.py does).
-        if num_partitions is None and not assume_wellformed:
-            # ONE count sizes the pass by both measured rules below.
-            # On a raw parquet scan the count is metadata-dominated
-            # (1.3-4 s on a 1.2 B parquet; no data columns read), but
-            # on a DERIVED plan (filters/joins/UDF columns upstream)
-            # it re-executes that upstream plan once per un-sized
-            # call — callers with a stable frame should pass
-            # ``row_count`` (``Trace`` memoizes its events count and
-            # plumbs it here) or size ``num_partitions`` explicitly.
-            #   * throughput (r04 rung): ~500k rows/task;
-            #   * capped at max(heap-rule shards, 8× parallelism) —
-            #     the repartition hashes by location, so shards past
-            #     the location count are empty and nearly free, but
-            #     unbounded oversharding buys nothing; 8× parallelism
-            #     matches the audit's r10 oversharding rule and the
-            #     validated 1.2 B band (128-256 shards);
-            #   * never below 2 × ceil(rows / 10 M) — the r11 heap
-            #     floor (37 M-row shards OOM a stock 8 g / 32-task
-            #     box; the 2× is hash-collision spread).
-            rows = row_count() if callable(row_count) else row_count
-            if rows is None:
-                rows = events.count()
-            heap_shards = 2 * -(-rows // _CHUNKED_ROWS_PER_TASK)
-            n_part = max(
-                base,
-                min(-(-rows // _CHUNKED_TARGET_ROWS),
-                    max(heap_shards, 8 * base)),
-            )
-        return _chunked_match(
-            events, enc, map_cols, out_schema, group_cols, metric_cols,
-            n_part, assume_wellformed,
+    # self-sizing (round-11 heap-floor rule): unless the caller sized
+    # the pass, shard the chunked emit at ~_CHUNKED_ROWS_PER_TASK rows
+    # per task instead of bare cluster parallelism — at the billion
+    # tier the default under-shards into emit sorts that OOM stock
+    # heaps. The count is one narrow job (1.3-4 s on a 1.2 B parquet,
+    # metadata-dominated; on a DERIVED plan it re-executes that plan
+    # once) on a path that is already eager (the audit);
+    # assume_wellformed=True keeps the pass fully lazy and therefore
+    # keeps the bare default — those callers size explicitly
+    # (examples/billion_scale.py does).
+    #   * throughput (r04 rung): ~500k rows/task;
+    #   * capped at max(heap-rule shards, 8× parallelism) — the
+    #     repartition hashes by location, so shards past the location
+    #     count are empty and nearly free, but unbounded oversharding
+    #     buys nothing; 8× parallelism matches the audit's r10
+    #     oversharding rule and the validated 1.2 B band (128-256
+    #     shards);
+    #   * never below 2 × ceil(rows / 10 M) — the r11 heap floor
+    #     (37 M-row shards OOM a stock 8 g / 32-task box; the 2× is
+    #     hash-collision spread).
+    if kernel == "chunked" and num_partitions is None and not assume_wellformed:
+        rows = events.count()
+        heap_shards = 2 * -(-rows // _CHUNKED_ROWS_PER_TASK)
+        n_part = max(
+            base,
+            min(-(-rows // _CHUNKED_TARGET_ROWS), max(heap_shards, 8 * base)),
         )
-
-    return _location_match(
-        enc, map_cols, out_schema, group_cols, metric_cols, n_part
-    )
+    return _match(events, metric_cols, kernel, assume_wellformed, n_part)
 
 
 def match_events_iter(
     events: DataFrame,
     metric_cols: list[str] | None = None,
-    kernel: str | None = None,
+    kernel: str = "location",
     assume_wellformed: bool = False,
 ) -> DataFrame:
     """Variant for traces already partitioned by location on disk —
@@ -1112,24 +1094,7 @@ def match_events_iter(
     shuffles its narrow projection by (location, name) for the window
     pass.
     """
-    metric_cols = list(metric_cols or [])
-    if kernel is None:
-        kernel = get_option("matching.kernel")
-    if kernel not in ("location", "chunked"):
-        raise ValueError(f"kernel must be 'location' or 'chunked', got {kernel!r}")
-    enc, map_cols = _encode_map_cols(events)
-    out_schema = _dedup_matched_schema(enc.schema, metric_cols)
-    group_cols = [S.PROCESS] + ([S.THREAD] if S.THREAD in events.columns else [])
-
-    if kernel == "chunked":
-        return _chunked_match(
-            events, enc, map_cols, out_schema, group_cols, metric_cols,
-            None, assume_wellformed,
-        )
-
-    return _location_match(
-        enc, map_cols, out_schema, group_cols, metric_cols, None
-    )
+    return _match(events, metric_cols, kernel, assume_wellformed, None)
 
 
 def well_nested_matching_sql(events_rel: str = "events") -> str:

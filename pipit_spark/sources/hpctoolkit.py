@@ -40,7 +40,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from .packed import group_frame, parse_units
+from .packed import _truncated, group_frame, parse_units
 
 from .. import schema as S
 
@@ -255,11 +255,20 @@ def _reconstruct_line(
     Yields (ts, event_type, name, node_ctx_id, emit_idx). Sample decode
     is vectorized (numpy structured view over the 12-byte elements +
     consecutive-duplicate elimination); only context *changes* run the
-    Python path-diff loop.
+    Python path-diff loop. A ``[p_start, p_end)`` range that runs past
+    the end of ``trace.db`` or holds a partial sample raises
+    ``ValueError`` naming the file and the byte offset.
     """
+    span = f"sample line [{p_start}, {p_end})"
+    if p_end < p_start or (p_end - p_start) % 12:
+        raise _truncated(trace_path, p_start,
+                         f"{span} is not a whole number of 12-byte samples")
     with open(trace_path, "rb") as f:
         f.seek(p_start)
         raw = f.read(p_end - p_start)
+    if p_start + len(raw) < p_end:
+        raise _truncated(trace_path, p_start + len(raw),
+                         f"{span} runs past the end of the file")
     elems = np.frombuffer(raw, dtype=np.dtype([("ts", "<u8"), ("ctx", "<u4")]))
     if len(elems) == 0:
         return

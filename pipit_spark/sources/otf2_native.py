@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from .. import schema as S
-from .packed import group_frame, parse_units
+from .packed import _truncated, group_frame, parse_units
 
 # global definition record ids (OTF2_GlobalDefinitions.h public ids),
 # named as the otf2 python bindings name them (pipit's def_type values)
@@ -151,10 +151,6 @@ def _records(buf: bytes, with_timestamps: bool, source: str):
         pos = end
         yield ts, t, payload
     raise _truncated(source, n, "no end-of-stream record")
-
-
-def _truncated(source: str, pos: int, detail: str) -> ValueError:
-    return ValueError(f"{source}: truncated at byte {pos}: {detail}")
 
 
 def parse_global_defs(path: str) -> dict:

@@ -7,13 +7,17 @@ this module does the rest in three parts:
 
 * :func:`group_frame` packs whole units by bytes into core-sized groups,
   one input partition per group (a unit is never split, so every parse
-  task emits complete locations — ``match_events_iter``'s input
-  contract);
+  task emits complete locations, the partitioning
+  ``operators.matching.match_events_iter`` accepts without a
+  repartition);
 * :func:`parse_units` runs the executor parse as one ``mapInPandas``
   and flushes the tuples in bounded chunks of at most ``_CHUNK_EVENTS``
   rows, so task memory stays chunk-sized however large one unit grows;
 * :func:`_rows_pdf` turns a chunk of tuples into the Arrow-bound pandas
   frame, column dtypes taken from the output schema.
+
+The readers share :func:`_truncated`, the ``ValueError`` for a unit
+whose bytes end early; it names the file and the byte offset.
 """
 
 from __future__ import annotations
@@ -28,6 +32,10 @@ from pyspark.sql import types as T
 # max parsed events buffered per Arrow chunk in the executor parse
 # (same bound as the projections reader's _CHUNK_LINES)
 _CHUNK_EVENTS = 262_144
+
+
+def _truncated(source: str, pos: int, detail: str) -> ValueError:
+    return ValueError(f"{source}: truncated at byte {pos}: {detail}")
 
 
 def _parse_task_count(spark: SparkSession, total_bytes: int) -> int:

@@ -25,7 +25,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import schema as S
-from .config import get_option
 from .operators.matching import match_events
 
 # columns the fused matching pass ADDS — used to split a derived-
@@ -68,9 +67,9 @@ class Trace:
         self,
         events: DataFrame,
         definitions: DataFrame | None = None,
-        cache: bool | None = None,
+        cache: bool = True,
         match_partitions: int | None = None,
-        kernel: str | None = None,
+        kernel: str = "location",
         assume_wellformed: bool = False,
     ) -> None:
         missing = [c for c in self.REQUIRED_COLUMNS if c not in events.columns]
@@ -83,31 +82,24 @@ class Trace:
             )
         self.events = events
         self.definitions = definitions
-        # cache=None defers to the config registry ("cache.matched_frame",
-        # default True) — kernel likewise resolves its registry default
-        # inside match_events, so set_option routes every Trace
-        self._cache = get_option("cache.matched_frame") if cache is None else cache
+        # cache=True persists the matched frame (and the CCT) once built;
+        # cache=False streams single-consumer pipelines straight through
+        self._cache = cache
         # partition count for the fused matching pass (the scale
         # envelope: one partition — several complete ranks — must fit a
         # task's memory, Arrow buffers included; raise this to shrink
         # partitions toward one rank each on very large traces).
         # Default (None): cluster parallelism.
         self._match_partitions = match_partitions
-        # matching-kernel choice: kernel=None defers to the
-        # "matching.kernel" option ("location"); "chunked" streams with
-        # resident state ∝ stack depth — the scale path when
-        # events-per-location × concurrent tasks threatens executor
-        # memory. assume_wellformed skips the chunked kernel's
+        # matching-kernel choice: "location" (default) or "chunked",
+        # which streams with resident state ∝ stack depth — the scale
+        # path when events-per-location × concurrent tasks threatens
+        # executor memory. assume_wellformed skips the chunked kernel's
         # exactness audit (operators/matching.py).
         self._kernel = kernel
         self._assume_wellformed = assume_wellformed
         self._matched: DataFrame | None = None
         self._cct: DataFrame | None = None
-        # memoized events row count (a trace is immutable): feeds the
-        # chunked kernel's self-sizing so repeated un-sized match calls
-        # never re-count — on a derived events plan each count would
-        # re-execute the whole upstream plan (r11 ADVICE)
-        self._events_rows: int | None = None
         # memoized (ts_min, ts_max, n_processes) — the driver-side
         # scalars every trace-time binning operator needs (time_profile,
         # comm_over_time, comm_matrix_over_time). One eager job per
@@ -263,16 +255,6 @@ class Trace:
             and not f.name.endswith(("_inc", "_exc"))
         ]
 
-    def num_events(self) -> int:
-        """Memoized events row count (the frame is immutable for the
-        trace's lifetime). Used by the chunked matching kernel's
-        self-sizing via the lazy ``row_count`` hint — only evaluated on
-        that path, and at most once per Trace however many un-sized
-        passes run."""
-        if self._events_rows is None:
-            self._events_rows = self.events.count()
-        return self._events_rows
-
     def time_stats(self) -> tuple[float, float, int]:
         """Memoized ``(ts_min, ts_max, n_processes)`` over the whole
         trace (the frame is immutable for the trace's lifetime) — the
@@ -329,7 +311,6 @@ class Trace:
                 num_partitions=self._match_partitions,
                 kernel=self._kernel,
                 assume_wellformed=self._assume_wellformed,
-                row_count=self.num_events,
             )
             if self._cache:
                 m = m.persist()

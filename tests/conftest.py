@@ -17,6 +17,17 @@ def spark():
     s.stop()
 
 
+@pytest.fixture(scope="module")
+def tiny_batch_spark(spark):
+    """Force many Arrow-chunk crossings so the carried state is
+    genuinely exercised (65536-row default would make most locations
+    single-batch)."""
+    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
+    yield spark
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+
+
 @pytest.fixture(scope="session")
 def foo_bar_trace(spark):
     """The reference's minimal end-to-end fixture (20 rows, 2 processes,

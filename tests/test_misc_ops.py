@@ -579,8 +579,8 @@ def test_embedding_dedup_rejects_unknown_method(spark):
 
 def test_config_engine_option_validators():
     """Engine options validate type-correctly: positive ints reject
-    bools/zero, bool options reject truthy non-bools (reference
-    pipit/util/config.py validator pattern extended to Spark knobs)."""
+    bools/zero (reference pipit/util/config.py validator pattern
+    extended to Spark knobs)."""
     import pytest
 
     import pipit_spark as pp
@@ -591,15 +591,10 @@ def test_config_engine_option_validators():
     for bad in (0, -1, True, "64k", 1.5):
         with pytest.raises(ValueError):
             pp.set_option("matching.max_records_per_batch", bad)
-    pp.set_option("cache.matched_frame", False)
-    assert pp.get_option("cache.matched_frame") is False
-    with pytest.raises(ValueError):
-        pp.set_option("cache.matched_frame", 1)
     with pytest.raises(ValueError):
         pp.reset_option("invalid_key")
     pp.reset_all_options()
     assert pp.get_option("matching.max_records_per_batch") == 65536
-    assert pp.get_option("cache.matched_frame") is True
 
 
 def test_corpus_summary_approx_close(spark):

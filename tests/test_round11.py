@@ -6,14 +6,11 @@
    cross-block pair dedup — pinned value-equal to an independent
    brute-force on randomized corpora, and the plan is pinned
    buffer-free (no collect_list / ObjectHashAggregate).
-2. Trace.unpersist releases the chunked kernel's unmatched-set
-   broadcast together with the matched frame.
+2. matching.max_records_per_batch reaches the session's Arrow conf.
 """
 from __future__ import annotations
 
 import numpy as np
-
-from tests.test_round9 import _adversarial_events, tiny_batch_spark  # noqa: F401
 
 
 # --------------------------------------------------------------- simhash
@@ -96,35 +93,6 @@ def test_simhash_pairs_count_first_cap_still_exact(spark):
     spark.catalog.clearCache()
 
 
-def test_trace_unpersist_destroys_unmatched_broadcast(
-    tiny_batch_spark, monkeypatch,  # noqa: F811
-):
-    """Trace.unpersist releases the chunked kernel's broadcast handle
-    together with the matched frame (r10 ADVICE: the session otherwise
-    pins up to ~100 MB per build for its lifetime)."""
-    from pyspark.broadcast import Broadcast
-
-    from pipit_spark.trace import Trace
-
-    spark = tiny_batch_spark
-    df = spark.createDataFrame(_adversarial_events())
-    t = Trace(df, kernel="chunked", cache=True)
-    m = t.matched
-    bc = m._unmatched_bc
-    assert m.count() > 0
-
-    destroyed = []
-    orig_destroy = Broadcast.destroy
-
-    def _spy_destroy(self, *a, **k):
-        destroyed.append(self)
-        return orig_destroy(self, *a, **k)
-
-    monkeypatch.setattr(Broadcast, "destroy", _spy_destroy)
-    t.unpersist()
-    assert bc in destroyed
-
-
 def test_arrow_batch_option_is_consumed(spark):
     """matching.max_records_per_batch is CONSUMED by get_spark (the
     r10 rule: no decorative config options): the option lands in the
@@ -143,41 +111,3 @@ def test_arrow_batch_option_is_consumed(spark):
         spark.conf.set(key, orig)
 
 
-def test_chunked_match_self_sizes_partitions(tiny_batch_spark,  # noqa: F811
-                                             monkeypatch):
-    """The chunked pass shards itself at ~_CHUNKED_ROWS_PER_TASK rows
-    per task when the caller does not size it (the r11 heap-floor
-    rule); explicit num_partitions still wins; assume_wellformed stays
-    fully lazy (no count job) and keeps the bare default."""
-    import pipit_spark.operators.matching as M
-
-    spark = tiny_batch_spark
-    df = spark.createDataFrame(_adversarial_events())
-    rows = df.count()
-    monkeypatch.setattr(M, "_CHUNKED_ROWS_PER_TASK", 40)
-    monkeypatch.setattr(M, "_CHUNKED_TARGET_ROWS", 10)
-    par = spark.sparkContext.defaultParallelism
-    # full formula: throughput shards (rows/10) capped at
-    # max(heap shards = 2*ceil(rows/40), 8x parallelism), floored at
-    # parallelism
-    expected = max(par, min(-(-rows // 10),
-                            max(2 * -(-rows // 40), 8 * par)))
-    out = M.match_events(df, metric_cols=["metric1"], kernel="chunked")
-    assert out.rdd.getNumPartitions() == expected
-    # explicit sizing wins over self-sizing
-    out = M.match_events(df, metric_cols=["metric1"], kernel="chunked",
-                         num_partitions=7)
-    assert out.rdd.getNumPartitions() == 7
-    # assume_wellformed: no eager job at all — boobytrapped actions
-    # prove the plan builds without one, at the bare default
-    DataFrame = type(df)
-
-    def _boom(self, *a, **k):
-        raise AssertionError("an action ran on the lazy path")
-
-    monkeypatch.setattr(DataFrame, "count", _boom)
-    monkeypatch.setattr(DataFrame, "first", _boom)
-    out = M.match_events(df, metric_cols=["metric1"], kernel="chunked",
-                         assume_wellformed=True)
-    assert out.rdd.getNumPartitions() == \
-        spark.sparkContext.defaultParallelism

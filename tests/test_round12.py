@@ -1,132 +1,19 @@
 """Round-12 additions.
 
-1. Location-kernel emit slicing: the kernel now yields its output in
-   bounded row slices (``matching.max_records_per_batch`` rows per
-   Arrow batch) instead of one partition-sized batch — deleting the
-   round-11 2 GiB pyarrow column wall that made the location kernel
-   unable to EMIT any location past ~45-60 M events. Pinned: the
-   slicer's unit contract, and sliced-vs-chunked bit-equality on the
-   adversarial trace with a slice width small enough that every
-   location crosses it many times.
-2. The r11 ADVICE batch: the chunked kernel's self-sizing accepts a
-   lazy ``row_count`` hint (Trace memoizes its events count and plumbs
-   it through, so un-sized chunked passes on DERIVED plans never
-   re-execute the upstream plan per call), and simhash_pairs' per-block
-   persist has a per-call release lifecycle (``persist=`` kwarg,
-   ``_blocks_cache`` handle, ``release_block_caches``).
-3. bench.py's cooling-box tripwire: the r10/r11 driver benches showed
+1. simhash_pairs' per-block persist has a per-call release lifecycle
+   (``persist=`` kwarg, ``_blocks_cache`` handle,
+   ``release_block_caches``).
+2. bench.py's cooling-box tripwire: the r10/r11 driver benches showed
    monotonically-declining pass totals with ``contaminated: false`` —
    the new check flags that shape.
 """
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
-
-from tests.test_round9 import _adversarial_events, _sorted, tiny_batch_spark  # noqa: F401
 
 
 # ------------------------------------------------------ emit slicing
-def test_emit_slices_unit():
-    """Slicer contract: bounded widths, order preserved, lossless."""
-    from pipit_spark.operators.matching import _emit_slices
-
-    pdf = pd.DataFrame({"a": np.arange(1000), "b": np.arange(1000) * 2})
-    out = list(_emit_slices(pdf, 64))
-    assert len(out) == -(-1000 // 64)
-    assert all(len(s) <= 64 for s in out)
-    pd.testing.assert_frame_equal(
-        pd.concat(out).reset_index(drop=True), pdf
-    )
-    # small frame: passed through whole, no copy-splitting
-    small = list(_emit_slices(pdf, 100_000))
-    assert len(small) == 1 and small[0] is pdf
-
-
-def test_location_kernel_sliced_emit_bit_equality(spark):
-    """With a slice width every location crosses many times, the
-    location kernel's output is still bit-equal to the chunked
-    kernel's — the multi-batch emit reassembles losslessly (this is
-    the small-scale pin of the r12 rung that re-ran the r11 hot-
-    location wall fixture to completion)."""
-    from pipit_spark.config import reset_option, set_option
-    from pipit_spark.operators.matching import match_events
-
-    df = spark.createDataFrame(_adversarial_events())
-    set_option("matching.max_records_per_batch", 64)
-    try:
-        a = _sorted(match_events(df, metric_cols=["metric1"],
-                                 kernel="location").toPandas())
-    finally:
-        reset_option("matching.max_records_per_batch")
-    b = _sorted(match_events(df, metric_cols=["metric1"],
-                             kernel="chunked").toPandas())
-    pd.testing.assert_frame_equal(a, b[a.columns])
-
-
 # ------------------------------------------------- row_count hint
-def test_chunked_self_sizing_uses_row_count_hint(spark):
-    """A callable row_count hint replaces the self-sizing count job:
-    a fake 500 M-row count must size the emit shards by the formula
-    (not by the actual ~3 k rows), proving events.count() was never
-    consulted."""
-    from pipit_spark.operators.matching import match_events
-
-    df = spark.createDataFrame(_adversarial_events())
-    calls = []
-
-    def fake_count():
-        calls.append(1)
-        return 500_000_000
-
-    out = match_events(df, metric_cols=["metric1"], kernel="chunked",
-                       row_count=fake_count)
-    base = spark.sparkContext.defaultParallelism
-    heap_shards = 2 * -(-500_000_000 // 10_000_000)
-    expect = max(base, min(-(-500_000_000 // 500_000),
-                           max(heap_shards, 8 * base)))
-    assert calls == [1]
-    assert out.rdd.getNumPartitions() == expect
-    # and the result is still exact
-    ref = _sorted(match_events(df, metric_cols=["metric1"],
-                               kernel="location").toPandas())
-    got = _sorted(out.toPandas())
-    pd.testing.assert_frame_equal(got[ref.columns], ref)
-
-
-def test_trace_memoizes_events_count(spark):
-    """Trace.num_events runs ONE count then serves the memo; matched
-    plumbs the bound method (lazy — never evaluated on the location
-    kernel path) into match_events."""
-    from pipit_spark import trace as trace_mod
-    from pipit_spark.trace import Trace
-
-    df = spark.createDataFrame(_adversarial_events())
-    t = Trace(df)
-    n = t.num_events()
-    assert n == df.count()
-    t._events_rows = -1  # poison the memo: a re-count would overwrite
-    assert t.num_events() == -1
-
-    seen = {}
-    real = trace_mod.match_events
-
-    def recorder(events, **kw):
-        seen.update(kw)
-        return real(events, **kw)
-
-    t2 = Trace(df, cache=False)
-    orig = trace_mod.match_events
-    trace_mod.match_events = recorder
-    try:
-        t2.matched
-    finally:
-        trace_mod.match_events = orig
-    assert seen["row_count"] == t2.num_events  # the bound memo method
-    # location kernel (default) never evaluates the hint
-    assert t2._events_rows is None
-
-
 # ------------------------------------------- simhash persist lifecycle
 def _tiny_docs(spark):
     rows = [(i, f"alpha beta gamma delta w{i % 3} epsilon zeta") for i in range(12)]

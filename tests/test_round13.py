@@ -1,173 +1,23 @@
 """Round-13 optimization pins.
 
-1. Vectorized matching kernel: ``_stack_match_multi`` now computes
-   match/depth/parent/node with numpy bracket pairing for locations
-   that pass the well-nested audit, falling back to the reference
-   Python stack loops (``_match_loops``) per segment. Pinned:
-   bit-equality against the loop-only reference across randomized
-   well-nested / unbalanced / name-mismatched / instant-bearing
-   traces, multi-segment frames mixing both paths.
-2. clean_corpus keep-first dedup: min_by(struct) SortAggregate →
+1. clean_corpus keep-first dedup: min_by(struct) SortAggregate →
    order-preserving decimal(38,0) packed atom whose min hash-
    aggregates. Pinned: bit-equality against the min_by form on a
    corpus with case/whitespace duplicate variants (same fingerprint,
    different quality_score), and the HashAggregate plan contract.
-3. match_messages / message_latency: single tagged scan + one
+2. match_messages / message_latency: single tagged scan + one
    exchange replace two window scans + joins. Pinned: value equality
    against the old two-window formulation (reconstructed inline) on
    traces with unmatched sends/recvs and empty channels, and plan
    contracts (no join in message_latency, no second window scan).
-4. int64 surrogate keys for ngram/winnow pair paths (xxhash64 before
+3. int64 surrogate keys for ngram/winnow pair paths (xxhash64 before
    the bucket exchange): plan pins that the exchanges carry longs.
 """
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-import pytest
-
 from pyspark.sql import functions as F
 
 from pipit_spark import schema as S
-
-
-# ------------------------------------------------- vectorized matching
-def _gen_segment(rng, loc, n_ev, style, name_pool):
-    rows, stack, t = [], [], 0
-    for _ in range(n_ev):
-        t += rng.randint(1, 5)
-        r = rng.rand()
-        if style == "instants" and r < 0.3:
-            rows.append((loc, t, "Instant", rng.choice(["MpiSend", "marker"])))
-            continue
-        if stack and (r < 0.45 or (style != "unbalanced" and len(stack) > 6)):
-            nm = stack.pop()
-            if style == "mismatch" and rng.rand() < 0.2:
-                nm = rng.choice(name_pool)
-            rows.append((loc, t, "Leave", nm))
-        else:
-            nm = rng.choice(name_pool)
-            stack.append(nm)
-            rows.append((loc, t, "Enter", nm))
-    if style != "unbalanced":
-        while stack:
-            t += 1
-            rows.append((loc, t, "Leave", stack.pop()))
-    return rows
-
-
-def _loop_reference(pdf, group_cols):
-    """The pre-r13 algorithm: reference loops over every row."""
-    from pipit_spark.operators.matching import _match_loops
-
-    pdf = pdf.sort_values(
-        [*group_cols, S.TIMESTAMP, S.SEQ], kind="mergesort"
-    ).reset_index(drop=True)
-    n = len(pdf)
-    evt = pdf[S.EVENT_TYPE].to_numpy()
-    names = pdf[S.NAME].to_numpy()
-    new_group = np.zeros(n, dtype=bool)
-    if n:
-        new_group[0] = True
-        for c in group_cols:
-            codes, _ = pd.factorize(pdf[c], use_na_sentinel=True)
-            new_group[1:] |= codes[1:] != codes[:-1]
-    is_enter = np.isin(evt, S.ENTER_TYPES)
-    is_leave = np.isin(evt, S.LEAVE_TYPES)
-    match_pos = np.full(n, -1, dtype=np.int64)
-    depth = np.full(n, -1, dtype=np.int64)
-    parent_pos = np.full(n, -1, dtype=np.int64)
-    node_of = np.zeros(n, dtype=np.int64)
-    has_node = np.zeros(n, dtype=bool)
-    _match_loops(
-        np.arange(n), new_group, is_enter, is_leave, names,
-        match_pos, depth, parent_pos, node_of, has_node,
-    )
-    return pdf, match_pos, depth, parent_pos, node_of, has_node
-
-
-def _assert_kernel_equals_reference(pdf):
-    from pipit_spark.operators.matching import _stack_match_multi
-
-    out = _stack_match_multi(pdf.copy(), [S.PROCESS], [])
-    ref_pdf, mp, dp, pp, no, hn = _loop_reference(pdf.copy(), [S.PROCESS])
-    ids = ref_pdf[S.EVENT_ID].to_numpy()
-
-    def nan_eq(col, ref):
-        got = out[col].to_numpy(dtype="float64", na_value=np.nan)
-        assert np.array_equal(got, ref, equal_nan=True), col
-
-    safe = lambda a: np.where(a >= 0, a, 0)  # noqa: E731
-    nan_eq(S.MATCHING_EVENT, np.where(mp >= 0, ids[safe(mp)], np.nan))
-    nan_eq(S.DEPTH, np.where(dp >= 0, dp.astype("float64"), np.nan))
-    nan_eq(S.PARENT, np.where(pp >= 0, ids[safe(pp)].astype("float64"), np.nan))
-    nan_eq(S.NODE_ID, np.where(hn, no.astype("float64"), np.nan))
-    nan_eq(S.PARENT_NODE, np.where(pp >= 0, no[safe(pp)].astype("float64"), np.nan))
-
-
-def _make_pdf(rng, segments):
-    rows = []
-    for loc, n_ev, style in segments:
-        rows += _gen_segment(rng, loc, n_ev, style, ["a", "b", "c", "d"])
-    df = pd.DataFrame(
-        rows, columns=[S.PROCESS, S.TIMESTAMP, S.EVENT_TYPE, S.NAME]
-    )
-    df[S.SEQ] = np.arange(len(df))
-    df[S.EVENT_ID] = np.arange(len(df)) + 1000
-    return df
-
-
-def test_stack_match_vectorized_bit_equality_fuzz():
-    """60 randomized multi-location frames mixing well-nested,
-    unbalanced, name-mismatched and instant-bearing segments: the
-    vectorized kernel (with its per-segment loop fallback) must be
-    bit-equal to the loop-only reference on every derived column."""
-    rng = np.random.RandomState(7)
-    for _ in range(60):
-        segs = [
-            (s, rng.randint(1, 80),
-             rng.choice(["nested", "nested", "instants",
-                         "unbalanced", "mismatch"]))
-            for s in range(rng.randint(1, 6))
-        ]
-        _assert_kernel_equals_reference(_make_pdf(rng, segs))
-
-
-def test_stack_match_vectorized_takes_fast_path():
-    """A well-nested frame must produce correct results WITHOUT the
-    fallback (guard: monkeypatch _match_loops to fail loudly)."""
-    from pipit_spark.operators import matching as M
-
-    rng = np.random.RandomState(11)
-    pdf = _make_pdf(rng, [(0, 60, "nested"), (1, 40, "instants")])
-    orig = M._match_loops
-    try:
-        def boom(*a, **k):  # pragma: no cover - failure path
-            raise AssertionError("fallback must not run for nested traces")
-        M._match_loops = boom
-        out = M._stack_match_multi(pdf.copy(), [S.PROCESS], [])
-    finally:
-        M._match_loops = orig
-    # spot contract: every Enter/Leave matched, enters carry node ids
-    el = out[S.EVENT_TYPE].isin(["Enter", "Leave"])
-    assert out.loc[el, S.MATCHING_EVENT].notna().all()
-    assert out.loc[out[S.EVENT_TYPE] == "Enter", S.NODE_ID].notna().all()
-
-
-def test_stack_match_deep_recursion_reroutes_to_loops():
-    """Depth past _VEC_MAX_DEPTH falls back wholesale (the per-level
-    numpy passes would degenerate) and stays bit-equal."""
-    from pipit_spark.operators import matching as M
-
-    d = M._VEC_MAX_DEPTH + 5
-    rows = [(0, t + 1, "Enter", "f") for t in range(d)]
-    rows += [(0, d + t + 1, "Leave", "f") for t in range(d)]
-    pdf = pd.DataFrame(
-        rows, columns=[S.PROCESS, S.TIMESTAMP, S.EVENT_TYPE, S.NAME]
-    )
-    pdf[S.SEQ] = np.arange(len(pdf))
-    pdf[S.EVENT_ID] = np.arange(len(pdf)) + 1
-    _assert_kernel_equals_reference(pdf)
 
 
 # ---------------------------------------------- clean_corpus packed atom

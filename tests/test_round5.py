@@ -637,32 +637,6 @@ def test_media_phash_invariances(spark):
         assert h <= 3 and a < b
 
 
-def test_survivor_broadcast_fast_path_identical(spark):
-    from pipit_spark.llm.dedup import ngram_jaccard_pairs
-
-    docs = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog", "a"),
-            (2, "the quick brown fox jumps over the lazy cat", "a"),
-            (3, "completely different text with no overlap at all", "b"),
-            (4, "the quick brown fox jumps over the lazy dog", "b"),
-        ],
-        "doc_id long, text string, source string",
-    )
-    default = sorted(
-        map(tuple, ngram_jaccard_pairs(docs, threshold=0.3).collect())
-    )
-    fast = sorted(
-        map(
-            tuple,
-            ngram_jaccard_pairs(
-                docs, threshold=0.3, survivor_broadcast=True
-            ).collect(),
-        )
-    )
-    assert default == fast and len(default) > 0
-
-
 def test_lsh_topk_portable_recall_and_invariance(spark):
     import numpy as np
     from pyspark.sql import functions as F

@@ -498,6 +498,43 @@ def test_truncated_evt_fails_the_read(spark, write_otf2_archive, tmp_path):
     q.stop()
 
 
+def test_truncated_trace_db_raises_with_file_and_offset(spark, tmp_path):
+    """A trace.db cut inside its last sample line fails the read with
+    trace.db and the byte offset in the error, whether the cut falls on
+    a sample boundary or inside a sample, instead of reconstructing a
+    prefix of the line. A line range that is not a whole number of
+    12-byte samples raises the same way."""
+    from pipit_spark.sources.hpctoolkit import (
+        _reconstruct_line,
+        parse_trace_headers,
+        read_hpctoolkit,
+    )
+    from tools.synth_hpctoolkit import synthesize
+
+    db = str(tmp_path / "db")
+    synthesize(db, 2, 40)
+    path = os.path.join(db, "trace.db")
+    with open(path, "rb") as f:
+        whole = f.read()
+    assert read_hpctoolkit(spark, db, order="process").count() > 0
+
+    for keep in (len(whole) - 24, len(whole) - 6):
+        _truncate(path, keep)
+        with pytest.raises(
+            Exception, match=rf"trace\.db: truncated at byte {keep}: .* "
+            "runs past the end of the file"
+        ):
+            read_hpctoolkit(spark, db, order="process").count()
+        with open(path, "wb") as f:
+            f.write(whole)
+
+    (_prof, start, _end), *_ = parse_trace_headers(path)[0]
+    for end in (start + 18, start - 12):
+        with pytest.raises(ValueError, match=rf"trace\.db: truncated at byte "
+                           rf"{start}: .* not a whole number of 12-byte"):
+            list(_reconstruct_line(path, start, end, 0, 0, {}, {}, {}, {}))
+
+
 # ------------------------------------- binary-reader parse-task packing
 def _partitioned_rows(events):
     """(rows sorted by event_id, partitions per (process, thread),
