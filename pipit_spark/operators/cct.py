@@ -10,7 +10,9 @@ LCA-computable via path prefixes without any driver-side object graph.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+import pyarrow as pa
+
+from pyspark.sql import DataFrame, functions as F, types as T
 
 from .. import schema as S
 
@@ -79,10 +81,19 @@ def folded_stacks(trace, metric: str = S.TIME_EXC, sep: str = ";") -> DataFrame:
             paths[node] = prefix
         return paths[nid]
 
+    # an Arrow table becomes a JVM LocalRelation: the broadcast of the
+    # map starts no Python-worker task (a Python list would go through
+    # parallelize and a pickled RDD scan)
     spark = trace.events.sparkSession
     pmap = spark.createDataFrame(
-        [(nid, path_of(nid)) for nid in nodes],
-        f"{S.NODE_ID} long, stack string",
+        pa.table({
+            S.NODE_ID: pa.array(list(nodes), pa.int64()),
+            "stack": pa.array([path_of(nid) for nid in nodes], pa.string()),
+        }),
+        T.StructType([
+            T.StructField(S.NODE_ID, T.LongType(), True),
+            T.StructField("stack", T.StringType(), True),
+        ]),
     )
     exc = trace.calc_exc_metrics().filter(
         F.col(S.EVENT_TYPE).isin(*S.ENTER_TYPES)

@@ -9,8 +9,9 @@ pipit/trace.py:584-593) collapse into single groupBy/window plans.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 from .. import schema as S
 
@@ -30,6 +31,62 @@ def _resolve_metrics(trace, metrics) -> tuple[DataFrame, list[str]]:
     return df, metrics
 
 
+def name_process_rollup(matched: DataFrame) -> DataFrame:
+    """The profile family's one shared group-by: a row per (name,
+    process) over every matched row, with
+
+    * ``n_calls`` — the group's Enter-family rows;
+    * ``ts_min`` / ``ts_max`` — the timestamp bounds over all its rows;
+    * ``<m>_inc`` — Σ inclusive ``<m>`` over its own Enter rows;
+    * ``<m>_exc`` — Σ exclusive ``<m>``: own inclusive minus the
+      inclusive of every Enter row whose ``parent_name`` is this name.
+
+    The exclusive sum is the signed-contribution identity time_profile
+    uses: each Enter row contributes (+inc) under its own name and
+    (−inc, and 0.0 to the inclusive sums) under its caller's, so one
+    explode + one hash aggregation replaces calc_exc_metrics' per-event
+    groupBy-parent + join. The finest group-by flat_profile,
+    load_imbalance, idle_time and time_stats share (Gray et al., "Data
+    Cube", ICDE 1996): each is a select or a small aggregate over it, and
+    ``to_parquet(include_derived=True)`` writes it beside the
+    checkpoint."""
+    incs = [
+        f.name for f in matched.schema.fields
+        if f.name.endswith("_inc") and isinstance(f.dataType, T.NumericType)
+    ]
+    excs = [c[:-4] + "_exc" for c in incs]
+    dtype = {f.name: f.dataType for f in matched.schema.fields}
+    is_enter = F.col(S.EVENT_TYPE).isin(*S.ENTER_TYPES)
+    own = F.struct(
+        F.col(S.NAME).alias(S.NAME),
+        is_enter.cast("long").alias("n"),
+        F.col(S.TIMESTAMP).alias("ts"),
+        *[F.when(is_enter, F.col(c)).alias(c) for c in incs],
+        *[F.when(is_enter, F.col(c)).alias(e) for c, e in zip(incs, excs)],
+    )
+    caller = F.struct(
+        F.col(S.PARENT_NAME).alias(S.NAME),
+        F.lit(0).cast("long").alias("n"),
+        F.lit(None).cast(dtype[S.TIMESTAMP]).alias("ts"),
+        *[F.lit(0).cast(dtype[c]).alias(c) for c in incs],
+        *[(-F.col(c)).alias(e) for c, e in zip(incs, excs)],
+    )
+    contribs = F.when(
+        is_enter & F.col(S.PARENT_NAME).isNotNull(), F.array(own, caller)
+    ).otherwise(F.array(own))
+    return (
+        matched.select(S.PROCESS, F.explode(contribs).alias("c"))
+        .select(S.PROCESS, "c.*")
+        .groupBy(S.NAME, S.PROCESS)
+        .agg(
+            F.sum("n").alias("n_calls"),
+            F.min("ts").alias("ts_min"),
+            F.max("ts").alias("ts_max"),
+            *[F.sum(c).alias(c) for c in incs + excs],
+        )
+    )
+
+
 def flat_profile(
     trace,
     metrics=S.TIME_EXC,
@@ -38,56 +95,30 @@ def flat_profile(
 ) -> DataFrame:
     """Two-level aggregation (pipit/trace.py:514-553): sum per
     (groupby, process), then mean over processes unless ``per_process``.
-    Spark executes this as partial (map-side) + final hash aggregation —
-    the canonical scalable profile."""
+
+    Grouped by name over ``_inc``/``_exc`` metrics this is a select (or
+    one ``avg``) over the trace's (name, process) rollup — read from the
+    checkpoint's ``_rollup`` sidecar when the trace was reopened from
+    one, else one explode + hash aggregation over the matched frame
+    (:func:`name_process_rollup`). Other groupings go through
+    calc_exc_metrics and a partial + final hash aggregation."""
     if isinstance(metrics, str):
         metrics = [metrics]
     if isinstance(groupby_column, str):
         groupby_column = [groupby_column]
 
-    if groupby_column == [S.NAME]:
-        # name-grouped fast path: Σ exc per (name, process) equals
-        # Σ inc(own rows) − Σ inc(rows whose caller has that name) — the
-        # same signed-contribution identity time_profile uses. One explode
-        # + one hash aggregation straight off the matched frame; the
-        # general path below goes through calc_exc_metrics' per-event
-        # groupBy-parent + join.
-        m = trace.matched
-        base = {
-            mm: (mm[:-4] + "_inc" if mm.endswith("_exc") else mm)
-            for mm in metrics
-        }
-        missing = [b for b in base.values() if b not in m.columns]
-        if not missing:
-            enters = m.filter(F.col(S.EVENT_TYPE).isin(*S.ENTER_TYPES))
-            plus = F.struct(
-                F.col(S.NAME).alias("nm"),
-                *[F.col(b).alias(f"v{i}") for i, b in enumerate(base.values())],
-            )
-            minus = F.struct(
-                F.col(S.PARENT_NAME).alias("nm"),
-                *[
-                    (
-                        (-F.col(b)).alias(f"v{i}")
-                        if mm.endswith("_exc")
-                        else F.lit(0.0).alias(f"v{i}")
-                    )
-                    for i, (mm, b) in enumerate(base.items())
-                ],
-            )
-            contrib = (
-                enters.select(S.PROCESS, F.explode(F.array(plus, minus)).alias("c"))
-                .select(S.PROCESS, "c.*")
-                .filter(F.col("nm").isNotNull())
-            )
-            per_proc = contrib.groupBy(
-                F.col("nm").alias(S.NAME), F.col(S.PROCESS)
-            ).agg(
-                *[
-                    F.sum(f"v{i}").alias(mm)
-                    for i, mm in enumerate(metrics)
-                ]
-            )
+    if groupby_column == [S.NAME] and all(
+        mm.endswith(("_inc", "_exc")) for mm in metrics
+    ):
+        r = trace._profile_rollup()
+        if all(mm in r.columns for mm in metrics):
+            # a group holds Enter rows of its own or callee contributions
+            # (which add 0.0 to the inclusive sums); Leave- or
+            # Instant-only groups carry only timestamp bounds
+            per_proc = r.filter(
+                F.col(S.NAME).isNotNull()
+                & ((F.col("n_calls") > 0) | F.col(S.TIME_INC).isNotNull())
+            ).select(S.NAME, S.PROCESS, *metrics)
             if per_process:
                 return per_proc
             return per_proc.groupBy(S.NAME).agg(
@@ -137,24 +168,16 @@ def load_imbalance(trace, metric=S.TIME_EXC, num_processes: int = 1) -> DataFram
 
 def idle_time(trace, idle_functions=None, mpi_events: bool = False) -> DataFrame:
     """Σ inclusive time of idle functions per process
-    (pipit/trace.py:600-631). The reference's per-process loop is a
-    single filter + groupBy; processes with no idle rows still appear
-    (sum-of-empty = 0), via a right join against the distinct ranks."""
+    (pipit/trace.py:600-631). The reference's per-process loop is one
+    groupBy(process) over the (name, process) rollup: every process has
+    rollup rows, so processes with no idle calls still appear (sum-of-
+    empty = 0) without a distinct or a join."""
     idle_functions = list(idle_functions or ["Idle"])
     if mpi_events:
         idle_functions += ["MPI_Wait", "MPI_Waitall", "MPI_Recv"]
-    m = trace.matched
-    sums = (
-        m.filter(
-            F.col(S.EVENT_TYPE).isin(*S.ENTER_TYPES)
-            & F.col(S.NAME).isin(idle_functions)
-        )
-        .groupBy(S.PROCESS)
-        .agg(F.sum(S.TIME_INC).alias("idle_time"))
-    )
-    procs = m.select(S.PROCESS).distinct()
-    return procs.join(sums, S.PROCESS, "left").select(
-        S.PROCESS, F.coalesce("idle_time", F.lit(0.0)).alias("idle_time")
+    idle = F.when(F.col(S.NAME).isin(idle_functions), F.col(S.TIME_INC))
+    return trace._profile_rollup().groupBy(S.PROCESS).agg(
+        F.coalesce(F.sum(idle), F.lit(0.0)).alias("idle_time")
     )
 
 
@@ -173,10 +196,12 @@ def time_profile(
     ``idle_time = bin_duration × nprocs − Σ``, values < 0.01 zeroed, and
     optional normalization by bin duration.
 
-    Spark plan: interval×bin **broadcast range join** (the bin table is
-    tiny, so the theta-join is a broadcast nested loop over ≤num_bins
-    rows — no shuffle of the big side), one groupBy for the child
-    correction, one join, one final aggregation.
+    Spark plan: each interval explodes into the bins it can overlap
+    and equi-joins the broadcast bin table (a JVM ``LocalRelation`` of
+    ``num_bins`` rows) on ``bin_idx`` — no shuffle of the big side, no
+    nested loop; one explode + hash aggregation for the child
+    correction, one window for the idle row, one broadcast join back
+    to the bin edges. The bounds come from :meth:`Trace.time_stats`.
     """
     spark = trace.events.sparkSession
     m = trace.matched
@@ -189,9 +214,20 @@ def time_profile(
     bin_size = edges[1] - edges[0]
     total_bin_duration = float(bin_size * nproc)
 
+    # an Arrow table becomes a JVM LocalRelation: scanning or
+    # broadcasting it starts no Python-worker task (a Python list goes
+    # through parallelize and a pickled RDD scan)
     bins_df = spark.createDataFrame(
-        [(i, float(edges[i]), float(edges[i + 1])) for i in range(num_bins)],
-        "bin_idx INT, bin_start DOUBLE, bin_end DOUBLE",
+        pa.table({
+            "bin_idx": np.arange(num_bins, dtype=np.int32),
+            "bin_start": edges[:-1],
+            "bin_end": edges[1:],
+        }),
+        T.StructType([
+            T.StructField("bin_idx", T.IntegerType(), False),
+            T.StructField("bin_start", T.DoubleType(), False),
+            T.StructField("bin_end", T.DoubleType(), False),
+        ]),
     )
 
     enters = m.filter(

@@ -363,8 +363,12 @@ def _location_map(defs: dict, dirname: str | None = None) -> list:
     """(path-or-basename, process, thread) per location, in location
     order — process = location-group ref (MPI rank), thread = per-group
     renumber (otf2_reader.py:357-407). With ``dirname`` the first
-    element is the full .evt path filtered to files that exist (batch
-    read); without, it is the bare ``{ref}.evt`` basename (streaming
+    element is the full .evt path (batch read), and a location defined
+    in ``traces.def`` whose ``traces/{ref}.evt`` is missing raises
+    ``FileNotFoundError`` — the reference's OTF2 library fails on such
+    an archive too, and dropping the location would return the other
+    locations' rows as if they were the whole trace. Without
+    ``dirname`` it is the bare ``{ref}.evt`` basename (streaming
     lookup, where files land over time)."""
     per_group: dict[int, int] = {}
     out = []
@@ -376,8 +380,12 @@ def _location_map(defs: dict, dirname: str | None = None) -> list:
             out.append((fname, group, thread))
         else:
             path = os.path.join(dirname, "traces", fname)
-            if os.path.exists(path):
-                out.append((path, group, thread))
+            if not os.path.exists(path):
+                raise FileNotFoundError(
+                    f"OTF2 archive {dirname!r} defines location {ref} but "
+                    f"has no traces/{fname}"
+                )
+            out.append((path, group, thread))
     return out
 
 

@@ -22,10 +22,14 @@ Scale notes (100 TB design point):
 
 from __future__ import annotations
 
+import hashlib
+
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import schema as S
 from .operators.matching import match_events
+from .operators.profile import name_process_rollup
 
 # columns the fused matching pass ADDS — used to split a derived-
 # checkpoint parquet back into events vs matched (a denylist, so
@@ -38,6 +42,22 @@ _DERIVED_COLS = {
 
 def _is_derived(name: str) -> bool:
     return name in _DERIVED_COLS or name.endswith("_inc")
+
+
+def _rollup_dir(spark: SparkSession, path: str, files: list[str], rollup) -> str:
+    """Where a checkpoint's (name, process) rollup lives:
+    ``<path>/_rollup/<fingerprint>``. The fingerprint hashes the
+    checkpoint's data-file names relative to ``path`` and the rollup's
+    column types, so a rollup is only ever read for the exact files it
+    was computed from, with the schema it was written with. Spark's file
+    index skips ``_``-prefixed names, so the sidecar is invisible to
+    readers of the checkpoint itself."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    root = fs.makeQualified(jpath).toUri().toString().rstrip("/") + "/"
+    rel = sorted(f[len(root):] if f.startswith(root) else f for f in files)
+    key = "\n".join(rel + [rollup.schema.simpleString()])
+    return f"{path.rstrip('/')}/_rollup/{hashlib.sha1(key.encode()).hexdigest()}"
 
 
 _NON_METRIC = {
@@ -106,6 +126,10 @@ class Trace:
         # TRACE, not one per call (r12): within a bench pass / user
         # session the second binning operator pays nothing.
         self._time_stats: tuple[float, float, int] | None = None
+        # the (name, process) rollup read from a derived checkpoint's
+        # ``_rollup`` sidecar (from_parquet); None means the profile
+        # family computes it from the matched frame
+        self._rollup: DataFrame | None = None
 
     # ------------------------------------------------------------------ #
     # constructors (sources live in pipit_spark.sources)
@@ -167,13 +191,21 @@ class Trace:
         If the file carries the fused matching pass's derived columns
         (written by ``to_parquet(include_derived=True)``), the matched
         frame is seeded directly — re-opening an analyzed trace skips
-        the match shuffle + Arrow pass entirely.
+        the match shuffle + Arrow pass entirely. The checkpoint's
+        ``_rollup`` sidecar, when its fingerprint matches the data files
+        read here, seeds the (name, process) rollup behind flat_profile,
+        load_imbalance, idle_time and time_stats, so those read the
+        small rollup instead of the events. It is read with a known
+        schema (no inference job); a missing or stale sidecar — a part
+        file added, removed or renamed since the write — is ignored and
+        the rollup is computed from the matched frame when first used.
 
         ``derived=None`` (default) auto-detects a checkpoint by the
         FULL derived column set, so an events file that merely has a
         coincidental ``*_inc`` column never gets columns stripped;
-        ``derived=False`` forces a verbatim read, ``derived=True``
-        raises if the checkpoint columns are absent.
+        ``derived=False`` forces a verbatim read (the sidecar is
+        ignored), ``derived=True`` raises if the checkpoint columns are
+        absent.
 
         ``**kw`` reaches the :class:`Trace` constructor — notably
         ``cache=False`` for single-consumer pipelines (the match pass
@@ -196,6 +228,13 @@ class Trace:
                 **kw,
             )
             t._matched = df
+            expected = name_process_rollup(df)
+            try:
+                t._rollup = spark.read.schema(expected.schema).parquet(
+                    _rollup_dir(spark, path, df.inputFiles(), expected)
+                )
+            except AnalysisException:  # no sidecar for these files
+                pass
             return t
         return cls(df, **kw)
 
@@ -209,12 +248,29 @@ class Trace:
         (events + matching/depth/parent/node/inclusive metrics): pay the
         matching pass once, reload analysis-ready — the distributed
         counterpart of the reference memoizing derived columns in its
-        in-memory DataFrame (pipit/trace.py:111,202)."""
+        in-memory DataFrame (pipit/trace.py:111,202).
+
+        Beside it, in ``<path>/_rollup/<fingerprint>/``, goes the
+        (name, process) rollup (operators/profile.py
+        ``name_process_rollup``), one more aggregate-and-write job; the
+        fingerprint hashes the data-file names just written, so
+        :meth:`from_parquet` uses the rollup only while the checkpoint
+        holds exactly those files. ``include_derived=False`` writes no
+        sidecar."""
         src = self.matched if include_derived else self.events
         w = src.write.mode("overwrite")
         if partition_by_process:
             w = w.partitionBy(S.PROCESS)
         w.parquet(path)
+        if include_derived:
+            spark = src.sparkSession
+            # a read with a given schema lists the files and infers
+            # nothing — the same listing from_parquet fingerprints
+            files = spark.read.schema(src.schema).parquet(path).inputFiles()
+            rollup = name_process_rollup(src)
+            rollup.write.mode("overwrite").parquet(
+                _rollup_dir(spark, path, files, rollup)
+            )
 
     def create_views(self, prefix: str = "trace") -> list[str]:
         """Register the engine's tables as SQL temp views —
@@ -259,11 +315,13 @@ class Trace:
         """Memoized ``(ts_min, ts_max, n_processes)`` over the whole
         trace (the frame is immutable for the trace's lifetime) — the
         driver-side scalars every trace-time binning operator needs.
-        Computed from the matched frame when it is already built (a
-        cache scan with ``cache=True``), else from the raw events
-        frame — matching preserves rows, so the values are identical
-        either way. One eager job per Trace, however many binning
-        calls run (r12).
+        A trace reopened from a checkpoint with a ``_rollup`` sidecar
+        takes them from one aggregate over that (name, process) rollup.
+        Otherwise they come from the matched frame when it is already
+        built (a cache scan with ``cache=True``), else from the raw
+        events frame — matching preserves rows, so the values are
+        identical every way. One eager job per Trace, however many
+        binning calls run (r12).
 
         NOTE this method (and every wrapper passing
         ``range_bounds=self.time_stats()[:2]``, e.g.
@@ -274,17 +332,21 @@ class Trace:
         invariant (every reader emits an MPI rank / PE id); a null
         process row would be excluded from the count."""
         if self._time_stats is None:
-            # same memo-aware pick as _comm_source: the cached matched
-            # frame is a cheap scan; an unpersisted one would re-run
-            # the matching kernel
-            src = (
-                self._matched
-                if self._matched is not None and self._cache
-                else self.events
-            )
+            if self._rollup is not None:
+                src, lo_col, hi_col = self._rollup, "ts_min", "ts_max"
+            else:
+                # same memo-aware pick as _comm_source: the cached
+                # matched frame is a cheap scan; an unpersisted one
+                # would re-run the matching kernel
+                src = (
+                    self._matched
+                    if self._matched is not None and self._cache
+                    else self.events
+                )
+                lo_col = hi_col = S.TIMESTAMP
             lo, hi, nproc = src.agg(
-                F.min(S.TIMESTAMP).cast("double"),
-                F.max(S.TIMESTAMP).cast("double"),
+                F.min(lo_col).cast("double"),
+                F.max(hi_col).cast("double"),
                 F.countDistinct(S.PROCESS),
             ).collect()[0]
             self._time_stats = (
@@ -293,6 +355,14 @@ class Trace:
                 else (0.0, 1.0, int(nproc))
             )
         return self._time_stats
+
+    def _profile_rollup(self) -> DataFrame:
+        """The (name, process) rollup the profile family reads: the
+        checkpoint's sidecar when one was seeded, else the (unpersisted)
+        aggregate over the matched frame."""
+        if self._rollup is not None:
+            return self._rollup
+        return name_process_rollup(self.matched)
 
     @property
     def matched(self) -> DataFrame:

@@ -1451,6 +1451,138 @@ def test_from_parquet_derived_modes(foo_bar_trace, spark, tmp_path):
         Trace.from_parquet(spark, ev, derived=True)
 
 
+def _profile_family(t):
+    """Every value the (name, process) rollup answers, as sorted rows."""
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    inc_exc = ["time_inc", "time_exc"]
+    return {
+        "flat": rows(t.flat_profile(metrics=inc_exc)),
+        "flat_pp": rows(t.flat_profile(metrics=inc_exc, per_process=True)),
+        "load_imbalance": [
+            (r["name"], r["time_exc_imbalance"], tuple(r["top_processes"]),
+             r["time_exc_mean"])
+            for r in t.load_imbalance(num_processes=2).collect()
+        ],
+        "idle": rows(t.idle_time(mpi_events=True)),
+        "time_stats": t.time_stats(),
+        "time_profile": rows(t.time_profile()),
+    }
+
+
+def test_checkpoint_rollup_answers_profile_family(
+    foo_bar_trace, spark, tmp_path
+):
+    """A reopened derived checkpoint answers flat_profile,
+    load_imbalance, idle_time, time_stats and time_profile from its
+    _rollup sidecar with exactly the in-memory trace's values."""
+    import os
+
+    from pipit_spark import Trace
+
+    ck = str(tmp_path / "ck")
+    foo_bar_trace.to_parquet(ck, include_derived=True)
+    assert len(os.listdir(os.path.join(ck, "_rollup"))) == 1
+    assert Trace.from_parquet(spark, ck, derived=False)._rollup is None
+    back = Trace.from_parquet(spark, ck)
+    assert back._rollup is not None
+    assert back.events.count() == foo_bar_trace.events.count()
+    assert _profile_family(back) == _profile_family(foo_bar_trace)
+
+
+def test_rollup_keeps_unmatched_enter_flat_profile(spark, tmp_path):
+    """An Enter that never leaves, with children, keeps the flat
+    profile the signed-contribution sums have always given it (NULL
+    sums for its own process, not a zero), in memory and reopened."""
+    import pandas as pd
+
+    from pipit_spark import Trace
+    from pipit_spark import schema as S
+
+    rows = []
+
+    def add(p, ts, et, name):
+        rows.append((len(rows), ts, len(rows), et, name, p, 0, None))
+
+    # process 0: main never leaves; foo and bar run inside it
+    add(0, 0, "Enter", "main"); add(0, 1, "Enter", "foo")
+    add(0, 4, "Leave", "foo"); add(0, 5, "Enter", "bar")
+    add(0, 6, "Leave", "bar")
+    # process 1: a well-formed main -> foo
+    add(1, 0, "Enter", "main"); add(1, 2, "Enter", "foo")
+    add(1, 5, "Leave", "foo"); add(1, 9, "Leave", "main")
+    pdf = pd.DataFrame(rows, columns=S.EVENT_SCHEMA.fieldNames())
+    t = Trace(spark.createDataFrame(pdf, schema=S.EVENT_SCHEMA))
+    ck = str(tmp_path / "ck")
+    t.to_parquet(ck, include_derived=True)
+    back = Trace.from_parquet(spark, ck)
+    assert back._rollup is not None
+    metrics = ["time_inc", "time_exc"]
+    for tr in (t, back):
+        pp = sorted(
+            tuple(r) for r in
+            tr.flat_profile(metrics=metrics, per_process=True).collect()
+        )
+        assert pp == [
+            ("bar", 0, 1.0, 1.0), ("foo", 0, 3.0, 3.0), ("foo", 1, 3.0, 3.0),
+            ("main", 0, None, None), ("main", 1, 9.0, 6.0),
+        ]
+        mean = sorted(
+            tuple(r) for r in tr.flat_profile(metrics=metrics).collect()
+        )
+        assert mean == [
+            ("bar", 1.0, 1.0), ("foo", 3.0, 3.0), ("main", 9.0, 6.0)
+        ]
+
+
+def test_stale_rollup_is_ignored(foo_bar_trace, spark, tmp_path):
+    """A part file appended after the write changes the checkpoint's
+    file set: the sidecar no longer matches, is ignored, and the
+    profile is recomputed over the rows now in the checkpoint."""
+    from pipit_spark import Trace
+
+    ck = str(tmp_path / "ck")
+    foo_bar_trace.to_parquet(ck, include_derived=True)
+    before = {
+        (r["name"], r["process"]): r
+        for r in Trace.from_parquet(spark, ck)
+        .flat_profile(metrics=["time_inc", "time_exc"], per_process=True)
+        .collect()
+    }
+    # a second copy of process 0's rows lands as a new part file
+    spark.read.parquet(ck).filter(F.col("process") == 0).write.mode(
+        "append"
+    ).partitionBy("process").parquet(ck)
+    back = Trace.from_parquet(spark, ck)
+    assert back._rollup is None
+    after = {
+        (r["name"], r["process"]): r
+        for r in back.flat_profile(
+            metrics=["time_inc", "time_exc"], per_process=True
+        ).collect()
+    }
+    assert after.keys() == before.keys()
+    for key, r in after.items():
+        k = 2 if key[1] == 0 else 1
+        assert r["time_inc"] == k * before[key]["time_inc"], key
+        assert r["time_exc"] == k * before[key]["time_exc"], key
+
+
+def test_events_checkpoint_writes_no_rollup(foo_bar_trace, spark, tmp_path):
+    """include_derived=False writes the events only: no _rollup
+    sidecar, and reopening seeds neither matched nor the rollup."""
+    import os
+
+    from pipit_spark import Trace
+
+    ev = str(tmp_path / "ev")
+    foo_bar_trace.to_parquet(ev)
+    assert not os.path.exists(os.path.join(ev, "_rollup"))
+    t = Trace.from_parquet(spark, ev)
+    assert t._matched is None and t._rollup is None
+
+
 def test_filter_lines_by_fluency_segments(spark):
     """Per-line filtering: a gibberish line inside an otherwise fluent
     document is removed while the fluent lines survive in order."""

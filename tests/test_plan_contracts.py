@@ -115,6 +115,38 @@ def test_time_profile_no_nested_loop(trace):
     assert "BroadcastHashJoin" in tree
 
 
+def test_small_driver_tables_are_local_relations(trace):
+    """time_profile's bin table and folded_stacks' node->stack map are
+    built from Arrow tables: JVM LocalRelations, so their scans and
+    broadcasts start no Python-worker task. A Python-list
+    createDataFrame would show as an ExistingRDD scan."""
+    for df in (trace.time_profile(), trace.folded_stacks()):
+        plan = plan_of(df)
+        assert "ExistingRDD" not in plan and "LogicalRDD" not in plan, plan
+        assert "LocalTableScan" in plan, plan
+
+
+def test_reopened_checkpoint_profiles_scan_only_rollup(spark, tmp_path):
+    """On a reopened derived checkpoint, flat_profile and idle_time read
+    the _rollup sidecar and never the checkpoint's event files."""
+    from pipit_spark.trace import Trace
+
+    ck = str(tmp_path / "ck")
+    Trace.from_csv(spark, "tests/data/foo-bar.csv").to_parquet(
+        ck, include_derived=True
+    )
+    back = Trace.from_parquet(spark, ck)
+    for df in (
+        back.flat_profile(metrics=["time_inc", "time_exc"]),
+        back.idle_time(),
+    ):
+        scans = [
+            ln for ln in plan_of(df).splitlines()
+            if ln.startswith("Location:")
+        ]
+        assert scans and all("/_rollup/" in ln for ln in scans), scans
+
+
 def test_q6_scan_pushdown_and_pruning(spark):
     """Predicates reach the parquet reader and the scan reads only the
     referenced columns."""

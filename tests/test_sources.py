@@ -655,3 +655,16 @@ def test_from_otf2_surfaces_native_errors(spark, write_otf2_archive):
         Trace.from_otf2(spark, archive, order="frame")
     plan = Trace.from_otf2(spark, archive, order="process").events
     assert "Sort" not in plan._jdf.queryExecution().executedPlan().toString()
+
+
+def test_otf2_missing_location_file_raises(spark, write_otf2_archive):
+    """A location defined in traces.def without its traces/<ref>.evt
+    fails the batch read, naming the file and the archive, instead of
+    returning the other locations' rows as the whole trace."""
+    from pipit_spark.sources.otf2_native import read_otf2_native
+
+    archive = write_otf2_archive([4, 4, 4])
+    os.remove(os.path.join(archive, "traces", "1.evt"))
+    with pytest.raises(FileNotFoundError, match=r"traces/1\.evt") as err:
+        read_otf2_native(spark, archive)
+    assert archive in str(err.value)
