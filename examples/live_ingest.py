@@ -1,5 +1,5 @@
 """Live/backfill ingestion walkthrough — the landing-directory recipe
-for all three file-per-unit trace formats, plus the hot-file split.
+for Projections logs, plus the hot-file split.
 
 What it shows, on a self-synthesized Charm++ Projections fixture:
 
@@ -7,9 +7,8 @@ What it shows, on a self-synthesized Charm++ Projections fixture:
 2. STREAMING catch-up ingest (`stream_projections` + availableNow +
    sink checkpoint): re-running after new PE logs land ingests ONLY
    the new files — file-level exactly-once, the property a long
-   backfill over an object store actually needs. The same pattern
-   works for OTF2 archives (`stream_otf2_native`) and Nsight CSV
-   reports (`stream_nsight`).
+   backfill over an object store actually needs. The other trace
+   formats are read in batch (`Trace.from_otf2`, `Trace.from_nsight`).
 3. The skewed-log escape hatch: one hot PE holding half the events
    bounds gzip ingest's tail (measured 6.2-6.4x, SCALING.md round-8);
    `tools/split_pe_log.py` re-shards it ONCE and the reader parses

@@ -7,11 +7,11 @@ WAV (stdlib ``wave``). Lossy/entropy-coded formats (JPEG, GIF-LZW,
 mp3/ogg) still need a real codec library and keep the header-parse +
 stub-feature fallback in :mod:`multimodal`.
 
-Encoders exist so tests and driver gates can synthesize REAL files from
-a closed-form pixel/sample formula and prove the decode path
-end-to-end: synth bytes -> real decoder -> integer stats that a DuckDB
-oracle recomputes from the formula alone (never seeing the bytes). A
-bug in either the writer or the reader breaks the hash.
+Encoders (PNG, BMP, WAV) exist so tests and driver gates can synthesize
+REAL files from a closed-form pixel/sample formula and prove the decode
+path end-to-end: synth bytes -> real decoder -> integer stats that a
+DuckDB oracle recomputes from the formula alone (never seeing the
+bytes). A bug in either the writer or the reader breaks the hash.
 
 Reference scope: the reference engine (pipit) has no media surface;
 this extends the brief's multimodal requirement (decode /
@@ -29,7 +29,6 @@ import numpy as np
 __all__ = [
     "encode_bmp",
     "encode_png",
-    "encode_ppm",
     "encode_wav",
     "decode_bmp",
     "decode_png",
@@ -216,15 +215,6 @@ def decode_png(data: bytes) -> np.ndarray:
 
 
 # ---------------------------------------------------------------- PPM
-
-
-def encode_ppm(pixels: np.ndarray) -> bytes:
-    """Binary P6 PPM from (h, w) gray or (h, w, 3) RGB uint8."""
-    px = np.asarray(pixels, dtype=np.uint8)
-    if px.ndim == 2:
-        px = np.repeat(px[:, :, None], 3, axis=2)
-    h, w, _ = px.shape
-    return f"P6\n{w} {h}\n255\n".encode() + px.tobytes()
 
 
 def decode_ppm(data: bytes) -> np.ndarray:

@@ -103,18 +103,6 @@ def embedding_dedup(
 
 
 # ------------------------------------------------------------- shingles
-def _shingles(col, n: int = 3):
-    """Word n-gram shingles of the normalized text (distinct)."""
-    toks = _tokens(col)
-    idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0)))
-    return F.array_distinct(
-        F.transform(
-            idx,
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-        )
-    )
-
-
 def shingle_table(
     docs: DataFrame, n: int = 3, distinct: bool = True,
     keep_pos: bool = False,
@@ -188,8 +176,8 @@ def _pair_common_counts(
     the count and the join probe, so the compact PER-DOC set frame
     caches spill-safely — one row per doc, far cheaper to materialize
     than the exploded shingle stream, which both branches re-derive
-    with an in-memory explode — for the query's lifetime (the
-    vocab_coverage contract: clear with ``spark.catalog.clearCache()``).
+    with an in-memory explode — until :func:`release_block_caches` (or
+    ``queries.clear_state``) unpersists it.
     The count-first shuffle plan, whose exchanges are map-side combined
     down to one row per distinct shingle, is the shape that survives
     corpus growth: the surviving set (df ∈ [2, max_df]) grows with the
@@ -228,6 +216,7 @@ def _pair_common_counts(
         .agg(F.collect_set("shingle").alias("__set"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
+    _PERSISTED_BLOCKS.append(sets)
     sh = sets.select(
         "doc_id",
         F.size("__set").alias("sz"),
@@ -326,67 +315,17 @@ _MINHASH_P = (1 << 31) - 1
 
 def _perm_constants(num_hashes: int) -> tuple[list[int], list[int]]:
     """The (a_i, b_i) linear-permutation constants — ONE seeded source
-    shared by every signature producer (batch aggregate, row-local
-    expression), so signatures are index-compatible across all of
-    them."""
+    shared by the signature aggregate and its DuckDB oracle, so both
+    produce the same signatures."""
     rng = np.random.default_rng(42)
     a = rng.integers(1, _MINHASH_P, size=num_hashes).tolist()
     b = rng.integers(0, _MINHASH_P, size=num_hashes).tolist()
     return a, b
 
 
-def minhash_sig_expr(
-    text_col, num_hashes: int = 16, shingle_n: int = 3,
-    portable: bool = False, base_hash: str = "xxhash64",
-):
-    """ROW-LOCAL minhash signature column: the same signatures as
-    :func:`minhash_sig_array` / :func:`build_lsh_index` (same permuted
-    xxhash64 / seeded md5, same shingling) computed with ``array_min``
-    over the per-row shingle array instead of explode + groupBy MIN —
-    zero shuffle, zero state, so a STREAM can sign each document as it
-    arrives and band-join a static corpus index
-    (:func:`pipit_spark.streaming.ops.streaming_near_dup_screen`).
-
-    Batch callers should keep using :func:`minhash_sig_array`: HOF
-    lambdas evaluate interpreted per element (PLANS.md lesson #1) — the
-    per-shingle cost here is the price of streaming's no-shuffle
-    constraint, not a free alternative."""
-    sh = _shingles(text_col, shingle_n)
-    # closure factories: a 2-arg lambda in F.transform would receive
-    # (element, index) — the seed must be CAPTURED, not a second param
-    if portable:
-        def _md5_min(i: int):
-            return F.array_min(
-                F.transform(
-                    sh, lambda s: F.md5(F.concat(F.lit(f"{i}:"), s))
-                )
-            )
-
-        return F.array(*[_md5_min(i) for i in range(num_hashes)])
-    p = _MINHASH_P
-    a, bvec = _perm_constants(num_hashes)
-    hs = F.transform(sh, lambda s: _base_hash_expr(s, base_hash))
-
-    def _perm_min(ai: int, bi: int):
-        return F.array_min(
-            F.transform(
-                hs, lambda h: F.pmod(F.lit(ai) * h + F.lit(bi), F.lit(p))
-            )
-        )
-
-    return F.array(
-        *[
-            _perm_min(int(a[i]), int(bvec[i]))
-            for i in range(num_hashes)
-        ]
-    )
-
-
 def band_key_expr(sig_col, b: int, rows_per_band: int, portable: bool):
-    """Band-``b`` bucket key from a signature array column — the single
-    source of the bucket format (portable ``'b|v|v|…'``, fast
-    ``'b:<xxhash64>'``) shared by the index builder and the streaming
-    signer, so buckets can never drift between them."""
+    """Band-``b`` bucket key from a signature array column (portable
+    ``'b|v|v|…'``, fast ``'b:<xxhash64>'``)."""
     els = [
         F.element_at(sig_col, b * rows_per_band + r + 1)
         for r in range(rows_per_band)
@@ -502,9 +441,8 @@ def build_lsh_index(
             base_hash=base_hash,
         )
 
-    # bucket format lives in band_key_expr, shared with the streaming
-    # signer so index and stream can never drift (portable = the raw
-    # band values, exact in every engine; fast = xxhash64 of them).
+    # bucket format lives in band_key_expr (portable = the raw band
+    # values, exact in every engine; fast = xxhash64 of them).
     # md5int base hashes keep the replayable raw-value format so the
     # DuckDB oracle can reproduce the buckets too.
     replayable = portable or base_hash == "md5int"
@@ -671,7 +609,8 @@ def simhash(docs: DataFrame, bits: int = 64) -> DataFrame:
     return agg.select("doc_id", F.concat(*nibbles).alias("simhash"))
 
 
-#: per-block frames simhash_pairs persisted this session — released by
+#: frames this module persisted this session (simhash_pairs' per-block
+#: frames, _pair_common_counts' per-doc shingle sets) — released by
 #: :func:`release_block_caches` (wired into queries.clear_state), the
 #: same per-call lifecycle similarity._PORTABLE_PERSISTED uses, so
 #: long-lived sessions never need a session-wide clearCache()
@@ -679,10 +618,12 @@ _PERSISTED_BLOCKS: list[DataFrame] = []
 
 
 def release_block_caches() -> None:
-    """Unpersist every per-block frame :func:`simhash_pairs` cached.
-    Call between query batches in a long-running session (r11 ADVICE:
-    the default path persists on every call and the frames otherwise
-    accumulate until a session-wide ``spark.catalog.clearCache()``)."""
+    """Unpersist every frame in ``_PERSISTED_BLOCKS``: the per-block
+    frames :func:`simhash_pairs` cached and the per-doc shingle sets of
+    :func:`_pair_common_counts`. Call between query batches in a
+    long-running session (r11 ADVICE: the default path persists on
+    every call and the frames otherwise accumulate until a
+    session-wide ``spark.catalog.clearCache()``)."""
     for df in _PERSISTED_BLOCKS:
         try:
             df.unpersist()
@@ -1390,7 +1331,7 @@ WHERE doc_id NOT IN (SELECT DISTINCT b FROM pairs)
 
 def _sql_shingles(n: int = 3) -> str:
     """DuckDB expression producing the distinct word-n-gram shingle list
-    of ``text`` (mirrors _shingles)."""
+    of ``text`` (mirrors :func:`shingle_table`)."""
     norm = _sql_norm("text")
     return (
         f"list_distinct(list_transform("

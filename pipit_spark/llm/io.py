@@ -1,18 +1,11 @@
-"""JSONL corpus interchange for the LLM-data operators.
+"""Corpus interchange for the LLM-data operators: Common Crawl WARC/WET
+ingestion and the Arrow IPC training-loop hand-off.
 
-Training corpora ship as sharded ``*.jsonl`` / ``*.jsonl.gz`` — one JSON
-object per line. Spark's JSON source handles this natively (including
-gzip decompression and multi-file globs), but two defaults are wrong at
-100 TB and are overridden here:
-
-* **schema inference** triggers a full extra pass over the data before
-  the real scan — readers take an explicit schema instead (defaulting
-  to the canonical documents schema) and route malformed lines to a
-  ``_corrupt_record`` column rather than failing the job;
-* **output sharding**: one output file per partition is the scalable
-  default (a single .jsonl file would serialize through one task);
-  ``write_jsonl`` keeps that and exposes ``num_shards`` for explicit
-  control (a repartition, the only shuffle in the sink).
+Partitioning is the file sharding: ``binaryFile`` gives one row — one
+task — per shard, and each shard parses in one Python pass inside
+``mapInPandas``. Plain JSONL, ORC and partitioned-parquet corpora need
+no wrapper here: ``spark.read``/``DataFrame.write`` with an explicit
+schema already skip the inference pass.
 
 No reference counterpart (pipit reads traces, not corpora); extends
 SURVEY.md §7 step 9.
@@ -20,181 +13,8 @@ SURVEY.md §7 step 9.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
-
-DOCUMENTS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("source", T.StringType()),
-        T.StructField("n_chars", T.LongType()),
-    ]
-)
-
-
-def read_jsonl(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | None = None,
-    keep_corrupt: bool = False,
-) -> DataFrame:
-    """Read a (sharded, possibly gzipped) JSONL corpus with an explicit
-    schema — no inference pass. Malformed lines are dropped at the
-    source (DROPMALFORMED — no post-filter needed, and no
-    ``_corrupt_record`` pseudo-column, which Spark forbids as the sole
-    referenced column of a query). Pass ``keep_corrupt=True`` to switch
-    to PERMISSIVE mode and retain the raw line of each parse failure in
-    ``_corrupt_record`` for quarantine pipelines.
-    """
-    schema = schema or DOCUMENTS_SCHEMA
-    if not keep_corrupt:
-        return (
-            spark.read.schema(schema)
-            .option("mode", "DROPMALFORMED")
-            .json(path)
-        )
-    full = T.StructType(
-        schema.fields + [T.StructField("_corrupt_record", T.StringType())]
-    )
-    return (
-        spark.read.schema(full)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .json(path)
-    )
-
-
-def write_jsonl(
-    docs: DataFrame,
-    path: str,
-    num_shards: int | None = None,
-    compression: str | None = None,
-) -> None:
-    """Write a corpus as sharded JSONL. ``num_shards`` repartitions to a
-    target shard count (omit to keep the upstream partitioning — no
-    shuffle); ``compression='gzip'`` for .jsonl.gz shards."""
-    if num_shards is not None:
-        docs = docs.repartition(num_shards)
-    w = docs.write.mode("overwrite")
-    if compression:
-        w = w.option("compression", compression)
-    w.json(path)
-
-
-def write_training_shards(
-    docs: DataFrame,
-    path: str,
-    context_len: int = 512,
-    n_shards: int = 64,
-    tokens_col: str | None = None,
-) -> None:
-    """End of the training-data pipeline: join the packing manifest
-    (:func:`~pipit_spark.llm.sampling.pack_assignments`) back onto the
-    documents and write JSONL partitioned by ``shard`` — each shard
-    directory holds its documents tagged with (pack_in_shard,
-    offset_in_pack, n_tokens), in the layout a data loader streams
-    pack-by-pack.
-
-    The manifest join is on doc_id (both sides already carry it; AQE
-    picks the strategy) and the write's partitionBy reuses the
-    manifest's shard key — one shuffle total beyond the manifest's own
-    cumsum."""
-    from .sampling import pack_assignments
-
-    manifest = pack_assignments(
-        docs, context_len=context_len, n_shards=n_shards,
-        tokens_col=tokens_col,
-    )
-    out = docs.join(manifest, "doc_id")
-    (
-        out.repartition("shard")
-        .sortWithinPartitions("pack_in_shard", "offset_in_pack")
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .json(path)
-    )
-
-
-def read_orc(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | None = None,
-) -> DataFrame:
-    """Read an ORC corpus. ORC is self-describing (schema rides in the
-    file footer — no inference pass to suppress, unlike JSONL); an
-    explicit ``schema`` acts as projection + type check, which keeps
-    column pruning exact when callers only need a subset. Predicate
-    pushdown into ORC stripe/row-group indexes comes free from the
-    native source."""
-    r = spark.read
-    if schema is not None:
-        r = r.schema(schema)
-    return r.orc(path)
-
-
-def write_orc(
-    docs: DataFrame,
-    path: str,
-    num_shards: int | None = None,
-    compression: str = "zstd",
-) -> None:
-    """Write a corpus as sharded ORC (columnar interchange for
-    warehouses that speak ORC rather than parquet). Same sharding
-    contract as :func:`write_jsonl`: one file per partition by default,
-    ``num_shards`` repartitions for explicit control."""
-    if num_shards is not None:
-        docs = docs.repartition(num_shards)
-    docs.write.mode("overwrite").option("compression", compression).orc(path)
-
-
-def write_partitioned_corpus(
-    docs: DataFrame,
-    path: str,
-    partition_cols: tuple[str, ...] = ("source", "lang"),
-    fmt: str = "parquet",
-    files_per_partition: int = 8,
-) -> None:
-    """Hive-layout corpus lake: directory-partitioned by low-cardinality
-    routing columns (source/lang are the natural pruning axes of a
-    training corpus — per-source reprocessing and per-language selection
-    are the two most common scoped reads). A read filtered on the
-    partition columns then prunes whole directories BEFORE any IO
-    (PartitionFilters in the scan, contract-tested), which at 100 TB is
-    the difference between touching one source's shard and listing the
-    whole lake.
-
-    The write repartitions on (partition columns, content bucket) —
-    partition columns alone would collapse parallelism to the number
-    of distinct (source, lang) combos and write one giant file per
-    directory; without any repartition every task appends a file into
-    every directory (task_count × n_partitions small files). The
-    bucket term keeps directory locality while fanning each directory
-    across ``files_per_partition`` tasks/files."""
-    bucket = F.pmod(
-        F.xxhash64(*[F.col(c) for c in docs.columns]),
-        F.lit(files_per_partition),
-    )
-    w = (
-        docs.repartition(*[F.col(c) for c in partition_cols], bucket)
-        .write.mode("overwrite")
-        .partitionBy(*partition_cols)
-    )
-    getattr(w, fmt)(path)
-
-
-def read_partitioned_corpus(
-    spark: SparkSession, path: str, fmt: str = "parquet", **filters: str
-) -> DataFrame:
-    """Read back a partitioned corpus lake, with optional equality
-    filters on partition columns passed as kwargs (``source="web"``) —
-    expressed as ordinary ``filter`` calls so Catalyst turns them into
-    partition pruning."""
-    df = getattr(spark.read, fmt)(path)
-    for c, v in filters.items():
-        df = df.filter(F.col(c) == v)
-    return df
 
 
 # --------------------------------------------------------------------- #
@@ -271,10 +91,23 @@ def _maybe_gunzip(name: str, content: bytes) -> bytes:
     return content
 
 
-def _wet_shard_parser():
-    """One shared per-shard WET parse loop (a mapInPandas generator) —
-    the batch and streaming readers MUST stay byte-identical, so there
-    is exactly one copy of the record walk."""
+def read_wet(spark: SparkSession, path: str) -> DataFrame:
+    """Common Crawl WET ingestion: sharded ``*.warc.wet(.gz)`` files of
+    ``conversion`` records (pre-extracted page text) → one row per page,
+    ready for the documents pipeline (add ``doc_id`` via
+    ``monotonically_increasing_id`` or a content fingerprint).
+
+    Partitioning IS the file sharding: ``binaryFile`` gives one row —
+    one task — per shard, exactly how Common Crawl distributes the
+    corpus (~1 GB gzip segments, ~100k of them per crawl ≈ 100 TB), so
+    a 1000-executor cluster reads 1000 shards at a time with zero
+    shuffle. Parsing is one Python pass per shard inside mapInPandas
+    (Arrow-batched, record framing is byte arithmetic, not regex).
+    Memory envelope: whole-shard decompress, ~3× the .gz size — the
+    same envelope any WARC tool (warcio et al.) needs per stream;
+    Spark's binary source caps files at 2 GB which the CC segment
+    convention (<1.2 GB) already satisfies.
+    """
     import pandas as pd
 
     def gen(batches):
@@ -299,30 +132,8 @@ def _wet_shard_parser():
                     rows, columns=[f.name for f in WET_SCHEMA.fields]
                 )
 
-    return gen
-
-
-def read_wet(spark: SparkSession, path: str) -> DataFrame:
-    """Common Crawl WET ingestion: sharded ``*.warc.wet(.gz)`` files of
-    ``conversion`` records (pre-extracted page text) → one row per page,
-    ready for the documents pipeline (add ``doc_id`` via
-    ``monotonically_increasing_id`` or a content fingerprint).
-
-    Partitioning IS the file sharding: ``binaryFile`` gives one row —
-    one task — per shard, exactly how Common Crawl distributes the
-    corpus (~1 GB gzip segments, ~100k of them per crawl ≈ 100 TB), so
-    a 1000-executor cluster reads 1000 shards at a time with zero
-    shuffle. Parsing is one Python pass per shard inside mapInPandas
-    (Arrow-batched, record framing is byte arithmetic, not regex).
-    Memory envelope: whole-shard decompress, ~3× the .gz size — the
-    same envelope any WARC tool (warcio et al.) needs per stream;
-    Spark's binary source caps files at 2 GB which the CC segment
-    convention (<1.2 GB) already satisfies.
-    """
     files = spark.read.format("binaryFile").load(path)
-    return files.select("path", "content").mapInPandas(
-        _wet_shard_parser(), WET_SCHEMA
-    )
+    return files.select("path", "content").mapInPandas(gen, WET_SCHEMA)
 
 
 def read_warc(spark: SparkSession, path: str) -> DataFrame:
@@ -376,35 +187,6 @@ def read_warc(spark: SparkSession, path: str) -> DataFrame:
                 )
 
     return files.select("path", "content").mapInPandas(gen, WARC_SCHEMA)
-
-
-def read_wet_stream(spark: SparkSession, path: str) -> DataFrame:
-    """Streaming WET ingestion: the same parser as :func:`read_wet`
-    over a ``binaryFile`` file-source stream — new Common Crawl
-    segments landing in ``path`` flow through as they arrive (the
-    production shape for continuous crawl ingestion; compose with
-    llm/pipeline.incremental_new_docs or the streaming near-dup screen
-    for dedup-on-arrival). File-granular tasks and checkpointed file
-    tracking come from the source; one shard is parsed exactly once
-    across restarts."""
-    # the binaryFile source's schema is fixed but must be stated
-    # explicitly for streaming (no inference pass on a stream)
-    binary_schema = T.StructType(
-        [
-            T.StructField("path", T.StringType()),
-            T.StructField("modificationTime", T.TimestampType()),
-            T.StructField("length", T.LongType()),
-            T.StructField("content", T.BinaryType()),
-        ]
-    )
-    files = (
-        spark.readStream.format("binaryFile")
-        .schema(binary_schema)
-        .load(path)
-    )
-    return files.select("path", "content").mapInPandas(
-        _wet_shard_parser(), WET_SCHEMA
-    )
 
 
 def write_arrow_ipc(

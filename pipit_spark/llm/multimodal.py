@@ -258,180 +258,6 @@ def decode_media(
     )
 
 
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("src_height", T.IntegerType()),
-        T.StructField("src_width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("data", T.BinaryType()),
-    ]
-)
-
-
-def resize_media(
-    media: DataFrame, target_h: int = 32, target_w: int = 32
-) -> DataFrame:
-    """Resize plumbing for image/video blobs: same mapInPandas shape as
-    :func:`decode_media` (Arrow-batched, bounded memory, narrow — no
-    shuffle), fixed typed output schema carrying source + target
-    dimensions and the re-encoded payload. The resampler itself is the
-    STUB codec (PIL/ffmpeg absent in this container): output bytes are a
-    deterministic content-hash expansion sized ``target_h·target_w`` so
-    downstream batch-shape behavior is realistic; swap in a real
-    decoder+resampler without touching the Spark contract."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            out = {
-                "media_id": [], "kind": [], "src_height": [],
-                "src_width": [], "height": [], "width": [], "data": [],
-            }
-            for mid, kind, data in zip(
-                pdf["media_id"], pdf["kind"], pdf["data"]
-            ):
-                raw = bytes(data)
-                h, w, _, _ = _STUB_decode_bytes(raw, kind, 1)
-                n = target_h * target_w
-                seed = hashlib.md5(raw + b"resize").digest()
-                body = (seed * (n // len(seed) + 1))[:n]
-                out["media_id"].append(mid)
-                out["kind"].append(kind)
-                out["src_height"].append(h)
-                out["src_width"].append(w)
-                out["height"].append(target_h)
-                out["width"].append(target_w)
-                out["data"].append(body)
-            yield pd.DataFrame(out)
-
-    return (
-        media.filter(F.col("kind").isin("image", "video"))
-        .select("media_id", "kind", "data")
-        .mapInPandas(gen, RESIZED_SCHEMA)
-    )
-
-
-def frame_sample(media: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame sampling plumbing: one output row per sampled frame
-    index (frame count from metadata; decode itself is the stub above).
-    Lateral explode — narrow, no shuffle."""
-    frames = media.filter(F.col("kind") == "video").withColumn(
-        "__n_frames",
-        (F.length(F.col("data")) % 100 + 1).cast("int"),  # stub frame count
-    )
-    return frames.select(
-        "media_id",
-        F.explode(
-            F.sequence(F.lit(0), F.col("__n_frames") - 1, F.lit(every_n))
-        ).alias("frame_idx"),
-    )
-
-
-def media_stats(media: DataFrame) -> DataFrame:
-    """Per-kind size statistics — pure relational, used to plan
-    partition sizing for the decode pass."""
-    return (
-        media.groupBy("kind")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.length("data")).alias("total_bytes"),
-            F.avg(F.length("data")).alias("avg_bytes"),
-        )
-        .orderBy("kind")
-    )
-
-
-AUDIO_WINDOW_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("window_idx", T.IntegerType()),
-        T.StructField("start_sample", T.LongType()),
-        T.StructField("end_sample", T.LongType()),
-    ]
-)
-
-
-def audio_windows(
-    media: DataFrame, window_samples: int = 16_000, hop: int | None = None
-) -> DataFrame:
-    """Fixed-size audio windowing plumbing: one row per (clip, window)
-    with sample offsets, from typed metadata (``sample_rate`` /
-    ``n_samples`` map entries when present, stub-derived from payload
-    size otherwise). Pure lateral explode — narrow, no shuffle, no
-    decode; the decoder consumes (media_id, start, end) slices later so
-    window planning never touches the blobs."""
-    hop = hop or window_samples
-    clips = media.filter(F.col("kind") == "audio").select(
-        "media_id",
-        F.coalesce(
-            F.element_at(F.col("meta"), "n_samples").cast("long"),
-            (F.length("data").cast("long") * 8),  # stub: bytes -> samples
-        ).alias("__n"),
-    ).filter(
-        # unknown-length clips (NULL data, no n_samples metadata) and
-        # empty clips plan no windows — greatest()/least() skip NULLs,
-        # which would otherwise fabricate a full-length window over a
-        # blob that cannot be sliced
-        F.col("__n").isNotNull() & (F.col("__n") > 0)
-    )
-    return clips.select(
-        "media_id",
-        "__n",
-        F.posexplode(
-            F.transform(
-                F.sequence(
-                    F.lit(0),
-                    F.greatest(
-                        F.floor((F.col("__n") - 1) / hop).cast("int"),
-                        F.lit(0),
-                    ),
-                ),
-                lambda i: i.cast("long") * hop,
-            )
-        ).alias("window_idx", "start_sample"),
-    ).select(
-        "media_id",
-        F.col("window_idx").cast("int").alias("window_idx"),
-        "start_sample",
-        # ragged tail window clamps to the clip length
-        F.least(
-            F.col("start_sample") + window_samples, F.col("__n")
-        ).alias("end_sample"),
-    )
-
-
-def multimodal_manifest(
-    media: DataFrame, docs: DataFrame, feat_dim: int = 16
-) -> DataFrame:
-    """Paired (media, caption) training manifest: decoded media features
-    joined with the caption text keyed by id. The decode pass is narrow
-    (mapInPandas); the caption join is the only shuffle, on the id both
-    sides already carry — at scale both sides arrive partitioned by id
-    from their sources, so AQE plans a co-located join. Output is the
-    loader-facing schema (id, kind, dims, features, caption,
-    caption_tokens)."""
-    from .text import _tokens
-
-    decoded = decode_media(media, feat_dim=feat_dim)
-    # token counting via the shared text.py tokenizer so manifest
-    # counts agree with text_stats.n_tokens on the same documents
-    captions = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.col("text").alias("caption"),
-        F.size(_tokens(F.coalesce(F.col("text"), F.lit(""))))
-        .cast("long")
-        .alias("caption_tokens"),
-    )
-    return decoded.join(captions, "media_id").select(
-        "media_id", "kind", "height", "width", "n_bytes",
-        "features", "caption", "caption_tokens",
-    )
-
-
 def media_phash(
     media: DataFrame, feat_dim: int = 16, codec: str = "auto"
 ) -> DataFrame:

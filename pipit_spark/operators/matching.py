@@ -65,9 +65,6 @@ The kernel is a per-call choice (``kernel=``, default "location"). Both
 public entry points run one body, :func:`_match`: :func:`match_events`
 hash-partitions by location (and self-sizes the chunked pass), while
 :func:`match_events_iter` trusts input already partitioned by location.
-
-A pure-SQL window-function fast path for well-nested traces is provided in
-:func:`well_nested_matching_sql` (used by tests and the DuckDB oracle).
 """
 
 from __future__ import annotations
@@ -1096,44 +1093,3 @@ def match_events_iter(
     """
     return _match(events, metric_cols, kernel, assume_wellformed, None)
 
-
-def well_nested_matching_sql(events_rel: str = "events") -> str:
-    """ANSI-SQL window-function form of the matching pass, valid for
-    WELL-NESTED traces (every Leave closes the most recent open Enter of
-    the same name). Used as the DuckDB oracle for the pandas path and as
-    documentation of the Catalyst-native alternative.
-
-    depth(Enter) = running sum(+1/-1) - 1; the k-th Enter of a (location,
-    name, depth) pairs with its k-th Leave.
-    """
-    return f"""
-WITH el AS (
-    SELECT *,
-           SUM(CASE WHEN event_type = 'Enter' THEN 1
-                    WHEN event_type = 'Leave' THEN -1 ELSE 0 END)
-               OVER (PARTITION BY process ORDER BY timestamp_ns, seq
-                     ROWS UNBOUNDED PRECEDING) AS cum
-    FROM {events_rel}
-    WHERE event_type IN ('Enter', 'Leave')
-),
-keyed AS (
-    SELECT *,
-           CASE WHEN event_type = 'Enter' THEN cum - 1 ELSE cum END AS d,
-           ROW_NUMBER() OVER (
-               PARTITION BY process, name,
-                   CASE WHEN event_type = 'Enter' THEN cum - 1 ELSE cum END,
-                   event_type
-               ORDER BY timestamp_ns, seq) AS rn
-    FROM el
-)
-SELECT e.event_id            AS event_id,
-       e.process             AS process,
-       e.name                AS name,
-       CAST(e.d AS INTEGER)  AS depth,
-       l.event_id            AS matching_event_id,
-       CAST(l.timestamp_ns - e.timestamp_ns AS DOUBLE) AS time_inc
-FROM keyed e
-JOIN keyed l
-  ON e.process = l.process AND e.name = l.name AND e.d = l.d AND e.rn = l.rn
- AND e.event_type = 'Enter' AND l.event_type = 'Leave'
-"""

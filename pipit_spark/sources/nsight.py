@@ -38,27 +38,15 @@ def _rank_table(df: DataFrame, has_tid: bool) -> DataFrame:
 
 
 def _unpivot_intervals(
-    df: DataFrame, name_col: str, has_tid: bool, streaming: bool = False
+    df: DataFrame, name_col: str, has_tid: bool
 ) -> DataFrame:
     """Interval rows (with __process[/__thread] attached) → canonical
     Enter + Leave events (nsight_reader.py:58-77).
 
-    Batch ids are file-positional (``monotonically_increasing_id``).
-    Streaming cannot compute a positional id (it is a global property
-    of the report set, and Spark rejects the expression on streams),
-    so the stream twin content-addresses each interval:
-    ``xxhash64(file, row columns)`` — deterministic across reruns;
-    byte-identical duplicate intervals within one file collide, the
-    documented trade for a position-free id. Equal-timestamp event
-    order under the id tie-breaker is arbitrary-but-deterministic in
-    both modes (batch: file position; stream: hash)."""
-    if streaming:
-        # __seq was content-addressed on the stream side BEFORE the
-        # rank join (input_file_name() only resolves on a single-source
-        # plan) — see stream_nsight
-        assert "__seq" in df.columns
-    else:
-        df = df.withColumn("__seq", F.monotonically_increasing_id())
+    Ids are file-positional (``monotonically_increasing_id``), so the
+    order of equal-timestamp events under the id tie-breaker follows
+    the file."""
+    df = df.withColumn("__seq", F.monotonically_increasing_id())
     both = df.select(
         F.expr(
             "stack(2, 'Enter', cast(`Start (ns)` as long), "
@@ -94,77 +82,3 @@ def read_nsight(spark: SparkSession, path: str, **options) -> DataFrame:
         df = df.withColumn("__process", F.lit(0))
     return _unpivot_intervals(df, name_col, has_tid)
 
-
-def stream_nsight(
-    spark: SparkSession,
-    path: str,
-    schema: str,
-    rank_source: DataFrame | None = None,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """STREAMING ingest of Nsight CSV reports landing in a directory —
-    the catch-up twin of :func:`read_nsight` for a long profiling
-    session exporting periodic reports (same pattern as
-    ``stream_projections`` / ``stream_otf2_native``: availableNow
-    triggers + a parquet sink checkpoint give file-level exactly-once
-    backfill).
-
-    Streaming CSV requires an explicit ``schema``. The PID/TID dense
-    renumber is a GLOBAL property a stream cannot compute (ranks would
-    shift as new PIDs arrive), so the rank table is built STATICALLY —
-    from ``rank_source`` (a static DataFrame of intervals, e.g. a
-    topology manifest or a batch read of a representative report) or,
-    by default, a batch scan of the files already landed at stream
-    definition. A later file carrying a PID/TID absent from that table
-    fails the micro-batch loudly (``assert_true``) instead of silently
-    renumbering differently than the batch reader would.
-
-    The unpivot/canonicalize path is the batch reader's own
-    (:func:`_unpivot_intervals`); the rank join is a stream-static
-    broadcast join.
-    """
-    static = (
-        rank_source
-        if rank_source is not None
-        else spark.read.csv(path, header=True, schema=schema)
-    )
-    has_pid = "PID" in static.columns
-    has_tid = "TID" in static.columns
-    name_col = "Name" if "Name" in static.columns else static.columns[0]
-
-    reader = spark.readStream.schema(schema).option("header", True)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    sdf = reader.csv(path)
-    # content-address each interval on the single-source plan (before
-    # the rank join): deterministic, position-free (see
-    # _unpivot_intervals for the id semantics)
-    sdf = sdf.withColumn(
-        "__seq",
-        # shift to 62 bits: the *2+is_leave id arithmetic below must
-        # not overflow ANSI-mode long
-        F.shiftright(
-            F.xxhash64(F.input_file_name(), *[F.col(c) for c in sdf.columns]),
-            2,
-        ),
-    )
-
-    if has_pid:
-        keys = ["PID"] + (["TID"] if has_tid else [])
-        ranks = _rank_table(static, has_tid)
-        sdf = sdf.join(F.broadcast(ranks), keys, "left").withColumn(
-            "__process",
-            F.when(
-                F.col("__process").isNull(),
-                F.assert_true(
-                    F.lit(False),
-                    F.lit(
-                        "PID/TID not in rank_source — rebuild the rank "
-                        "table to cover newly-landed processes"
-                    ),
-                ).cast("int"),
-            ).otherwise(F.col("__process")),
-        )
-    else:
-        sdf = sdf.withColumn("__process", F.lit(0))
-    return _unpivot_intervals(sdf, name_col, has_tid, streaming=True)

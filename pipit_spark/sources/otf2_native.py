@@ -252,36 +252,14 @@ def _iter_location_rows(
     # of per-location sequence. Out-of-range inputs would silently
     # collide ids across locations — fail loudly instead (seq is
     # guarded in the append loop).
-    with open(evt_path, "rb") as f:
-        buf = f.read()
-    yield from _iter_buf_rows(
-        buf, evt_path, process, thread, region_names, resolution, offset,
-        metric_members=metric_members,
-        metric_class_members=metric_class_members,
-    )
-
-
-def _iter_buf_rows(
-    buf: bytes,
-    source: str,
-    process: int,
-    thread: int,
-    region_names: dict[int, str],
-    resolution: int,
-    offset: int,
-    metric_members: list[int] | None = None,
-    metric_class_members: dict[int, list[int]] | None = None,
-):
-    """The byte-buffer core of :func:`_iter_location_rows`, shared
-    with the streaming twin (whose ``binaryFile`` source hands the
-    .evt content as bytes rather than a path); ``source`` names the
-    file in a truncation error."""
     if not 0 <= process < (1 << 23):
         raise ValueError(
             f"process {process} out of packed-id range [0, 2^23)"
         )
     if not 0 <= thread < (1 << 8):
         raise ValueError(f"thread {thread} out of packed-id range [0, 256)")
+    with open(evt_path, "rb") as f:
+        buf = f.read()
     metric_members = metric_members or []
     metric_class_members = metric_class_members or {}
     n_metrics = len(metric_members)
@@ -293,7 +271,7 @@ def _iter_buf_rows(
     seq = 0
     pending_ts: int | None = None
     pending_vals: list[float | None] = [None] * n_metrics
-    for ts, t, p in _records(buf, with_timestamps=True, source=source):
+    for ts, t, p in _records(buf, with_timestamps=True, source=evt_path):
         if t == _ATTRIBUTE_LIST:
             continue  # extra attrs for the next event; not an event row
         if t == EVT_METRIC and n_metrics:
@@ -359,33 +337,27 @@ def _iter_buf_rows(
         seq += 1
 
 
-def _location_map(defs: dict, dirname: str | None = None) -> list:
-    """(path-or-basename, process, thread) per location, in location
-    order — process = location-group ref (MPI rank), thread = per-group
-    renumber (otf2_reader.py:357-407). With ``dirname`` the first
-    element is the full .evt path (batch read), and a location defined
-    in ``traces.def`` whose ``traces/{ref}.evt`` is missing raises
+def _location_map(defs: dict, dirname: str) -> list:
+    """(.evt path, process, thread) per location, in location order —
+    process = location-group ref (MPI rank), thread = per-group
+    renumber (otf2_reader.py:357-407). A location defined in
+    ``traces.def`` whose ``traces/{ref}.evt`` is missing raises
     ``FileNotFoundError`` — the reference's OTF2 library fails on such
     an archive too, and dropping the location would return the other
-    locations' rows as if they were the whole trace. Without
-    ``dirname`` it is the bare ``{ref}.evt`` basename (streaming
-    lookup, where files land over time)."""
+    locations' rows as if they were the whole trace."""
     per_group: dict[int, int] = {}
     out = []
     for ref, _n, group in sorted(defs["locations"]):
         thread = per_group.get(group, 0)
         per_group[group] = thread + 1
         fname = f"{ref}.evt"
-        if dirname is None:
-            out.append((fname, group, thread))
-        else:
-            path = os.path.join(dirname, "traces", fname)
-            if not os.path.exists(path):
-                raise FileNotFoundError(
-                    f"OTF2 archive {dirname!r} defines location {ref} but "
-                    f"has no traces/{fname}"
-                )
-            out.append((path, group, thread))
+        path = os.path.join(dirname, "traces", fname)
+        if not os.path.exists(path):
+            raise FileNotFoundError(
+                f"OTF2 archive {dirname!r} defines location {ref} but "
+                f"has no traces/{fname}"
+            )
+        out.append((path, group, thread))
     return out
 
 
@@ -473,82 +445,3 @@ def read_otf2_native(
     )
     return events, definitions
 
-
-def stream_otf2_native(
-    spark: SparkSession,
-    dirname: str,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """STREAMING ingest of an OTF2 archive whose location files are
-    still landing — the availableNow/catch-up twin of
-    :func:`read_otf2_native`, mirroring ``stream_projections``
-    (sources/projections.py): an object store receiving per-location
-    ``.evt`` files (or a backfill re-run) ingests ONLY new files via
-    the sink checkpoint's file-level exactly-once.
-
-    ``readStream.format("binaryFile")`` discovers complete ``.evt``
-    files per micro-batch; each parses through the SAME byte-buffer
-    core and the same bounded-chunk driver as the batch reader
-    (:func:`_iter_buf_rows`, :func:`~pipit_spark.sources.packed.parse_units`),
-    so a truncated file fails the query the way it fails a batch read.
-    File-granular source → per-location state (seq counter, pending
-    metric row) never spans a trigger, exactly like the Projections
-    twin.
-
-    ``traces.def`` must already exist (OTF2 writes global definitions
-    at archive creation for the location/clock tables this needs; an
-    archive still being FINALIZED may rewrite it — this twin targets
-    the land-then-ingest pattern, not tailing a live writer). A
-    landed ``.evt`` whose location ref is absent from the def file
-    fails loudly — silently improvised (process, thread) ids would
-    collide with later locations.
-
-    Events arrive UNSORTED across locations (a stream cannot global-
-    sort); the canonical parquet sink plus ``Trace.from_parquet``
-    applies the same (timestamp, seq) order the batch path does.
-    """
-    defs = parse_global_defs(os.path.join(dirname, "traces.def"))
-    res = defs["clock"]["resolution"]
-    off = defs["clock"]["offset"]
-    lookup = {
-        fname: (proc, thr)
-        for fname, proc, thr in _location_map(defs, dirname=None)
-    }
-    b = spark.sparkContext.broadcast(
-        (lookup, defs["region_name"], defs["metric_members"],
-         defs["metric_class_members"])
-    )
-
-    # binaryFile's fixed schema, required explicitly for streaming
-    bin_schema = T.StructType([
-        T.StructField("path", T.StringType(), False),
-        T.StructField("modificationTime", T.TimestampType(), False),
-        T.StructField("length", T.LongType(), False),
-        T.StructField("content", T.BinaryType(), True),
-    ])
-    reader = spark.readStream.format("binaryFile").schema(
-        bin_schema
-    ).option("pathGlobFilter", "*.evt")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    files = reader.load(os.path.join(dirname, "traces")).select(
-        "path", "content"
-    )
-
-    def rows_of(path, content):
-        lkp, regions, members, class_members = b.value
-        fname = os.path.basename(path)
-        if fname not in lkp:
-            raise ValueError(
-                f"{fname} has no location entry in traces.def — "
-                "cannot assign (process, thread) ids"
-            )
-        process, thread = lkp[fname]
-        return _iter_buf_rows(
-            bytes(content), path, process, thread, regions, res, off,
-            metric_members=members, metric_class_members=class_members,
-        )
-
-    return parse_units(
-        files, rows_of, _event_schema_with_metrics(defs["metric_names"])
-    )

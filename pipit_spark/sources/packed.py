@@ -1,5 +1,5 @@
-"""Packed-parse driver shared by the binary trace readers (OTF2 batch
-and streaming, HPCToolkit).
+"""Packed-parse driver shared by the binary trace readers (OTF2 and
+HPCToolkit).
 
 A reader names its parse units (OTF2 location files, HPCToolkit trace
 lines) and a generator that turns one unit into canonical event tuples;

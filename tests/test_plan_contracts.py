@@ -233,39 +233,6 @@ def test_bucketed_join_no_exchange(spark, tmp_path):
         spark.sql("DROP DATABASE IF EXISTS bkt CASCADE")
 
 
-def test_salted_count_distinct_exact(spark):
-    """The skew-split distinct count equals the direct one on every key
-    (hash-partitioning distinct values across salts is exact, not
-    approximate)."""
-    from pipit_spark.operators.skew import salted_count_distinct
-
-    ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    direct = {
-        r["event_type"]: r["n"]
-        for r in ev.groupBy("event_type")
-        .agg(F.count_distinct("user_id").alias("n"))
-        .collect()
-    }
-    salted = {
-        r["event_type"]: r["n_distinct"]
-        for r in salted_count_distinct(ev, "event_type", "user_id").collect()
-    }
-    assert salted == direct
-
-
-def test_salted_collect_list_complete(spark):
-    from pipit_spark.operators.skew import salted_collect_list
-
-    ev = spark.read.parquet(f"{SF_DIR}/events.parquet").limit(2000)
-    out = salted_collect_list(ev, "event_type", "event_id", salt=4)
-    direct = ev.groupBy("event_type").agg(
-        F.collect_list("event_id").alias("values")
-    )
-    a = {r["event_type"]: sorted(r["values"]) for r in out.collect()}
-    b = {r["event_type"]: sorted(r["values"]) for r in direct.collect()}
-    assert a == b
-
-
 def test_cluster_dedup_no_forced_broadcast(spark):
     """The loser set is pair-graph sized and unbounded, so cluster_dedup
     must not hint a broadcast — the physical join strategy is AQE's

@@ -2,7 +2,8 @@
 
 1. simhash_pairs' per-block persist has a per-call release lifecycle
    (``persist=`` kwarg, ``_blocks_cache`` handle,
-   ``release_block_caches``).
+   ``release_block_caches``), which also frees the per-doc shingle sets
+   of ``_pair_common_counts``.
 2. bench.py's cooling-box tripwire: the r10/r11 driver benches showed
    monotonically-declining pass totals with ``contaminated: false`` —
    the new check flags that shape.
@@ -46,6 +47,24 @@ def test_simhash_pairs_persist_lifecycle(spark):
     D.release_block_caches()
     assert D._PERSISTED_BLOCKS == []
     assert not handle.storageLevel.useMemory
+
+
+def test_pair_common_counts_shingle_sets_released(spark):
+    """The per-doc shingle-set frame _pair_common_counts persists is
+    registered in _PERSISTED_BLOCKS, so release_block_caches frees it
+    without a session-wide clearCache."""
+    from pipit_spark.llm import dedup as D
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    spark.catalog.clearCache()
+    D.release_block_caches()
+    before = persisted()
+    D.ngram_jaccard_pairs(_tiny_docs(spark)).count()
+    assert len(persisted() - before) == 1
+    D.release_block_caches()
+    assert persisted() == before
 
 
 # ------------------------------------------------ bench cooling check

@@ -288,54 +288,6 @@ def test_append_portable_indexes_equals_full_build(spark, tmp_path):
     assert a.exceptAll(b).count() + b.exceptAll(a).count() == 0
 
 
-def test_md5int_row_local_signer_matches_batch(spark):
-    """The streaming signer (row-local minhash_sig_expr) must produce
-    byte-identical md5int signatures to the batch aggregate signer —
-    otherwise a stream screened against an md5int index would silently
-    match nothing."""
-    from pyspark.sql import functions as F
-    from pipit_spark.llm.dedup import minhash_sig_array, minhash_sig_expr
-
-    docs = spark.createDataFrame(
-        [(i, " ".join(f"w{i}_{j}" for j in range(12))) for i in range(5)],
-        "doc_id long, text string",
-    )
-    batch = {
-        r["doc_id"]: list(r["sig"])
-        for r in minhash_sig_array(
-            docs, 8, 2, persist=False, base_hash="md5int"
-        ).collect()
-    }
-    row_local = {
-        r["doc_id"]: list(r["sig"])
-        for r in docs.select(
-            "doc_id",
-            minhash_sig_expr(
-                F.col("text"), 8, 2, base_hash="md5int"
-            ).alias("sig"),
-        ).collect()
-    }
-    assert batch == row_local
-
-
-def test_streaming_screen_rejects_base_hash_mismatch(spark):
-    from pipit_spark.llm.dedup import build_lsh_index
-    from pipit_spark.streaming.ops import streaming_near_dup_screen
-    import pytest as _pytest
-
-    corpus = spark.createDataFrame(
-        [(i, " ".join(f"s{i}_{j}" for j in range(12))) for i in range(3)],
-        "doc_id long, text string",
-    )
-    idx = build_lsh_index(
-        corpus, num_hashes=8, bands=4, base_hash="md5int", persist=False
-    )
-    with _pytest.raises(ValueError, match="base_hash: index=md5int"):
-        streaming_near_dup_screen(
-            corpus, idx, num_hashes=8, bands=4, base_hash="xxhash64"
-        )
-
-
 def test_quantile_sketch_merge_equals_whole(spark):
     """Sharded quantile sketches union-merged must equal the
     whole-corpus sketch — md5 membership is per-doc, so merge≡whole is

@@ -495,67 +495,6 @@ def test_chunked_parse_property(case):
     assert [a for a in got_df.attributes] == [a for a in want.attributes]
 
 
-def test_live_trace_pipeline_stream_ingest_plus_match(spark, tmp_path):
-    """Capstone composition: a LIVE trace directory (PE logs landing
-    across two availableNow runs) through stream_projections →
-    streaming_match equals the batch pipeline's matched intervals —
-    the end-to-end live-analysis path the reference has no counterpart
-    for."""
-    import shutil
-
-    import pandas as pd
-
-    from pipit_spark import Trace
-    from pipit_spark.sources.projections import stream_projections
-    from pipit_spark.streaming.matching import streaming_match
-
-    golden = "/root/reference/pipit/tests/data/ping-pong-projections"
-    if not os.path.isdir(golden):
-        pytest.skip("reference golden traces unavailable")
-
-    live = tmp_path / "live"
-    out = tmp_path / "intervals"
-    ck = tmp_path / "ck"
-    live.mkdir()
-    shutil.copy(f"{golden}/pingpong.prj.sts", live)
-
-    def catch_up():
-        q = (
-            streaming_match(stream_projections(spark, str(live)))
-            .writeStream.format("parquet")
-            .option("path", str(out))
-            .option("checkpointLocation", str(ck))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-
-    shutil.copy(f"{golden}/pingpong.prj.0.log.gz", live)
-    catch_up()
-    shutil.copy(f"{golden}/pingpong.prj.1.log.gz", live)
-    catch_up()
-
-    streamed = spark.read.parquet(str(out)).toPandas()
-    got = {
-        (int(r.process), int(r.enter_event_id), int(r.leave_event_id),
-         r.name, int(r.enter_ts), int(r.leave_ts))
-        for r in streamed.itertuples(index=False)
-    }
-
-    batch = Trace.from_projections(spark, golden).matched.toPandas()
-    enters = batch[(batch.event_type == "Enter")
-                   & batch.matching_event_id.notna()]
-    leaves = batch.set_index("event_id")
-    want = set()
-    for r in enters.itertuples():
-        lid = int(r.matching_event_id)
-        want.add((int(r.process), int(r.event_id), lid, r.name,
-                  int(r.timestamp_ns),
-                  int(leaves.loc[lid, "timestamp_ns"])))
-    assert got == want and len(want) > 0
-
-
 def test_histograms_on_message_free_trace(spark):
     """A trace with zero MPI messages must produce all-zero histograms
     (np.histogram([]) semantics: bins over [0,1]), not a float(None)

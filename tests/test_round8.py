@@ -164,67 +164,6 @@ def test_pq_kmeans_iterations_reduce_quantization_error(spark):
 
 
 # --------------------------------------------------------------------- #
-# OTF2 streaming ingest twin (verdict item 7)
-# --------------------------------------------------------------------- #
-def test_stream_otf2_incremental_matches_batch(spark, tmp_path):
-    """Location .evt files landing across TWO availableNow catch-up
-    runs produce exactly the batch reader's frame, and the sink
-    checkpoint makes the second run ingest ONLY the new file —
-    mirroring the Projections streaming twin, through the same
-    byte-buffer parse core as read_otf2_native."""
-    import shutil
-
-    from pipit_spark.sources.otf2_native import (
-        read_otf2_native,
-        stream_otf2_native,
-    )
-
-    golden = "/root/reference/pipit/tests/data/ping-pong-otf2"
-    if not os.path.isdir(golden):
-        pytest.skip("reference golden traces unavailable")
-
-    live = tmp_path / "live"
-    out = tmp_path / "events_parquet"
-    ck = tmp_path / "ck"
-    (live / "traces").mkdir(parents=True)
-    shutil.copy(f"{golden}/traces.def", live)
-
-    def catch_up():
-        q = (
-            stream_otf2_native(spark, str(live))
-            .writeStream.format("parquet")
-            .option("path", str(out))
-            .option("checkpointLocation", str(ck))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    shutil.copy(f"{golden}/traces/0.evt", live / "traces")
-    catch_up()
-    n_first = spark.read.parquet(str(out)).count()
-
-    shutil.copy(f"{golden}/traces/1.evt", live / "traces")
-    catch_up()
-
-    streamed = spark.read.parquet(str(out)).toPandas()
-    batch, _defs = read_otf2_native(spark, golden)
-    batch = batch.toPandas()
-
-    assert n_first == (batch.process == 0).sum()  # only rank 0 in run 1
-    key = ["process", "thread", "seq"]
-    streamed = streamed.sort_values(key).reset_index(drop=True)
-    batch = batch.sort_values(key).reset_index(drop=True)
-    assert streamed.drop(columns="attributes").equals(
-        batch.drop(columns="attributes")
-    )
-    assert [dict(a) if a is not None else None
-            for a in streamed.attributes] == [
-        dict(a) if a is not None else None for a in batch.attributes
-    ]
-
-
-# --------------------------------------------------------------------- #
 # Pre-split hot-PE shards (skew mitigation, verdict item 4)
 # --------------------------------------------------------------------- #
 def test_split_pe_log_shards_equal_whole(spark, tmp_path):
@@ -323,61 +262,6 @@ def test_matrix_profile_fallback_matches_definition():
 
     picked = _motifs_numpy(series, m, max_motifs=1)
     assert sorted(picked[:2]) == [20, 120]
-
-
-# --------------------------------------------------------------------- #
-# Nsight streaming ingest twin
-# --------------------------------------------------------------------- #
-def test_stream_nsight_incremental_matches_batch(spark, tmp_path):
-    """CSV reports landing across TWO availableNow runs produce the
-    batch reader's exact event multiset (ids are batch-relative by
-    construction); the static rank table keeps the renumber identical
-    to batch, and the checkpoint ingests each file once."""
-    import shutil
-
-    from pipit_spark.sources.nsight import read_nsight, stream_nsight
-    from tools.synth_nsight import synthesize
-
-    src = tmp_path / "src"
-    synthesize(str(src), 4000, 2)  # two report files
-
-    schema = (
-        "`Name` STRING, `Start (ns)` BIGINT, `End (ns)` BIGINT, "
-        "`PID` BIGINT, `TID` BIGINT"
-    )
-    live = tmp_path / "live"
-    out = tmp_path / "events"
-    ck = tmp_path / "ck"
-    live.mkdir()
-    # rank table from the FULL report set (topology known upfront)
-    rank_source = spark.read.csv(str(src), header=True, schema=schema)
-
-    def catch_up():
-        q = (
-            stream_nsight(spark, str(live), schema, rank_source=rank_source)
-            .writeStream.format("parquet")
-            .option("path", str(out))
-            .option("checkpointLocation", str(ck))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    shutil.copy(src / "report_000.csv", live)
-    catch_up()
-    n_first = spark.read.parquet(str(out)).count()
-    assert n_first == 2 * 2000  # Enter+Leave per interval of file 1
-
-    shutil.copy(src / "report_001.csv", live)
-    catch_up()
-
-    streamed = spark.read.parquet(str(out)).toPandas()
-    batch = read_nsight(spark, str(src), schema=schema).toPandas()
-    assert len(streamed) == len(batch) == 2 * 4000
-    key = ["process", "thread", "timestamp_ns", "name", "event_type"]
-    s = streamed[key].sort_values(key).reset_index(drop=True)
-    b = batch[key].sort_values(key).reset_index(drop=True)
-    assert s.equals(b)
 
 
 # --------------------------------------------------------------------- #

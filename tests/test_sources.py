@@ -470,12 +470,11 @@ def test_truncated_evt_raises_with_file_and_offset(tmp_path):
             f.write(whole)
 
 
-def test_truncated_evt_fails_the_read(spark, write_otf2_archive, tmp_path):
+def test_truncated_evt_fails_the_read(spark, write_otf2_archive):
     """A 150-event location cut at half its bytes fails Trace.from_otf2
-    and the streaming twin with the file and offset in the error,
-    instead of parsing to a prefix of its events."""
+    with the file and offset in the error, instead of parsing to a
+    prefix of its events."""
     from pipit_spark import Trace
-    from pipit_spark.sources.otf2_native import stream_otf2_native
 
     archive = write_otf2_archive([50, 20])
     evt = os.path.join(archive, "traces", "0.evt")
@@ -484,18 +483,6 @@ def test_truncated_evt_fails_the_read(spark, write_otf2_archive, tmp_path):
 
     with pytest.raises(Exception, match=want):
         Trace.from_otf2(spark, archive).events.count()
-
-    q = (
-        stream_otf2_native(spark, archive)
-        .writeStream.format("parquet")
-        .option("path", str(tmp_path / "out"))
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    with pytest.raises(Exception, match=want):
-        q.awaitTermination(120)
-    q.stop()
 
 
 def test_truncated_trace_db_raises_with_file_and_offset(spark, tmp_path):
